@@ -30,22 +30,8 @@ import org.apache.spark.sql.functions.col
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    // RAM-backed scratch for shuffle/spill/broadcast files and streaming
-    // checkpoints (micro-batch commit logs fsync per batch — cheap on
-    // tmpfs, a per-batch disk round-trip otherwise); see TempTrees.scratch
-    val scratch = graft.TempTrees.scratch("graft-spark-scratch")
-    graft.TempTrees.deleteOnExit(scratch)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", scratch.resolve("local").toString)
-      // duplicate template keys fold like a Python dict: last value wins
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM outside the timed region: shuffle machinery, parquet
     // reader and whole-stage codegen compilation are session costs, not

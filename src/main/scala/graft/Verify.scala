@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,20 +11,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String) =
       only.forall(_.exists(p => name.startsWith(p)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // RAM-backed scratch (shuffle/spill + streaming checkpoints), same
-    // rationale as Bench — see TempTrees.scratch
-    val scratch = graft.TempTrees.scratch("graft-spark-scratch")
-    graft.TempTrees.deleteOnExit(scratch)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", scratch.resolve("local").toString)
-      .config("spark.ui.enabled", "false")
-      // duplicate template keys fold like a Python dict: last value wins
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // per-query storage sweep (the Bench hygiene, checkpoints only): a

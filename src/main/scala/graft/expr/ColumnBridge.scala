@@ -450,11 +450,11 @@ case class GramsF(child: Expression, n: Int)
   * ((hx("j:i") mod 2001) − 1000) / 1000 as FLOAT — generated once per
   * (tables, planes, dims) and cached; per plane the projection is the
   * ascending-index FLOAT→DOUBLE dot (the DotProductF sequence), sign
-  * bit j set iff ≥ 0, bucket = sign bits + (table << planes). Values
-  * are bit-identical to the `array(lshBucket(t))` literal-plane
-  * expression tree it replaces (NaN projections sign to 0 both ways —
-  * Java `>= 0` and Spark's GreaterThanOrEqual agree on NaN), while
-  * collapsing a tables×planes-subexpression tree — re-planned and
+  * bit j set iff ≥ 0 or NaN, bucket = sign bits + (table << planes).
+  * Values are bit-identical to the `array(lshBucket(t))` literal-plane
+  * expression tree it replaces (Spark's GreaterThanOrEqual orders NaN
+  * above every number, so a NaN projection sets the bit there too),
+  * while collapsing a tables×planes-subexpression tree — re-planned and
   * re-codegen'd by every consumer query — into one call. */
 object LshBucketUtil {
   private val tl: ThreadLocal[java.security.MessageDigest] =
@@ -495,7 +495,7 @@ object LshBucketUtil {
           s += vec.getFloat(i).toDouble * plane(i).toDouble
           i += 1
         }
-        if (s >= 0) bucket += (1L << j)
+        if (s >= 0 || s.isNaN) bucket += (1L << j)
         j += 1
       }
       out(t) = bucket

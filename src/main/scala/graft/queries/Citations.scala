@@ -2,8 +2,11 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.wcd.{Claims, Extract, ReadQueries}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Oracle-checked end-to-end exercises of the citation pipeline
   * (SURVEY.md §3.1): deterministic wikitext is synthesized from the
@@ -136,158 +139,141 @@ object Citations {
     * line. */
   def warmShared(s: SparkSession, dir: String): Unit = warmSharedTimed(s, dir)
 
-  /** [[warmShared]] with per-table landing seconds, so the bench record
-    * can attribute the warm cost (claims dominates — it replans the
-    * parse pipeline) instead of reporting one opaque number.
+  /** [[warmShared]] with per-landing seconds in a fixed record order, so
+    * a caller can attribute the warm cost instead of reporting one
+    * opaque number.
     *
-    * Build order (round-6): `refs` lands FIRST and ALONE — its landing
-    * time is the bench's box-noise canary, and co-running work would
-    * fold scheduler contention into the one number whose whole job is
-    * to certify the box. The remaining eight landings are mutually
-    * independent (claims' refs dependency is already on disk by then)
-    * and build CONCURRENTLY on six futures — a Spark driver schedules
-    * concurrent jobs fine, and the landings contend only on executor
-    * slots. A production snapshot build runs its index-build DAG the
-    * same way: the critical path is the longest chain, not the sum.
-    * Per-table seconds are wall times INSIDE the parallel region, so
-    * they can overlap — they attribute cost; Bench reports warm_sec as
-    * the wall time around the whole call. */
+    * Build order:
+    *  - `reland` first: the single-row-group raw tables are re-landed
+    *    as multi-file copies, so every later scan splits across cores (a
+    *    parquet scan cannot split inside a row group).
+    *  - `refs` next, alone: claims reads it, and its landing time is the
+    *    box-noise canary, so no co-running work may fold scheduler
+    *    contention into it.
+    *  - the other 17 landings are a dependency-aware task list run by
+    *    [[runWarmTasks]], heaviest ready task first, at most
+    *    [[WarmWorkers]] at once. Three builds in flight fill each other's
+    *    scheduling tails; more only fight over the same task slots.
+    *    Starting the long poles (claims, the dedup-cluster chain, pq and
+    *    kmeans training) first keeps the critical path near Σcost/3.
+    *
+    * A task's cost is its measured serial seconds plus the cost of the
+    * tasks waiting on it. A landing two tasks share is still built once:
+    * landDeriv's computeIfAbsent makes the second caller wait for the
+    * first. Per-landing seconds overlap, so they attribute cost; the wall
+    * time of the whole build is the caller's to measure. */
   def warmSharedTimed(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      body
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    // multi-file re-landing of the single-row-group driver tables runs
-    // FIRST: every later landing (refs included) then scans in
-    // parallel instead of one task per raw file (round-9 finding: a
-    // parquet scan cannot split inside a row group, so the wikitext
-    // parse behind refs ran on ONE core however many the session had)
     val relandPart = timed("reland")(graft.Tables.reland(s, dir,
       s.conf.get("spark.sql.shuffle.partitions").toInt))
     val refsPart = timed("refs")(refs(s, dir))
-    // r16 (VERDICT r15 #1, guide §2.6 "2-3 jobs in flight is plenty"):
-    // the 17 landings were 7 fixed chains on a 6-thread pool — fine on
-    // the quiet builder box (warm ~22-25 s), but 7-way concurrency is
-    // exactly what degraded on the driver's box (warm 32.3 → 74.9 s on
-    // an essentially unchanged table set, canary flat). The chains are
-    // now a dependency-aware task list drained HEAVIEST-FIRST by a
-    // bounded pool (default 3 workers): enough overlap to fill each
-    // build's scheduling tail, never 7 concurrent multi-stage builds
-    // fighting for the same task slots. Priorities are measured serial
-    // costs (LandingBench, r15/r16) plus each task's downstream weight,
-    // so the long poles (claims, the dedup-cluster chain, pq/kmeans
-    // training) start first and the critical path stays ~Σcost/3.
-    // A landing referenced from two tasks is still built exactly once —
-    // landDeriv's computeIfAbsent makes the loser block on the winner.
-    val workers = math.max(1, s.conf.getOption("spark.graft.warmWorkers")
-      .map(_.toInt).getOrElse(3))
-    // (name, deps, priority = own serial cost + downstream cost, build)
-    val tasks: Seq[(String, Seq[String], Double, () => Unit)] = Seq(
-      ("claims", Nil, 6.0, () => { claimsTable(s, dir); () }),
-      ("co_order_edges", Nil, 5.0,
-        () => { Pipelines.partCoOrderEdges(s, dir); () }),
-      ("node_route_coorder", Seq("co_order_edges"), 1.2,
-        () => { Pipelines.coorderRouteCardLanded(s, dir); () }),
-      ("sp_pairs", Nil, 3.1, () => { Pipelines.supplierPartPairs(s, dir); () }),
-      ("node_route_pagerank", Seq("sp_pairs"), 1.3,
-        () => { Pipelines.pagerankRouteCardLanded(s, dir); () }),
-      ("doc_shingles", Nil, 4.3, () => { TrainingData.docShingles(s, dir); () }),
-      ("minhash_sigs", Nil, 4.8,
-        () => { TrainingData.docMinhashSigs(s, dir); () }),
-      ("node_route_cc", Nil, 3.6,
-        () => { TrainingData.ccRouteCardLanded(s, dir); () }),
-      ("dedup_clusters", Seq("doc_shingles", "minhash_sigs", "node_route_cc"),
-        3.5, () => { TrainingData.dedupClusters(s, dir); () }),
-      ("seed_grams", Nil, 4.3, () => { TrainingData.seedGramsLanded(s, dir); () }),
-      ("shared_runs", Seq("seed_grams"), 3.3,
-        () => { TrainingData.sharedRunsLanded(s, dir); () }),
-      ("emb_buckets_neardup", Nil, 0.9, () => { TrainingData.embBuckets(s, dir,
-        TrainingData.NearDupLshTables, TrainingData.NearDupLshPlanes); () }),
-      ("emb_buckets_ann", Nil, 0.7, () => { TrainingData.embBuckets(s, dir,
-        TrainingData.AnnLshTables, TrainingData.AnnLshPlanes); () }),
-      ("kmeans_books", Nil, 3.9, () => { TrainingData.kmeansBooks(s, dir); () }),
-      ("pq_books", Nil, 4.5, () => { TrainingData.pqBooks(s, dir); () }),
-      ("lm_unigrams", Nil, 0.9, () => { TrainingData.lmUnigrams(s, dir); () }),
-      ("lm_bigrams", Nil, 1.2, () => { TrainingData.lmBigrams(s, dir); () }))
-    val parts2 = runWarmTasks(tasks, workers)
-    val parts = Seq(relandPart, refsPart) ++ parts2
-    // canonical record order, independent of completion order
-    val order = Seq("reland", "refs", "claims", "co_order_edges",
-      "node_route_coorder", "sp_pairs", "node_route_pagerank",
-      "doc_shingles", "lm_unigrams", "lm_bigrams", "minhash_sigs",
-      "kmeans_books", "emb_buckets_neardup", "emb_buckets_ann", "pq_books",
-      "node_route_cc", "seed_grams", "shared_runs", "dedup_clusters")
-    order.flatMap(n => parts.find(_._1 == n))
+    // declared in the record order, which runWarmTasks keeps
+    val tasks = Seq(
+      WarmTask("claims", Nil, 6.0, () => claimsTable(s, dir)),
+      WarmTask("co_order_edges", Nil, 5.0, () => Pipelines.partCoOrderEdges(s, dir)),
+      WarmTask("node_route_coorder", Seq("co_order_edges"), 1.2,
+        () => Pipelines.coorderRouteCardLanded(s, dir)),
+      WarmTask("sp_pairs", Nil, 3.1, () => Pipelines.supplierPartPairs(s, dir)),
+      WarmTask("node_route_pagerank", Seq("sp_pairs"), 1.3,
+        () => Pipelines.pagerankRouteCardLanded(s, dir)),
+      WarmTask("doc_shingles", Nil, 4.3, () => TrainingData.docShingles(s, dir)),
+      WarmTask("lm_unigrams", Nil, 0.9, () => TrainingData.lmUnigrams(s, dir)),
+      WarmTask("lm_bigrams", Nil, 1.2, () => TrainingData.lmBigrams(s, dir)),
+      WarmTask("minhash_sigs", Nil, 4.8, () => TrainingData.docMinhashSigs(s, dir)),
+      WarmTask("kmeans_books", Nil, 3.9, () => TrainingData.kmeansBooks(s, dir)),
+      WarmTask("emb_buckets_neardup", Nil, 0.9, () => TrainingData.embBuckets(s, dir,
+        TrainingData.NearDupLshTables, TrainingData.NearDupLshPlanes)),
+      WarmTask("emb_buckets_ann", Nil, 0.7, () => TrainingData.embBuckets(s, dir,
+        TrainingData.AnnLshTables, TrainingData.AnnLshPlanes)),
+      WarmTask("pq_books", Nil, 4.5, () => TrainingData.pqBooks(s, dir)),
+      WarmTask("node_route_cc", Nil, 3.6, () => TrainingData.ccRouteCardLanded(s, dir)),
+      WarmTask("seed_grams", Nil, 4.3, () => TrainingData.seedGramsLanded(s, dir)),
+      WarmTask("shared_runs", Seq("seed_grams"), 3.3,
+        () => TrainingData.sharedRunsLanded(s, dir)),
+      WarmTask("dedup_clusters", Seq("doc_shingles", "minhash_sigs", "node_route_cc"), 3.5,
+        () => TrainingData.dedupClusters(s, dir)))
+    Seq(relandPart, refsPart) ++ runWarmTasks(s.sparkContext, tasks, WarmWorkers)
   }
 
-  /** Bounded-concurrency dependency scheduler for the warm landings:
-    * `workers` threads drain a ready queue ordered by descending
-    * priority; a task becomes ready when every dependency has finished.
-    * On any failure the remaining queue is abandoned and the pool is
-    * interrupted (Spark cancels jobs on interrupt) and DRAINED before
-    * the failure propagates — a failed build must not let the JVM exit
-    * (TempTrees shutdown hooks delete landing dirs) while sibling
-    * landing jobs are still writing (ADVICE r6). */
-  private[graft] def runWarmTasks(
-      tasks: Seq[(String, Seq[String], Double, () => Unit)],
+  /** Warm landings in flight at once; see [[warmSharedTimed]]. */
+  private[graft] val WarmWorkers = 3
+
+  /** How long a failed warm build waits for its cancelled tasks to stop. */
+  private val WarmDrainS = 120L
+
+  /** One warm landing. Ready tasks start in descending `cost`. */
+  private[graft] final case class WarmTask(name: String, deps: Seq[String],
+      cost: Double, build: () => Unit)
+
+  private def timed(name: String)(body: => Unit): (String, Double) = {
+    val t0 = System.nanoTime()
+    body
+    name -> (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Runs each task once, after its dependencies, heaviest ready task
+    * first and at most `workers` at a time; returns each task's seconds
+    * in declaration order. Duplicate names, unknown dependencies and
+    * cycles are rejected before any task starts.
+    *
+    * The calling thread is the only one that touches the schedule: it
+    * submits ready tasks to a fixed pool and takes their completions one
+    * at a time. The pool's threads are created from it, so they inherit
+    * its Spark local properties (a caller's job group among them), and
+    * every task's jobs also carry one job tag for the build. On the first
+    * failure, or an interrupt of the caller, the tagged jobs are
+    * cancelled, the pool is interrupted and drained for at most
+    * [[WarmDrainS]] seconds, and the failure is rethrown: a failed build
+    * must not let the JVM exit (TempTrees' shutdown hooks delete the
+    * landing dirs) while sibling landings are still writing. */
+  private[graft] def runWarmTasks(sc: SparkContext, tasks: Seq[WarmTask],
       workers: Int): Seq[(String, Double)] = {
-    // per-table wall seconds INSIDE the bounded-parallel region — they
-    // attribute cost and can overlap, same contract as before
-    def timed(name: String)(body: () => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      body()
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val lock = new Object
-    val done = scala.collection.mutable.Set[String]()
-    val results = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    var failure: Option[Throwable] = None
-    var pendingOrRunning = tasks.length
-    val waiting = scala.collection.mutable.ArrayBuffer[
-      (String, Seq[String], Double, () => Unit)](tasks: _*)
-    val ready = scala.collection.mutable.PriorityQueue.empty[
-      (Double, String, () => Unit)](
-      Ordering.by[(Double, String, () => Unit), Double](_._1))
-    def promote(): Unit = { // lock held
-      val (now, later) = waiting.partition(_._2.forall(done.contains))
-      waiting.clear(); waiting ++= later
-      now.foreach(t => ready.enqueue((t._3, t._1, t._4)))
-    }
-    lock.synchronized(promote())
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
-    (1 to workers).foreach { _ =>
-      pool.execute(() => {
-        var running = true
-        while (running) {
-          val next = lock.synchronized {
-            if (failure.nonEmpty || pendingOrRunning == 0) { running = false; None }
-            else if (ready.isEmpty) { lock.wait(50); None }
-            else Some(ready.dequeue())
-          }
-          next.foreach { case (_, name, build) =>
-            try {
-              val r = timed(name)(build)
-              lock.synchronized {
-                results += r; done += name; pendingOrRunning -= 1
-                promote(); lock.notifyAll()
-              }
-            } catch { case e: Throwable =>
-              lock.synchronized {
-                if (failure.isEmpty) failure = Some(e)
-                pendingOrRunning -= 1; lock.notifyAll()
-              }
-            }
-          }
+    val dupes = tasks.groupBy(_.name).collect { case (n, ts) if ts.size > 1 => n }
+    require(dupes.isEmpty, s"duplicate warm tasks: ${dupes.mkString(", ")}")
+    val names = tasks.map(_.name).toSet
+    val unknown = for (t <- tasks; d <- t.deps if !names(d)) yield s"${t.name} -> $d"
+    require(unknown.isEmpty, s"unknown warm task dependencies: ${unknown.mkString(", ")}")
+    val dependents = tasks.flatMap(t => t.deps.distinct.map(_ -> t)).groupMap(_._1)(_._2)
+    def unmet() = mutable.Map.from(tasks.map(t => t.name -> t.deps.distinct.size))
+    def release(left: mutable.Map[String, Int], name: String): Seq[WarmTask] =
+      dependents.getOrElse(name, Nil).filter { t => left(t.name) -= 1; left(t.name) == 0 }
+    // dry topological pass: a task that never becomes ready is on or
+    // behind a cycle
+    val dry = unmet()
+    var frontier = tasks.filter(t => dry(t.name) == 0)
+    while (frontier.nonEmpty) frontier = frontier.flatMap(t => release(dry, t.name))
+    val stuck = tasks.map(_.name).filter(dry(_) > 0)
+    require(stuck.isEmpty, s"warm task dependency cycle through: ${stuck.mkString(", ")}")
+
+    val left = unmet()
+    val ready = mutable.PriorityQueue.empty[WarmTask](Ordering.by[WarmTask, Double](_.cost))
+    ready ++= tasks.filter(t => left(t.name) == 0)
+    val seconds = mutable.Map[String, Double]()
+    val tag = s"graft-warm-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(workers)
+    val completions = new ExecutorCompletionService[(String, Double)](pool)
+    var inFlight = 0
+    try {
+      while (ready.nonEmpty || inFlight > 0) {
+        while (inFlight < workers && ready.nonEmpty) {
+          val t = ready.dequeue()
+          completions.submit(() => {
+            sc.addJobTag(tag)
+            try timed(t.name)(t.build()) finally sc.removeJobTag(tag)
+          })
+          inFlight += 1
         }
-      })
-    }
-    pool.shutdown()
-    val failed = lock.synchronized(failure)
-    if (failed.nonEmpty) pool.shutdownNow()
-    pool.awaitTermination(Long.MaxValue >> 32, java.util.concurrent.TimeUnit.SECONDS)
-    lock.synchronized(failure).foreach(throw _)
-    lock.synchronized(results.toSeq)
+        val (name, secs) = completions.take().get()
+        inFlight -= 1
+        seconds(name) = secs
+        ready ++= release(left, name)
+      }
+    } catch { case e: Throwable =>
+      sc.cancelJobsWithTag(tag)
+      pool.shutdownNow()
+      pool.awaitTermination(WarmDrainS, TimeUnit.SECONDS)
+      throw (e match { case x: ExecutionException => x.getCause; case x => x })
+    } finally pool.shutdown()
+    tasks.map(t => t.name -> seconds(t.name))
   }
 
   /** Oracle helper: the per-doc modular helpers as a DuckDB CTE. */

@@ -14,17 +14,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.local.dir", {
-      val scratch = TempTrees.scratch("graft-spark-scratch")
-      TempTrees.deleteOnExit(scratch)
-      scratch.resolve("local").toString
-    })
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // duplicate template keys fold like a Python dict: last value wins
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(4)
 }

@@ -80,7 +80,12 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("lshBuckets native kernel ≡ per-table literal-plane tree, real embeddings (r15)") {
+    // plus one NaN-bearing vector: every projection of it is NaN, which
+    // Spark's >= orders above 0, so each of its sign bits is set
+    val nanVec = Array.tabulate(64)(i => if (i == 5) Float.NaN else 0.5f)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select("vec_id", "embedding")
+      .union(Seq((-1L, nanVec)).toDF("vec_id", "embedding"))
     for ((tables, planes) <- Seq((4, 3), (16, 4), (32, 4))) {
       val declarative = (0 until tables).map(t =>
         VectorOps.lshBucket($"embedding", t, planes))
