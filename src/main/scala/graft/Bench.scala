@@ -1,112 +1,86 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Benchmark main: one JSON line with per-query seconds at
-  * SPARK_GRAFT_SF_DIR (slowest queries, length-budgeted for log-tail
-  * capture; the complete full-precision record lands in
-  * ./BENCH_LOCAL.json). Noise controls: the JVM is warmed first
-  * (codegen/shuffle/parquet machinery), the shared refs/claims caches
-  * are materialized OUTSIDE the per-query timings and reported as
-  * `warm_sec`, and every query runs SPARK_GRAFT_BENCH_ITERS times
-  * (default 2) taking the minimum — a single collection/load spike
-  * can't masquerade as a regression. A failing query is recorded in
-  * `failed` (timing omitted) and flips the exit code, so a regression
-  * can't masquerade as a speedup either.
+/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
+  * prints one JSON contract line (the slowest queries, length-budgeted
+  * for log-tail capture); the full-precision record of every query lands
+  * in ./BENCH_LOCAL.json.
   *
-  * Self-defense on a contended box (the round-5 lesson: refs canary
-  * 3.2x, one scan+aggregate at 80x its quiet time, CPU probes flat):
-  *  - TWO probe families at start/mid/end: a cache-resident scan
-  *    (CPU-sensitive) and a fixed ~100 MB shuffle write+read
-  *    (disk/memory-sensitive — what the heavy queries actually do).
-  *  - After the sweep, queries whose min exceeds 3x their committed
-  *    quiet-box value (BENCH_QUIET.json) or whose median exceeds 2x
-  *    their min are re-run in isolation, probe-gated: inflated-probe
-  *    outliers defer to a second pass with growing backoff, and an
-  *    isolation whose probe never flattens is marked UNADJUDICATED
-  *    with the quiet value beside it — the `isolation` maps make a
-  *    contended run adjudicable query-by-query without git
-  *    archaeology. See BASELINE.md "Reading the record". */
+  * The JVM is warmed first (codegen, shuffle and parquet machinery), and
+  * the shared landings are built outside the per-query timings and
+  * reported as `warm_sec`. Every query then runs SPARK_GRAFT_BENCH_ITERS
+  * times (default 2). Per query the record keeps the wall-time min
+  * (`queries`, summed into `value`), the wall-time median
+  * (`queries_median`) and the min of the process CPU seconds the runs
+  * took (`queries_cpu`, summed with the warm build's into `cpu_sec`).
+  *
+  * Why CPU: a busy box takes wall time from a query (its tasks wait for
+  * a core) but not CPU time, which counts only the work the JVM itself
+  * did. Beside 4 busy-loop processes on a 4-vCPU VM, a 15-query sf0.1
+  * sweep took 1.7-1.8x the wall time of a quiet run but 1.01-1.04x its
+  * CPU time. So a query whose wall min rises while its CPU min stays
+  * flat was slowed by contention; one whose CPU min rises too does more
+  * work, i.e. a plan regression. A fixed shuffle probe, timed at
+  * the start and the end of the sweep, shows whether the box drifted.
+  *
+  * A failing query is recorded in `failed` (timing omitted) and makes
+  * the exit code non-zero, so a regression can't pass as a speedup. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
+    val os = ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    def cpuSec(): Double = os.getProcessCpuTime / 1e9
     // warm the JVM outside the timed region: shuffle machinery, parquet
     // reader and whole-stage codegen compilation are session costs, not
     // query costs
     spark.range(100000).selectExpr("id % 7 AS k", "id AS v")
       .groupBy("k").sum("v").count()
     spark.read.parquet(s"$sfDir/nation.parquet").count()
-    // shared fact-table materialization (refs + claims caches): its own
-    // line, not charged to whichever query alphabetically runs first —
-    // and split per table, so a landing regression is attributable.
-    // warm_sec is the WALL time of the whole build: refs lands alone
-    // (clean canary), the rest build concurrently, so warm_tables
-    // entries overlap and can sum to more than warm_sec.
+    // shared landings, split per table so a landing regression is
+    // attributable; the build runs several landings at once, so the
+    // warm_tables entries overlap and can sum to more than warm_sec
     val warmT0 = System.nanoTime()
+    val warmC0 = cpuSec()
     val warmParts = graft.queries.Citations.warmSharedTimed(spark, sfDir)
     val warmSec = (System.nanoTime() - warmT0) / 1e9
+    val warmCpu = cpuSec() - warmC0
 
-    // storage hygiene across the 127-query sweep: a query's surviving
-    // localCheckpoint blocks (the FINAL rounds of its iterative
-    // operators — the loops release superseded rounds themselves) are
-    // dead once the run finishes: every run replans from scratch and the
-    // shared landings are parquet files. Sweep ONLY those. Dataset
-    // .cache()s are left alone — their CacheManager entries stay
-    // registered session-wide, and killing the blocks underneath a live
-    // entry forces every later plan that matches it through a dead
-    // InMemoryRelation rebuild (measured: t40 0.5 s → 15.8 s, whole
-    // sweep +38 s); intact caches are LRU-evictable, checkpoint blocks
-    // are not recomputable and linger until swept.
+    // a query's surviving localCheckpoint blocks (the final rounds of
+    // its iterative operators) are dead once it finishes: every run
+    // replans and the shared landings are parquet files. Sweep ONLY
+    // those, blocking and outside the timed window. Dataset .cache()s
+    // stay: their CacheManager entries are session-wide, and killing
+    // their blocks forces every later matching plan through a rebuild
+    // (measured: t40 0.5 s → 15.8 s); intact caches are LRU-evictable.
     val warmRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val sweepOn = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "1") != "0"
-    // blocking: the sweep runs OUTSIDE the timed region (after the
-    // elapsed capture), and async removals would otherwise compete with
-    // the next timed iteration's execution
-    def sweepQueryRdds(): Unit = if (sweepOn)
+    def sweepQueryRdds(): Unit =
       spark.sparkContext.getPersistentRDDs.foreach { case (rddId, rdd) =>
         if (!warmRdds.contains(rddId) && rdd.isCheckpointed)
           rdd.unpersist(blocking = true)
       }
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
+    /** One run: (wall, process CPU) seconds, or the failure's first line. */
+    def once(fn: (SparkSession, String) => DataFrame): Either[String, (Double, Double)] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      val c0 = cpuSec()
+      try { fn(spark, sfDir).count(); Right(((System.nanoTime() - t0) / 1e9, cpuSec() - c0)) }
       catch { case e: Throwable =>
         Left(e.toString.linesIterator.nextOption().getOrElse(e.getClass.getName))
       }
       finally sweepQueryRdds()
     }
 
-    // deterministic name order: per-query timings comparable across runs.
-    // Keep min AND median: min filters one-off load spikes, the median
-    // makes a systematically-noisy query visible (a 2× min/median gap is
-    // box noise, not a regression — the round-3 93 s vs 131 s lesson).
-    // SPARK_GRAFT_BENCH_ONLY (comma-separated name prefixes) narrows the
-    // sweep for dev A/B runs; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // load-drift probes: the SAME fixed work timed at the start, midpoint
-    // and end of the sweep. TWO families, because they certify different
-    // resources — the round-5 record proved a cache-resident scan probe
-    // stays flat (0.26 s) while disk/memory contention inflates heavy
-    // shuffle queries 10–80x:
-    //  - scanProbe: parquet scan + tiny agg; CPU/scheduler-sensitive.
-    //  - shuffleProbe: a fixed ~100 MB repartition write+read of
-    //    incompressible hashes; hits the same shuffle-spill path the
-    //    heavy queries do, so I/O contention is visible IN the record.
-    def scanProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .selectExpr("count(distinct l_suppkey)").count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // a fixed ~100 MB repartition of incompressible hashes, written and
+    // read back: the shuffle path the heavy queries use
     def shuffleProbe(): Double = {
       val t0 = System.nanoTime()
-      // columns are hash()es: incompressible, so the shuffle file size
-      // is stable (~100 MB) regardless of codec; the post-shuffle agg
-      // reads every row back. Fixed size — comparable across runs.
       spark.range(6000000L)
         .selectExpr("hash(id) AS k", "hash(id * 31 + 7) AS a", "hash(id * 131 + 3) AS b")
         .repartition(col("k"))
@@ -114,221 +88,65 @@ object Bench {
         .count()
       (System.nanoTime() - t0) / 1e9
     }
-    val probeStart = scanProbe()
-    val shufStart = shuffleProbe()
+
+    // deterministic name order, so per-query timings compare across
+    // runs. SPARK_GRAFT_BENCH_ONLY (comma-separated name prefixes)
+    // narrows the sweep for dev A/B runs.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val toRun = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-    // mid probes only exist when there IS a mid-sweep (>=2 queries):
-    // with a narrowed 0/1-query run they are emitted as null, never a
-    // synthetic copy of the start value (ADVICE r5)
-    var probeMid: Option[Double] = None
-    var shufMid: Option[Double] = None
-    val results = toRun.zipWithIndex.map { case ((name, fn), i) =>
-      if (toRun.length >= 2 && i == toRun.length / 2) {
-        probeMid = Some(scanProbe()); shufMid = Some(shuffleProbe())
-      }
+    val shufStart = shuffleProbe()
+    val results = toRun.map { case (name, fn) =>
       val runs = (1 to iters).map(_ => once(fn))
-      val times = runs.collect { case Right(t) => t }.sorted
-      name -> (if (times.nonEmpty) Right((times.min, times(times.length / 2)))
+      val ok = runs.collect { case Right(r) => r }
+      val walls = ok.map(_._1).sorted
+      name -> (if (ok.nonEmpty) Right((walls.head, walls(walls.length / 2), ok.map(_._2).min))
                else Left(runs.collectFirst { case Left(e) => e }.getOrElse("?")))
     }
-    val probeEnd = scanProbe()
     val shufEnd = shuffleProbe()
 
-    // ---- isolation re-runs: make a contended record self-defending ----
-    // Outlier = sweep min > 3x the committed quiet-box min for the same
-    // query (BENCH_QUIET.json — a curated quiet-run BENCH_LOCAL, updated
-    // only from verified-quiet boxes), OR median > 2x min (systematic
-    // mid-sweep noise). Each outlier re-runs alone, after the sweep,
-    // behind the probe gate below: if the isolated time returns to
-    // quiet level the sweep number was contention; if it stays high
-    // UNDER A FLAT PROBE it's a plan regression.
-    val quietRef: Map[String, Double] = try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_QUIET_REF", "BENCH_QUIET.json"))
-      if (java.nio.file.Files.exists(p)) {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(java.nio.file.Files.readAllBytes(p))
-        val qs = node.get("queries")
-        if (qs == null) Map.empty[String, Double] else {
-          val b = Map.newBuilder[String, Double]
-          val it = qs.properties().iterator()
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      } else Map.empty[String, Double]
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] quiet reference not readable: $e")
-      Map.empty[String, Double]
-    }
-    // 16 (was 10): the round-8 quiet record's cap filled with c-query
-    // quiet-ratio outliers and g1_closure — the suite's largest sweep
-    // number, median/min 2.1x — never got an isolation entry, which cost
-    // a round of misattribution (VERDICT r8 called it the most expensive
-    // query; isolated it runs 1.6 s, not 6.2 s)
-    val isoCap = sys.env.getOrElse("SPARK_GRAFT_ISO_CAP", "16").toInt
-    val fnByName = toRun.toMap
-    val outliers = results.collect { case (n, Right((mn, md)))
-        if (mn >= 0.5 && quietRef.get(n).exists(q => q >= 0.05 && mn > 3 * q)) ||
-           (mn >= 0.5 && md > 2 * mn) =>
-      // severity = max(quiet ratio, median/min ratio): BOTH trigger
-      // conditions contribute, so under a tight ISO_CAP a genuinely
-      // noisy query (md>2x min, quiet ratio ~1) still outranks a mild
-      // quiet-ratio outlier (ADVICE r6)
-      n -> math.max(
-        quietRef.get(n).filter(_ >= 0.05).map(q => mn / q).getOrElse(0.0),
-        md / mn)
-    }.sortBy(-_._2).take(isoCap).map(_._1)
-    // each outlier runs TWICE in isolation, min kept: an outlier whose
-    // Dataset cache got LRU-evicted mid-sweep pays a one-off dead-cache
-    // rebuild on its first post-sweep run (measured 0.66 s → 13 s on
-    // t40) — a single isolated run would report that rebuild as "still
-    // slow ⇒ regression". Run 2 reads the rebuilt cache and gives the
-    // number the verdict needs.
-    //
-    // Probe gate (the r11 lesson: the sweep recorded t79 at 33.4 s and
-    // its OWN isolation pass still said 5.07 s, because the box was
-    // still contended when the isolation ran — the true quiet value is
-    // 0.62 s): before each isolated re-run, time the flat scan probe.
-    // Escalation (the r12 lesson: 4 isolation entries still ran under
-    // inflated probes and needed a judge re-run — contention windows
-    // outlast a single 3 s backoff): an outlier whose probe is inflated
-    // is NOT run now; it is DEFERRED to a second pass at the END of
-    // isolation, where it re-probes up to 3 times with growing backoff
-    // (3 s/6 s/12 s between probes). If the probe never flattens the
-    // query still runs, but the entry is marked UNADJUDICATED and the
-    // committed quiet value is printed beside it in the contract line —
-    // the record itself says "this number is contention, compare quiet"
-    // instead of needing out-of-band adjudication. The (final) probe is
-    // recorded beside every isolated value (`isolation_probe`): flat
-    // probe ⇒ plan regression, inflated probe ⇒ unadjudicated.
-    val probeBaseline = math.max(0.05, Seq(probeStart, probeEnd).min)
-    def probeFlat(p: Double): Boolean = p <= 2 * probeBaseline
-    // Warm-state pre-touch before EVERY isolation (the r13 s28 lesson,
-    // confirmed on a batch query in r14: the curated r13 sweep recorded
-    // s28's isolation at 18.4 s under a FLAT probe where the true idle
-    // value is 2.2 s, and an r14 intermediate sweep did the same to
-    // t79 — 12.5 s flat-probe isolation vs 0.80 s alone. A post-sweep
-    // isolated query can pay a dead-cache/grown-state rebuild the scan
-    // probe cannot see, and under session memory pressure BOTH timed
-    // runs pay it, so the min-of-2 defense fails — for streaming state
-    // AND for big Dataset caches alike. One UNTIMED pre-touch before
-    // the two timed runs absorbs the rebuild; cost is bounded by the
-    // ISO_CAP and the record carries the marker (`isolation_prewarmed`
-    // — since r14 every isolated entry) so a reader knows these are
-    // post-warm steady-state numbers, not first-touch rebuilds.
-    val prewarmed = scala.collection.mutable.ArrayBuffer[String]()
-    // The probe is taken TWICE per isolation (ADVICE r14): once before
-    // the prewarm (the deferral gate above) and once after it, because
-    // the prewarm is itself a full query run that can evict caches or
-    // trigger GC and re-contend the box between the gate and the two
-    // timed runs. The recorded `isolation_probe` is the POST-prewarm
-    // value — the one that actually attests the state the timed runs
-    // saw — and adjudication requires BOTH probes flat; the pre value
-    // rides beside it (`isolation_probe_pre`) so a reader can see which
-    // side of the prewarm any contention arrived on.
-    def isoRun(n: String, probePre: Double, adjudicatedPre: Boolean) = {
-      prewarmed += n; once(fnByName(n))
-      val probePost = scanProbe()
-      val runs = (1 to 2).map(_ => once(fnByName(n)).fold(_ => -1.0, identity))
-      (n,
-       if (runs.exists(_ >= 0)) runs.filter(_ >= 0).min else -1.0,
-       probePre, probePost, adjudicatedPre && probeFlat(probePost))
-    }
-    val deferred = scala.collection.mutable.ArrayBuffer[String]()
-    val pass1 = outliers.flatMap { n =>
-      val p = scanProbe()
-      if (probeFlat(p)) Some(isoRun(n, p, adjudicatedPre = true))
-      else { deferred += n; None }
-    }
-    val pass2 = deferred.toSeq.map { n =>
-      var p = scanProbe()
-      var attempt = 0
-      while (!probeFlat(p) && attempt < 3) {
-        Thread.sleep(3000L << attempt) // 3 s, 6 s, 12 s
-        p = scanProbe()
-        attempt += 1
-      }
-      isoRun(n, p, adjudicatedPre = probeFlat(p))
-    }
-    val isolation = pass1 ++ pass2
-
-    val ok = results.collect { case (n, Right((mn, _))) => n -> mn }
-    val med = results.collect { case (n, Right((_, md))) => n -> md }
+    val ok = results.collect { case (n, Right((mn, _, _))) => n -> mn }
+    val med = results.collect { case (n, Right((_, md, _))) => n -> md }
+    val cpu = results.collect { case (n, Right((_, _, c))) => n -> c }
     val failed = results.collect { case (n, Left(e)) => n -> e }
+    val total = warmSec + ok.map(_._2).sum
+    val cpuTotal = warmCpu + cpu.map(_._2).sum
     // Locale.ROOT: a comma-decimal default locale would break the JSON
     def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    def optMs(v: Option[Double]): String = v.map(ms).getOrElse("null")
-    // failure reasons share the metric line's budget: clip each, and cap
-    // the MAP too — a dozen failures must not push total/warm_sec out of
-    // the captured log tail; the full map is in BENCH_LOCAL.json
-    val failedShown = failed.take(8)
-    val fs = failedShown.map { case (k, e) => s"\"" + k + "\":" + JsonText.quote(e.take(80)) }
-      .mkString("{", ",", "}") +
-      (if (failed.length > failedShown.length)
-         s""","failed_omitted":${failed.length - failedShown.length}""" else "")
-    val total = warmSec + ok.map(_._2).sum
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => JsonText.quote(k) + ":" + v }.mkString("{", ",", "}")
+    def nums(kvs: Seq[(String, Double)]): String = obj(kvs.map { case (k, v) => k -> v.toString })
+    def write(file: String, line: String): Unit =
+      try Files.write(Paths.get(file), (line + "\n").getBytes("UTF-8"))
+      catch { case e: Exception => System.err.println(s"[bench] $file not written: $e") }
 
-    // full-precision record, every query: goes to a repo file (the log
-    // capture below keeps only a ~2000-char tail, far too small for it).
-    // Best-effort — the printed contract line must survive a write failure.
-    val fullQs = ok.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val fullMed = med.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val fullWarm = warmParts.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val fullFs = failed.map { case (k, e) => s"\"" + k + "\":" + JsonText.quote(e) }
-      .mkString("{", ",", "}")
-    val fullIso = isolation.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val fullIsoProbe = isolation.map { case (k, _, _, p, _) => s"\"" + k + "\":" + p }.mkString("{", ",", "}")
-    val fullIsoProbePre = isolation.map { case (k, _, p, _, _) => s"\"" + k + "\":" + p }.mkString("{", ",", "}")
-    // unadjudicated isolations carry the committed quiet value (null if
-    // none): the in-record "compare quiet" marker
-    def quietOrNull(k: String) = quietRef.get(k).map(_.toString).getOrElse("null")
-    val unadj = isolation.collect { case (k, _, _, _, false) => k }
-    val fullUnadj = unadj.map(k => s"\"" + k + "\":" + quietOrNull(k))
-      .mkString("{", ",", "}")
-    val probeJson =
-      s""""probe_start_mid_end":[$probeStart,${probeMid.getOrElse("null")},$probeEnd],""" +
-      s""""shuffle_probe_start_mid_end":[$shufStart,${shufMid.getOrElse("null")},$shufEnd]"""
+    // full-precision record of every query. Best-effort: the printed
+    // contract line must survive a write failure. SPARK_GRAFT_RECORD_FILE
+    // lands the same record under a second, stable name, because
+    // BENCH_LOCAL.json is overwritten by every run.
     val full = s"""{"metric":"total","value":$total,"unit":"sec","warm_sec":$warmSec,""" +
-      s""""warm_tables":$fullWarm,"iterations":$iters,""" +
-      s"""$probeJson,"isolation":$fullIso,"isolation_probe":$fullIsoProbe,""" +
-      s""""isolation_probe_pre":$fullIsoProbePre,""" +
-      s""""isolation_prewarmed":${prewarmed.map(n => s"\"" + n + "\"").mkString("[", ",", "]")},""" +
-      s""""isolation_unadjudicated_quiet":$fullUnadj,"queries":$fullQs,""" +
-      s""""queries_median":$fullMed,"failed":$fullFs,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] BENCH_LOCAL.json not written: $e")
-    }
-    // round-evidence stability (VERDICT r12 #6): BENCH_LOCAL.json is
-    // overwritten by every run — including the driver's, which erased
-    // the r12 quiet evidence COVERAGE.md cited. A curated sweep sets
-    // SPARK_GRAFT_RECORD_FILE (e.g. BENCH_SWEEP_r13.json) to land the
-    // same full-precision record at an immutable round-stamped name.
-    sys.env.get("SPARK_GRAFT_RECORD_FILE").foreach { f =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(f),
-        (full + "\n").getBytes("UTF-8"))
-      catch { case e: Exception =>
-        System.err.println(s"[bench] $f not written: $e")
-      }
-    }
+      s""""warm_cpu_sec":$warmCpu,"cpu_sec":$cpuTotal,"warm_tables":${nums(warmParts)},""" +
+      s""""iterations":$iters,"shuffle_probe":[$shufStart,$shufEnd],"queries":${nums(ok)},""" +
+      s""""queries_median":${nums(med)},"queries_cpu":${nums(cpu)},""" +
+      s""""failed":${obj(failed.map { case (k, e) => k -> JsonText.quote(e) })},"sf":"$sfDir"}"""
+    write("BENCH_LOCAL.json", full)
+    sys.env.get("SPARK_GRAFT_RECORD_FILE").foreach(write(_, full))
 
     spark.stop() // stop FIRST: shutdown warnings must not trail the metric line
 
     // contract line, printed last: the harness parses the final ~2000
-    // output chars, so the complete line + sbt's closing "[success]" line
-    // must fit there. Budgeted: slowest queries first, stop before the
-    // cap, with the suffix (failed + isolation maps included)
-    // pre-charged; the "queries_omitted" count records the (fast)
-    // remainder — full set in BENCH_LOCAL.json.
+    // output chars, so the complete line plus sbt's closing "[success]"
+    // line must fit there. Slowest queries first, stopping before the
+    // budget with the suffix pre-charged; `queries_omitted` counts the
+    // (fast) remainder. Failure reasons share the budget: each is
+    // clipped and at most 8 are shown.
     val budget = 1500
-    // round-record visibility (judge asks, r4): the MEDIAN total makes a
-    // min-of-N-hidden first-run cost visible in BENCH_r*.json without
-    // reading BENCH_LOCAL (worst offender named), and the refs landing —
-    // unchanged code over fixed data — is the run's box-noise canary:
-    // divide cross-round per-query deltas by its ratio before calling a
-    // regression (see BASELINE.md "Comparing rounds").
+    val failedShown = failed.take(8)
+    val fs = obj(failedShown.map { case (k, e) => k -> JsonText.quote(e.take(80)) }) +
+      (if (failed.length > failedShown.length)
+         s""","failed_omitted":${failed.length - failedShown.length}""" else "")
+    // the median total shows a first-run cost the min hides, and the
+    // query with the worst median/min ratio (min >= 0.5 s) names it
     val medianTotal = warmSec + med.map(_._2).sum
     val minByName = ok.toMap
     val worstMinMed = med
@@ -336,45 +154,20 @@ object Bench {
       .sortBy(-_._2).headOption
       .map { case (n, r) => s""""worst_min_median":"$n:${ms(r)}",""" }
       .getOrElse("")
-    val refsCanary = warmParts.collectFirst { case ("refs", v) => v }.getOrElse(0.0)
-    val probes = s"[${ms(probeStart)},${optMs(probeMid)},${ms(probeEnd)}]"
-    val shufProbes = s"[${ms(shufStart)},${optMs(shufMid)},${ms(shufEnd)}]"
-    val isoTail = isolation.take(isoCap)
-      .map { case (k, v, _, _, _) => s"\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
-    val isoProbeTail = isolation.take(isoCap)
-      .map { case (k, _, _, p, _) => s"\"" + k + "\":" + ms(p) }.mkString("{", ",", "}")
-    // contract-line marker for never-flattened isolations: the quiet
-    // value sits beside the contended number, so the tail alone reads
-    // "unadjudicated — compare quiet"
-    val unadjTail =
-      if (unadj.isEmpty) ""
-      else s""""isolation_unadjudicated_quiet":""" +
-        unadj.map(k => s"\"" + k + "\":" + quietOrNull(k)).mkString("{", ",", "},")
     val header = s"""{"metric":"total","value":${ms(total)},"unit":"sec","warm_sec":${ms(warmSec)},""" +
-      s""""median_total":${ms(medianTotal)},$worstMinMed"noise_refs_sec":${ms(refsCanary)},""" +
-      s""""probe_start_mid_end":$probes,"shuffle_probe":$shufProbes,""" +
-      s""""isolation":$isoTail,"isolation_probe":$isoProbeTail,$unadjTail"queries":{"""
+      s""""cpu_sec":${ms(cpuTotal)},"median_total":${ms(medianTotal)},$worstMinMed""" +
+      s""""shuffle_probe":[${ms(shufStart)},${ms(shufEnd)}],"queries":{"""
     def suffix(omitted: Int) =
       s"""},"queries_omitted":$omitted,"failed":$fs,"sf":"$sfDir"}"""
     val entries = ok.sortBy(-_._2).map { case (k, v) => s"\"" + k + "\":" + ms(v) }
     var used = header.length + suffix(entries.length).length
     val kept = entries.takeWhile { e => used += e.length + 1; used <= budget }
-    val omitted = entries.length - kept.length
-    val tailLine = header + kept.mkString(",") + suffix(omitted)
-    // the r07/r08 driver records carried "parsed": null because sbt's
-    // log prefix fused with the metric line; land the EXACT printed
-    // line as a bare single-line file too, so the official record is
-    // machine-readable regardless of how the stdout tail is captured
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_TAIL.json"),
-      (tailLine + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] BENCH_TAIL.json not written: $e")
-    }
-    // print the contract line on BOTH streams and flush explicitly: the
-    // r07/r08/r10 driver records parsed null because the tail it read
-    // interleaved sbt-prefixed stderr with the stdout line; whichever
-    // stream the driver captures last now ends with a bare JSON line
-    // (log4j is already quiet by this point — spark.stop() ran above)
+    val tailLine = header + kept.mkString(",") + suffix(entries.length - kept.length)
+    // the exact printed line also lands as a bare single-line file, so
+    // the record parses even when sbt's log prefix fuses with stdout
+    write("BENCH_TAIL.json", tailLine)
+    // both streams, flushed: whichever the harness captures last ends
+    // with a bare JSON line
     println(tailLine)
     System.out.flush()
     System.err.println(tailLine)

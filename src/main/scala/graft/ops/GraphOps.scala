@@ -136,6 +136,13 @@ object GraphOps {
     * and each iteration costs exactly one partial-final aggregate
     * shuffle on `dst`. (Billions of nodes would flip those joins to
     * shuffles on `src` — same plan minus the hints.)
+    *
+    * @param symmetricEdges the caller's assertion that every edge is
+    *   present in both directions; the node set is then taken from the
+    *   source keys alone. It is not checked: if the assertion is wrong,
+    *   pure-sink (dst-only) nodes are silently missing from the rank
+    *   table, with no error or warning. Pass `true` only for an edge
+    *   relation symmetric by construction (g2 builds base ∪ reversed).
     */
   def pageRankFixedPoint(edges: DataFrame, iters: Int = 2,
       broadcastNodes: Boolean = true, materializeEdges: Boolean = true,

@@ -46,11 +46,13 @@ object StreamOps {
 
   private def stagedDir(sfDir: String, table: String): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
-    stageDirs.computeIfAbsent(s"$sfDir/$table", _ => {
+    // absolute: a relative link target resolves against the link's own
+    // (scratch) directory, so a relative sfDir would leave it dangling
+    val target = Paths.get(s"$sfDir/$table.parquet").toAbsolutePath.normalize
+    stageDirs.computeIfAbsent(target.toString, _ => {
       val stage = graft.TempTrees.scratch("graft-stream-src")
       graft.TempTrees.deleteOnExit(stage)
-      Files.createSymbolicLink(stage.resolve(s"$table.parquet"),
-        Paths.get(s"$sfDir/$table.parquet"))
+      Files.createSymbolicLink(stage.resolve(s"$table.parquet"), target)
       stage
     })
   }

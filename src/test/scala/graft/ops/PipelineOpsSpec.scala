@@ -176,6 +176,23 @@ class PipelineOpsSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("streaming sources read a data dir given relative to the working directory") {
+    // the file sources stage a symlink to the table in a scratch dir; a
+    // relative link target would resolve against that dir and dangle
+    val abs = java.nio.file.Paths.get("/root/testdata/sf0.001")
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs).toString
+    assert(!rel.startsWith("/"), rel)
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "qualityMonitor" -> StreamOps.qualityMonitor, "windowedCounts" -> StreamOps.windowedCounts)
+    for ((name, q) <- queries) {
+      def rows(dir: String) = q(spark, dir).collect().map(_.toString).sorted.toSeq
+      val fromRel = rows(rel)
+      assert(fromRel.nonEmpty, s"$name from $rel")
+      assert(fromRel == rows(abs.toString), name)
+    }
+  }
+
   test("s16: streamed CMS cells are bit-identical to the batch sketch") {
     val dir = "/root/testdata/sf0.001"
     val tc = graft.queries.TrainingData.cmsVocab(spark, dir)

@@ -1,59 +1,29 @@
 #!/usr/bin/env python3
-"""Canary-normalized bench comparison (the BASELINE.md "Comparing
-rounds" recipe as a tool): given two BENCH_LOCAL-style JSON records,
-scale the old run's per-query seconds by the refs-landing ratio (the
-box-noise canary — unchanged code over fixed data) and report only the
-queries whose NEW min exceeds the normalized OLD min by more than the
-threshold factor. Medians ride along so an iter-1-only spike (median
-moves, min doesn't) is distinguishable from a real regression.
+"""Compare two BENCH_LOCAL-style bench records query by query.
+
+Reports the queries whose NEW wall-time min exceeds the OLD min by more
+than the threshold factor (and is over 0.5 s). When both records carry
+`queries_cpu` (the per-query min of process CPU seconds), each flagged
+query is marked by whether its CPU min rose too: wall and CPU up means
+the query does more work (likely a real regression); wall up with CPU
+flat means the box was contended. Medians ride along so a first-run
+spike (median moves, min doesn't) stays visible.
 
 Usage: python3 tools/compare_bench.py OLD.json NEW.json [threshold=1.5]
 NOT part of the shipped library (driver-side python only).
 """
 import json, sys
 
+# a CPU min counts as "up" above this ratio. Per-query CPU mins (min of
+# 2 runs) differed by up to 1.3x between two quiet runs, and by at most
+# 1.26x beside 4 busy processes, which moved wall mins 1.1-2.2x (sf0.1,
+# 4-vCPU VM).
+CPU_UP = 1.5
+
 old = json.load(open(sys.argv[1]))
 new = json.load(open(sys.argv[2]))
 thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
 
-# refs canary may be absent (round-wrapper BENCH_r0N.json records) or
-# zero: degrade to an un-normalized comparison instead of a traceback
-refs_old = old.get("warm_tables", {}).get("refs", 0.0)
-refs_new = new.get("warm_tables", {}).get("refs", 0.0)
-if refs_old > 0 and refs_new > 0:
-    canary = refs_new / refs_old
-    print(f"canary (refs landing) ratio new/old: {canary:.2f} "
-          f"({refs_old:.1f}s -> {refs_new:.1f}s)")
-else:
-    canary = 1.0
-    print("WARNING: refs canary absent or zero in one record "
-          f"(old={refs_old}, new={refs_new}); comparison is UN-normalized")
-for tag, rec in (("old", old), ("new", new)):
-    # mid slot is null when the sweep was narrowed below 2 queries;
-    # drift is computed over the probes that actually ran
-    for key, label in (("probe_start_mid_end", "scan probes"),
-                       ("shuffle_probe_start_mid_end", "shuffle probes")):
-        p = rec.get(key)
-        if p:
-            ran = [x for x in p if x is not None]
-            drift = max(ran) / ran[0] if ran and ran[0] else float("inf")
-            note = " <- mid-sweep load drift" if drift > 1.5 else ""
-            print(f"{tag} sweep {label} start/mid/end: "
-                  + "/".join("null" if x is None else f"{x:.2f}s" for x in p)
-                  + note)
-    iso = rec.get("isolation")
-    if iso:
-        # isolation_probe (r12+): the flat scan-probe timed immediately
-        # before each isolated re-run — inflated probe means the
-        # isolation itself was contended, not the query.
-        iso_probe = rec.get("isolation_probe", {})
-        def fmt_iso(k, v):
-            s = f"{k}={v:.2f}s" if v >= 0 else f"{k}=FAILED"
-            if k in iso_probe:
-                s += f"(probe {iso_probe[k]:.2f}s)"
-            return s
-        print(f"{tag} isolation re-runs (outliers, alone, post-sweep): "
-              + ", ".join(fmt_iso(k, v) for k, v in iso.items()))
 if "queries" not in old or "queries" not in new:
     sys.exit("ERROR: record without a 'queries' map (a BENCH_r0N.json "
              "round wrapper holds only a log tail — use BENCH_LOCAL-style "
@@ -61,32 +31,36 @@ if "queries" not in old or "queries" not in new:
 qo, qn = old["queries"], new["queries"]
 mo = old.get("queries_median", {})
 mn = new.get("queries_median", {})
+co, cn = old.get("queries_cpu"), new.get("queries_cpu")
+if co is None or cn is None:
+    print("WARNING: queries_cpu absent in one record "
+          f"(old={co is not None}, new={cn is not None}); "
+          "comparison is wall-only")
 
 shared = sorted(set(qo) & set(qn))
 print(f"{len(shared)} shared queries; new-only: "
       f"{sorted(set(qn) - set(qo)) or '-'}; dropped: "
       f"{sorted(set(qo) - set(qn)) or '-'}")
 
-flagged = []
-for k in shared:
-    norm_old = qo[k] * canary
-    if qn[k] > thr * norm_old and qn[k] > 0.5:
-        flagged.append((k, qo[k], norm_old, qn[k], mo.get(k, 0), mn.get(k, 0)))
+flagged = sorted((k for k in shared if qn[k] > thr * qo[k] and qn[k] > 0.5),
+                 key=lambda k: -qn[k] / qo[k])
 if not flagged:
-    print(f"no query exceeds {thr}x its canary-normalized old min")
+    print(f"no query exceeds {thr}x its old min")
 else:
-    flagged.sort(key=lambda r: -(r[3] / r[2]))
-    print(f"{'query':28s} {'old':>6s} {'old*c':>6s} {'new':>6s} "
-          f"{'oldmed':>7s} {'newmed':>7s}  note")
-    iso_new = new.get("isolation", {})
-    for k, o, no_, n, om, nm in flagged:
-        note = "median too -> likely real" if nm > thr * om * canary and om \
-            else "min only -> check iter-1/noise"
-        if k in iso_new and iso_new[k] >= 0:
-            verdict = "contention" if iso_new[k] <= thr * no_ else "STILL SLOW"
-            note += f"; isolated {iso_new[k]:.2f}s -> {verdict}"
-        print(f"{k:28s} {o:6.2f} {no_:6.2f} {n:6.2f} {om:7.2f} {nm:7.2f}  {note}")
+    print(f"{'query':28s} {'old':>6s} {'new':>6s} {'oldmed':>7s} "
+          f"{'newmed':>7s} {'oldcpu':>7s} {'newcpu':>7s}  note")
+    for k in flagged:
+        note, cpus = "", ("", "")
+        if co is not None and cn is not None and k in co and k in cn:
+            cpus = (f"{co[k]:.2f}", f"{cn[k]:.2f}")
+            note = ("wall and CPU up -> likely real" if cn[k] > CPU_UP * co[k]
+                    else "wall only -> contention")
+        print(f"{k:28s} {qo[k]:6.2f} {qn[k]:6.2f} {mo.get(k, 0):7.2f} "
+              f"{mn.get(k, 0):7.2f} {cpus[0]:>7s} {cpus[1]:>7s}  {note}")
 
-tot_o, tot_n = old["value"] * canary, new["value"]
-print(f"total: old*canary {tot_o:.1f}s vs new {tot_n:.1f}s "
-      f"({tot_n / tot_o:.2f}x, shared-surface only meaningful when query sets match)")
+print(f"total: old {old['value']:.1f}s vs new {new['value']:.1f}s "
+      f"({new['value'] / old['value']:.2f}x, shared-surface only meaningful "
+      "when query sets match)")
+if "cpu_sec" in old and "cpu_sec" in new:
+    print(f"cpu: old {old['cpu_sec']:.1f}s vs new {new['cpu_sec']:.1f}s "
+          f"({new['cpu_sec'] / old['cpu_sec']:.2f}x)")
