@@ -10,7 +10,6 @@ object Session {
     * [[TempTrees.scratch]]), removed at JVM exit. */
   def local(cpus: Int): SparkSession = {
     val scratch = TempTrees.scratch("graft-spark-scratch")
-    TempTrees.deleteOnExit(scratch)
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

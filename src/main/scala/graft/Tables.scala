@@ -42,11 +42,14 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"),
     "orders" -> Seq("o_orderdate"))
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val landed = relanded.get(s"$sfDir/$name")
-    if (landed != null) spark.read.parquet(landed) // landed pre-normalized
-    else rawLoad(spark, sfDir, name)
-  }
+  /** A re-landed copy once [[reland]] has finished it (landed
+    * pre-normalized), else the raw file: a read that overlaps an
+    * in-flight re-land does not wait for it. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    relanded.done(s"$sfDir/$name.parquet") match {
+      case Some(landed) => spark.read.parquet(landed)
+      case None => rawLoad(spark, sfDir, name)
+    }
 
   private def rawLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // nanos-as-long must be set BEFORE the read so a nanos footer
@@ -56,8 +59,7 @@ object Tables {
     timestampCols.getOrElse(name, Nil).foldLeft(df)(normalizeTsCol)
   }
 
-  private val relanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val relanded = new Landing.Memo[String]
 
   /** Raw tables worth re-landing: every driver parquet file is written
     * as ONE row group, and a parquet scan cannot split inside a row
@@ -88,13 +90,8 @@ object Tables {
       import scala.concurrent.{Await, Future}
       Await.result(Future.sequence(relandable.map { name =>
         Future {
-          relanded.computeIfAbsent(s"$sfDir/$name", _ => {
-            val root = graft.TempTrees.scratch("graft-reland")
-            TempTrees.deleteOnExit(root)
-            val p = root.resolve(s"$name.parquet")
-            rawLoad(spark, sfDir, name).repartition(parts).write.parquet(p.toString)
-            p.toString
-          })
+          Landing.path(relanded, sfDir, s"$name.parquet")(
+            rawLoad(spark, sfDir, name).repartition(parts).write.parquet(_))
         }
       }), scala.concurrent.duration.Duration.Inf)
     } finally pool.shutdown()
@@ -118,7 +115,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Back-compat shim for the streaming source: normalize `ts`. */
-  def normalizeTs(df: DataFrame): DataFrame = normalizeTsCol(df, "ts")
 }

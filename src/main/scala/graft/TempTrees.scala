@@ -26,17 +26,19 @@ object TempTrees {
     * bandwidth instead of virtio disk I/O (measured: the same landing
     * build is ~3× slower on this container's system disk under I/O
     * contention, which is pure noise in the bench record). Falls back
-    * to `java.io.tmpdir` when no writable tmpfs exists. Callers still
-    * pair this with [[deleteOnExit]]. */
+    * to `java.io.tmpdir` when no writable tmpfs exists. The tree is
+    * removed at JVM exit. */
   def scratch(prefix: String): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base =
       if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(base, prefix)
+    val dir = java.nio.file.Files.createTempDirectory(base, prefix)
+    deleteOnExit(dir)
+    dir
   }
 
-  def deleteOnExit(root: java.nio.file.Path): Unit =
+  private def deleteOnExit(root: java.nio.file.Path): Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       import java.nio.file.{Files, Path}
       if (Files.exists(root)) {

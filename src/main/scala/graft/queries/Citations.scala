@@ -65,33 +65,14 @@ object Citations {
       concat(base, dup, book, noid).as("wikitext"))
   }
 
-  /** Landed fact tables, one temp parquet dir per source dir, reused
-    * for the JVM's lifetime and removed on exit. LANDING (not caching)
-    * is the production shape at 100 TB — the parse pipeline runs once,
-    * the result persists on storage, and every downstream query plans
-    * against a flat columnar scan. The measured difference is not just
-    * execution: planning against the plan-keyed CACHE re-analyzes the
+  /** Landed fact tables, one per source dir, reused for the JVM's
+    * lifetime. LANDING (not caching) is the production shape at 100 TB:
+    * the parse pipeline runs once, the result persists on storage, and
+    * every downstream query plans against a flat columnar scan.
+    * Planning against the plan-keyed CACHE instead re-analyzes the
     * 300-column enrichment DAG per query (3–25 s of driver time per
-    * c-query at sf0.1), while planning against the landed scan is
-    * milliseconds. */
-  private val landedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** computeIfAbsent owns the write atomically per key, so concurrent
-    * suites can't race on the same landing path. The build must NOT land
-    * another table (nested computeIfAbsent on one ConcurrentHashMap is a
-    * forbidden recursive update) — land dependencies first, outside. */
-  private def landOnce(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    val path = landedTables.computeIfAbsent(s"$dir/$name", _ => {
-      val root = graft.TempTrees.scratch("graft-landed")
-      graft.TempTrees.deleteOnExit(root)
-      val p = root.resolve(name)
-      build.write.parquet(p.toString)
-      p.toString
-    })
-    s.read.parquet(path)
-  }
+    * c-query at sf0.1). */
+  private val landed = new graft.Landing.Memo[String]
 
   /** The 39 columns downstream consumers actually read — the projection
     * that prunes the ~290 unused enrichment expressions out of the
@@ -113,26 +94,18 @@ object Citations {
     * [[RefsNeeded]] projection — 39 columns instead of 330, the same
     * trimming a production run applies when landing the refs table. */
   private def refs(s: SparkSession, dir: String): DataFrame =
-    landOnce(s, dir, "refs.parquet") {
+    graft.Landing.parquet(s, landed, dir, "refs.parquet") {
       Extract.references(pages(s, dir)).select(RefsNeeded.map(col): _*)
     }
 
   /** The claims table, landed once per source dir: c6/c7/c11 read it
     * (the production analog lands the claims table before serving read
-    * queries). On a cache hit, read directly; otherwise land refs FIRST,
-    * outside the claims landing (landOnce's no-nesting contract), so the
-    * hit path never re-reads the refs footers it won't use. */
-  private def claimsTable(s: SparkSession, dir: String): DataFrame = {
-    val existing = landedTables.get(s"$dir/claims.parquet")
-    if (existing != null) s.read.parquet(existing)
-    else {
-      val landedRefs = refs(s, dir)
-      landOnce(s, dir, "claims.parquet") {
-        Claims.allClaims(pages(s, dir), landedRefs,
-          to_timestamp(lit("2026-08-12 00:00:00")))
-      }
+    * queries). */
+  private def claimsTable(s: SparkSession, dir: String): DataFrame =
+    graft.Landing.parquet(s, landed, dir, "claims.parquet") {
+      Claims.allClaims(pages(s, dir), refs(s, dir),
+        to_timestamp(lit("2026-08-12 00:00:00")))
     }
-  }
 
   /** Materialize the landed refs + claims tables. Bench calls this once,
     * outside the per-query timed region, and reports it as its own
@@ -147,9 +120,7 @@ object Citations {
     *  - `reland` first: the single-row-group raw tables are re-landed
     *    as multi-file copies, so every later scan splits across cores (a
     *    parquet scan cannot split inside a row group).
-    *  - `refs` next, alone: claims reads it, and its landing time is the
-    *    box-noise canary, so no co-running work may fold scheduler
-    *    contention into it.
+    *  - `refs` next, alone, before the task list: `claims` reads it.
     *  - the other 17 landings are a dependency-aware task list run by
     *    [[runWarmTasks]], heaviest ready task first, at most
     *    [[WarmWorkers]] at once. Three builds in flight fill each other's
@@ -159,7 +130,7 @@ object Citations {
     *
     * A task's cost is its measured serial seconds plus the cost of the
     * tasks waiting on it. A landing two tasks share is still built once:
-    * landDeriv's computeIfAbsent makes the second caller wait for the
+    * its [[graft.Landing.Memo]] makes the second caller wait for the
     * first. Per-landing seconds overlap, so they attribute cost; the wall
     * time of the whole build is the caller's to measure. */
   def warmSharedTimed(s: SparkSession, dir: String): Seq[(String, Double)] = {

@@ -588,53 +588,17 @@ object TrainingData {
   private[graft] val MinhashBands = 4
 
   /** Landed derived tables shared across the t-queries (the
-    * Citations.landOnce rationale): eight queries shingle the documents
-    * table and four re-derive MinHash signatures — a production run
+    * Citations landing rationale): eight queries shingle the documents
+    * table and four re-derive MinHash signatures. A production run
     * lands both once and every dedup/rescore/cluster/audit job reads
-    * the landing. Bench charges them to its warm line. */
-  private val landedDeriv =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.CompletableFuture[String]]()
+    * the landing. Bench charges them to its warm line. Landings may
+    * read landings (shared_runs reads seed_grams, dedup_clusters reads
+    * doc_shingles + minhash_sigs). */
+  private val landedDeriv = new graft.Landing.Memo[String]
 
-  /** Land-once memoization with the build OUTSIDE the map's lock.
-    * `computeIfAbsent` only installs an empty future (a pure mapping
-    * function); the installing thread then runs `build` unlocked and
-    * completes it. This matters because landings DEPEND on landings
-    * (shared_runs reads seed_grams, dedup_clusters reads doc_shingles +
-    * minhash_sigs): running `build` inside `computeIfAbsent` nests a
-    * computeIfAbsent on the same ConcurrentHashMap, which the JDK
-    * forbids (IllegalStateException "Recursive update" or a stall when
-    * the keys share a bin). A concurrent reader blocks on `join()`
-    * until the writer's parquet commit — same wait semantics as before,
-    * still exactly one build per key. A failed build uninstalls its
-    * future so a later call can retry instead of joining a poisoned
-    * entry forever. */
   private[graft] def landDeriv(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    val key = s"$dir/$name"
-    var installed: java.util.concurrent.CompletableFuture[String] = null
-    val fut = landedDeriv.computeIfAbsent(key, _ => {
-      installed = new java.util.concurrent.CompletableFuture[String]()
-      installed
-    })
-    if (fut eq installed) {
-      try {
-        val root = graft.TempTrees.scratch("graft-landed")
-        graft.TempTrees.deleteOnExit(root)
-        val p = root.resolve(name)
-        build.write.parquet(p.toString)
-        fut.complete(p.toString)
-      } catch { case e: Throwable =>
-        // release waiters first, THEN open the retry window (a racer
-        // arriving between remove and completeExceptionally would
-        // launch a duplicate concurrent build of the same landing)
-        fut.completeExceptionally(e)
-        landedDeriv.remove(key, fut)
-        throw e
-      }
-    }
-    s.read.parquet(fut.join())
-  }
+      (build: => DataFrame): DataFrame =
+    graft.Landing.parquet(s, landedDeriv, dir, name)(build)
 
   /** The CC node-route card, LANDED once per corpus snapshot (VERDICT
     * r14 #2 — the t75 landing-integrity pattern applied to the route

@@ -37,40 +37,12 @@ object TextSources {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  private val landed =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.CompletableFuture[String]]()
-
-  /** Land-once memoization (the TrainingData.landDeriv pattern: install
-    * an empty future, build OUTSIDE the map's lock, uninstall on
-    * failure so a retry can rebuild). */
-  private def landOnce(key: String)(build: String => Unit): String = {
-    var installed: java.util.concurrent.CompletableFuture[String] = null
-    val fut = landed.computeIfAbsent(key, _ => {
-      installed = new java.util.concurrent.CompletableFuture[String]()
-      installed
-    })
-    if (fut eq installed) {
-      try {
-        val root = graft.TempTrees.scratch("graft-sources")
-        graft.TempTrees.deleteOnExit(root)
-        val p = root.resolve(key.replace('/', '_')).toString
-        build(p)
-        fut.complete(p)
-      } catch { case e: Throwable =>
-        fut.completeExceptionally(e)
-        landed.remove(key, fut)
-        throw e
-      }
-    }
-    fut.join()
-  }
-
-  /** The on-disk landing dir for an already-landed key (spec hook: lets
-    * TextSourcesSpec assert the gzip landing really holds .json.gz
-    * files without guessing the scratch root). */
-  private[graft] def landedPathOf(key: String): Option[String] =
-    Option(landed.get(key)).map(_.join())
+  /** The text-format landings, keyed by `$sfDir/<landing>`. Spec and
+    * stream hook: [[graft.Landing.Memo.done]] gives the on-disk dir of a
+    * landing already built (TextSourcesSpec asserts the gzip landing
+    * really holds .json.gz files; the compressed ingest feeds monitor
+    * it). */
+  private[graft] val landed = new graft.Landing.Memo[String]
 
   /** CSV options that make null and empty-string fields round-trip
     * DISTINCTLY: Spark's default CSV read treats an unquoted empty
@@ -118,7 +90,7 @@ object TextSources {
   /** The documents table through a CSV round trip (written once per
     * sfDir, read back with the explicit schema + FAILFAST). */
   def documentsCsv(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = landOnce(s"$sfDir/documents_csv") { p =>
+    val path = graft.Landing.path(landed, sfDir, "documents_csv") { p =>
       sentinelGuarded(graft.Tables(spark, sfDir, "documents"))
         .write.options(csvWriteOptions)
         .csv(p)
@@ -130,7 +102,7 @@ object TextSources {
 
   /** The documents table through a JSON-lines round trip. */
   def documentsJsonl(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = landOnce(s"$sfDir/documents_jsonl") { p =>
+    val path = graft.Landing.path(landed, sfDir, "documents_jsonl") { p =>
       graft.Tables(spark, sfDir, "documents").write.json(p)
     }
     spark.read.schema(documentsSchema)
@@ -153,7 +125,7 @@ object TextSources {
     * (Hadoop codec by extension); schema/FAILFAST posture identical to
     * [[documentsJsonl]]. */
   def documentsJsonlGz(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = landOnce(s"$sfDir/documents_jsonl_gz") { p =>
+    val path = graft.Landing.path(landed, sfDir, "documents_jsonl_gz") { p =>
       graft.Tables(spark, sfDir, "documents")
         .write.option("compression", "gzip").json(p)
     }
@@ -204,7 +176,7 @@ object TextSources {
     * pinned via `io.compression.codecs` (see [[pinZstdCodec]]). */
   def documentsJsonlZst(spark: SparkSession, sfDir: String): DataFrame = {
     pinZstdCodec(spark.sparkContext.hadoopConfiguration)
-    val path = landOnce(s"$sfDir/documents_jsonl_zst") { p =>
+    val path = graft.Landing.path(landed, sfDir, "documents_jsonl_zst") { p =>
       graft.Tables(spark, sfDir, "documents")
         .write.option("compression", zstdCodecClass).json(p)
     }

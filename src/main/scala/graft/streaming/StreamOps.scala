@@ -23,7 +23,7 @@ object StreamOps {
     * TIMESTAMP(NANOS) (→ read as LONG) in some driver rounds and
     * TIMESTAMP(MICROS, NTZ) in others, so the raw type is probed from
     * the file footer (batch read, schema only) and the stream source
-    * declares whatever is physically there; graft.Tables.normalizeTs
+    * declares whatever is physically there; graft.Tables.normalizeTsCol
     * then maps it to session-TZ TimestampType either way. */
   private def eventsRawSchema(tsType: DataType) = StructType(Seq(
     StructField("event_id", LongType),
@@ -38,23 +38,21 @@ object StreamOps {
     * DIRECTORY to monitor; the test table is a single file, so stage a
     * symlink to it in a temp dir — zero-copy, and the same shape as a
     * landing-directory ingest layout in production. */
-  /** Memoized staging dirs: one per source table, reused across every
-    * Verify/Bench/test invocation in the JVM (repeated calls used to leak
-    * a fresh temp dir each) and removed on JVM exit. */
-  private val stageDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+  /** Scratch dirs staged once per key and reused across every
+    * Verify/Bench/test invocation in the JVM: source symlinks, empty
+    * feeds, synthesized and sliced feeds, the streamed hash index. */
+  private val staged = new graft.Landing.Memo[java.nio.file.Path]
 
   private def stagedDir(sfDir: String, table: String): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
     // absolute: a relative link target resolves against the link's own
     // (scratch) directory, so a relative sfDir would leave it dangling
     val target = Paths.get(s"$sfDir/$table.parquet").toAbsolutePath.normalize
-    stageDirs.computeIfAbsent(target.toString, _ => {
+    staged(s"src/$target") {
       val stage = graft.TempTrees.scratch("graft-stream-src")
-      graft.TempTrees.deleteOnExit(stage)
       Files.createSymbolicLink(stage.resolve(s"$table.parquet"), target)
       stage
-    })
+    }
   }
 
   /** EMPTY-FEED mode (DataScaleCurve's streaming floor harness, r13
@@ -66,15 +64,9 @@ object StreamOps {
     * its bench cost that does not scale with data. Never set outside
     * the measurement harness; feeds resolve normally when false. */
   @volatile private[graft] var emptyFeeds: Boolean = false
-  private val emptyFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
   private def feedPath(real: String): String =
     if (!emptyFeeds) real
-    else emptyFeedDirs.computeIfAbsent(real, _ => {
-      val d = graft.TempTrees.scratch("graft-empty-feed")
-      graft.TempTrees.deleteOnExit(d)
-      d
-    }).toString
+    else staged(s"empty/$real")(graft.TempTrees.scratch("graft-empty-feed")).toString
 
   def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -82,10 +74,10 @@ object StreamOps {
     // ts type probed from the REAL table even in empty-feed mode (an
     // empty dir has no footer to probe)
     val tsType = spark.read.parquet(dir).schema("ts").dataType
-    graft.Tables.normalizeTs(
+    graft.Tables.normalizeTsCol(
       spark.readStream
         .schema(eventsRawSchema(tsType))
-        .parquet(feedPath(dir)))
+        .parquet(feedPath(dir)), "ts")
   }
 
   /** Raw parquet schema of the documents table. */
@@ -296,8 +288,8 @@ object StreamOps {
     * decompress-once-then-splittable posture SCALE.md names. */
   def gzDocStream(spark: SparkSession, sfDir: String): DataFrame = {
     graft.sources.TextSources.documentsJsonlGz(spark, sfDir) // land on first touch
-    val dir = graft.sources.TextSources
-      .landedPathOf(s"$sfDir/documents_jsonl_gz")
+    val dir = graft.sources.TextSources.landed
+      .done(s"$sfDir/documents_jsonl_gz")
       .getOrElse(sys.error("gz landing missing after build"))
     spark.readStream
       .schema(docsRawSchema)
@@ -325,8 +317,8 @@ object StreamOps {
     * prices the BATCH, never a scan. */
   def zstDocStream(spark: SparkSession, sfDir: String): DataFrame = {
     graft.sources.TextSources.documentsJsonlZst(spark, sfDir) // land + pin codec
-    val dir = graft.sources.TextSources
-      .landedPathOf(s"$sfDir/documents_jsonl_zst")
+    val dir = graft.sources.TextSources.landed
+      .done(s"$sfDir/documents_jsonl_zst")
       .getOrElse(sys.error("zst landing missing after build"))
     spark.readStream
       .schema(docsRawSchema)
@@ -664,14 +656,8 @@ object StreamOps {
     * title state never expires — which is why the bounded form is the
     * one this feed probes.)
     */
-  private val wmFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
   def watermarkProbeStream(spark: SparkSession): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val dir = wmFeedDirs.computeIfAbsent("feed", _ => {
-      val stage = graft.TempTrees.scratch("graft-wm-feed")
-      graft.TempTrees.deleteOnExit(stage)
+    val dir = graft.Landing.feed(staged, "wm") {
       def us(s: String) = java.time.Instant.parse(s).toEpochMilli * 1000L
       val batches: Seq[Seq[(String, Int, String, Long)]] = Seq(
         Seq(("en.wikipedia.org", 0, "A", us("2024-01-01T10:00:00Z")),
@@ -682,26 +668,10 @@ object StreamOps {
           ("en.wikipedia.org", 0, "D", us("2024-01-01T12:10:00Z"))),
         Seq(("en.wikipedia.org", 0, "A", us("2024-01-01T12:30:00Z"))))
       import spark.implicits._
-      batches.zipWithIndex.foreach { case (rows, i) =>
-        val tmp = graft.TempTrees.scratch("graft-wm-write")
-        graft.TempTrees.deleteOnExit(tmp)
-        rows.toDF("server_name", "namespace", "title", "ts_us")
-          .select(col("server_name"), col("namespace"), col("title"),
-            timestamp_micros(col("ts_us")).as("ts"))
-          .coalesce(1).write.parquet(tmp.resolve("out").toString)
-        val part = {
-          val s = Files.list(tmp.resolve("out"))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = stage.resolve(f"batch_$i%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-          .fromMillis(1700000000000L + i * 60000L))
-      }
-      stage
-    })
+      batches.map(_.toDF("server_name", "namespace", "title", "ts_us")
+        .select(col("server_name"), col("namespace"), col("title"),
+          timestamp_micros(col("ts_us")).as("ts")))
+    }
     spark.readStream
       .schema(StructType(Seq(
         StructField("server_name", StringType),
@@ -729,14 +699,8 @@ object StreamOps {
     *     completeness guarantee a batch left join gives for free and a
     *     stream can only give after the watermark proves no match can
     *     still arrive. */
-  private val adFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
   def adFeedStream(spark: SparkSession): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val dir = adFeedDirs.computeIfAbsent("feed", _ => {
-      val stage = graft.TempTrees.scratch("graft-ad-feed")
-      graft.TempTrees.deleteOnExit(stage)
+    val dir = graft.Landing.feed(staged, "ad") {
       def us(s: String) = java.time.Instant.parse(s).toEpochMilli * 1000L
       val batches: Seq[Seq[(String, Long, Long, Long)]] = Seq(
         Seq(("view", 100L, 1L, us("2024-01-01T09:30:00Z")),
@@ -745,26 +709,10 @@ object StreamOps {
         Seq(("view", 101L, 9L, us("2024-01-01T20:00:00Z")),
           ("click", 3L, 9L, us("2024-01-01T20:00:00Z"))))
       import spark.implicits._
-      batches.zipWithIndex.foreach { case (rows, i) =>
-        val tmp = graft.TempTrees.scratch("graft-ad-write")
-        graft.TempTrees.deleteOnExit(tmp)
-        rows.toDF("event_type", "event_id", "user_id", "ts_us")
-          .select(col("event_type"), col("event_id"), col("user_id"),
-            timestamp_micros(col("ts_us")).as("ts"))
-          .coalesce(1).write.parquet(tmp.resolve("out").toString)
-        val part = {
-          val s = Files.list(tmp.resolve("out"))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = stage.resolve(f"batch_$i%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-          .fromMillis(1700000000000L + i * 60000L))
-      }
-      stage
-    })
+      batches.map(_.toDF("event_type", "event_id", "user_id", "ts_us")
+        .select(col("event_type"), col("event_id"), col("user_id"),
+          timestamp_micros(col("ts_us")).as("ts")))
+    }
     spark.readStream
       .schema(StructType(Seq(
         StructField("event_type", StringType),
@@ -815,18 +763,12 @@ object StreamOps {
     * only the misses; deterministic minting makes the final index
     * independent of batch boundaries (and of replays — H8 in streaming
     * form), so the result is oracle-checkable. */
-  private val indexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def streamIndexMerge(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.wcd.HashIndex
     // memoized per source: a re-run merges into the existing index and
     // mints nothing (H8 replay tolerance) — the final state is identical
-    val indexPath = indexDirs.computeIfAbsent(sfDir, _ => {
-      val root = graft.TempTrees.scratch("graft-stream-index")
-      graft.TempTrees.deleteOnExit(root)
-      root.resolve("index").toString
-    })
+    val indexPath = staged(s"index/$sfDir")(
+      graft.TempTrees.scratch("graft-stream-index").resolve("index")).toString
     val hashes = eventStream(spark, sfDir)
       .select(md5(concat(lit("EV"), col("user_id").cast("string"))).as("hash"))
     val q = hashes.writeStream
@@ -934,45 +876,21 @@ object StreamOps {
   // which a static-index gate would miss).
   // ------------------------------------------------------------------
 
+  private[graft] val GrowthBatches = 3
+
   /** The arriving-document multi-batch feed: the arriving slice
     * (doc_id % 10 = 7, the s15/s19 split) staged as `nBatches` files
     * keyed by doc_id % nBatches with ascending mtimes, so
     * maxFilesPerTrigger=1 + AvailableNow replays a deterministic
-    * K-micro-batch ingest in batch order (the watermarkProbeStream
-    * staging move). */
-  private val arrivalFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private[graft] val GrowthBatches = 3
-
-  private def arrivalFeedDir(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, StandardCopyOption}
-    arrivalFeedDirs.computeIfAbsent(sfDir, _ => {
-      val stage = graft.TempTrees.scratch("graft-arrival-feed")
-      graft.TempTrees.deleteOnExit(stage)
+    * K-micro-batch ingest in batch order ([[graft.Landing.feed]]). */
+  private def arrivalFeedDir(spark: SparkSession, sfDir: String): java.nio.file.Path =
+    graft.Landing.feed(staged, s"arrival/$sfDir") {
       val docs = graft.Tables(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 === 7)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
-      (0 until GrowthBatches).foreach { b =>
-        val tmp = graft.TempTrees.scratch("graft-arrival-write")
-        graft.TempTrees.deleteOnExit(tmp)
-        docs.filter(col("doc_id") % GrowthBatches === b)
-          .coalesce(1).write.parquet(tmp.resolve("out").toString)
-        val part = {
-          val s = Files.list(tmp.resolve("out"))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = stage.resolve(f"batch_$b%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-          .fromMillis(1700000000000L + b * 60000L))
-      }
-      stage
-    })
-  }
+      (0 until GrowthBatches).map(b => docs.filter(col("doc_id") % GrowthBatches === b))
+    }
 
   private def arrivingDocStream(spark: SparkSession, sfDir: String): DataFrame =
     spark.readStream
@@ -1339,32 +1257,10 @@ object StreamOps {
       .orderBy(col("grain"))
   }
 
-  /** Once-per-JVM growth runs, memoized with the build OUTSIDE the
-    * map's lock (the TrainingData.landDeriv pattern): a re-run must not
-    * re-append — the grown dirs are the final state, and repeat callers
-    * (Bench iterations, Verify after Bench) read them directly. */
-  private val grownRuns = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[Map[String, String]]]()
-
-  private def growOnce(key: String)(run: => Map[String, String]): Map[String, String] = {
-    var installed: java.util.concurrent.CompletableFuture[Map[String, String]] = null
-    val fut = grownRuns.computeIfAbsent(key, _ => {
-      installed = new java.util.concurrent.CompletableFuture[Map[String, String]]()
-      installed
-    })
-    if (fut eq installed) {
-      try fut.complete(run)
-      catch { case e: Throwable =>
-        // finalize BEFORE opening the retry window: a caller racing
-        // between remove and completeExceptionally would install a
-        // fresh future and start a duplicate concurrent build
-        fut.completeExceptionally(e)
-        grownRuns.remove(key, fut)
-        throw e
-      }
-    }
-    fut.join()
-  }
+  /** Once-per-JVM growth runs: a re-run must not re-append — the grown
+    * dirs are the final state, and repeat callers (Bench iterations,
+    * Verify after Bench) read them directly. */
+  private val grown = new graft.Landing.Memo[Map[String, String]]
 
   private def emptyGate(spark: SparkSession, gateDir: String,
       id: String = "doc_id"): Unit =
@@ -1374,36 +1270,13 @@ object StreamOps {
 
   /** The arriving-EMBEDDING multi-batch feed — [[arrivalFeedDir]] at
     * vector grain (vec_id % 10 = 7, batch = vec_id % 3). */
-  private val embFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def embArrivalFeedDir(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, StandardCopyOption}
-    embFeedDirs.computeIfAbsent(sfDir, _ => {
-      val stage = graft.TempTrees.scratch("graft-emb-arrival-feed")
-      graft.TempTrees.deleteOnExit(stage)
+  private def embArrivalFeedDir(spark: SparkSession, sfDir: String): java.nio.file.Path =
+    graft.Landing.feed(staged, s"emb/$sfDir") {
       val vecs = graft.Tables(spark, sfDir, "embeddings")
         .filter(col("vec_id") % 10 === 7)
         .select(col("vec_id"), col("embedding"), col("label"))
-      (0 until GrowthBatches).foreach { b =>
-        val tmp = graft.TempTrees.scratch("graft-emb-arrival-write")
-        graft.TempTrees.deleteOnExit(tmp)
-        vecs.filter(col("vec_id") % GrowthBatches === b)
-          .coalesce(1).write.parquet(tmp.resolve("out").toString)
-        val part = {
-          val s = Files.list(tmp.resolve("out"))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = stage.resolve(f"batch_$b%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-          .fromMillis(1700000000000L + b * 60000L))
-      }
-      stage
-    })
-  }
+      (0 until GrowthBatches).map(b => vecs.filter(col("vec_id") % GrowthBatches === b))
+    }
 
   private def arrivingEmbStream(spark: SparkSession, sfDir: String): DataFrame =
     spark.readStream
@@ -1441,9 +1314,8 @@ object StreamOps {
     * (gate, grownBuckets). */
   def growEmbIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     import graft.queries.TrainingData
-    val dirs = growOnce(s"emb/$sfDir") {
+    val dirs = grown(s"emb/$sfDir") {
       val root = graft.TempTrees.scratch("graft-grow-emb")
-      graft.TempTrees.deleteOnExit(root)
       val bucketsDir = root.resolve("buckets").toString
       val gateDir = root.resolve("gate").toString
       val isNew = col("vec_id") % 10 === 7
@@ -1474,9 +1346,8 @@ object StreamOps {
   def growNearDupIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) = {
     import graft.ops.DedupOps
     import graft.queries.TrainingData
-    val dirs = growOnce(s"neardup/$sfDir") {
+    val dirs = grown(s"neardup/$sfDir") {
       val root = graft.TempTrees.scratch("graft-grow-neardup")
-      graft.TempTrees.deleteOnExit(root)
       val bandsDir = root.resolve("bands").toString
       val shinglesDir = root.resolve("shingles").toString
       val gateDir = root.resolve("gate").toString
@@ -1514,9 +1385,8 @@ object StreamOps {
       broadcastNodes: Option[Boolean] = None): DataFrame = {
     import graft.ops.DedupOps
     import graft.queries.TrainingData
-    val dirs = growOnce(s"clusters/$sfDir") {
+    val dirs = grown(s"clusters/$sfDir") {
       val root = graft.TempTrees.scratch("graft-grow-clusters")
-      graft.TempTrees.deleteOnExit(root)
       val bandsDir = root.resolve("bands").toString
       val shinglesDir = root.resolve("shingles").toString
       val isNew = col("doc_id") % 10 === 7
@@ -1568,44 +1438,20 @@ object StreamOps {
     * ids — s27 hash-proves it. The forget slice is
     * hx('forget:'‖doc_id) % 29 = 0 (t87's slice), split into
     * [[GrowthBatches]] deterministic batches by doc_id. */
-  private val forgetFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def forgetFeedDir(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, StandardCopyOption}
-    forgetFeedDirs.computeIfAbsent(sfDir, _ => {
-      val stage = graft.TempTrees.scratch("graft-forget-feed")
-      graft.TempTrees.deleteOnExit(stage)
+  private def forgetFeedDir(spark: SparkSession, sfDir: String): java.nio.file.Path =
+    graft.Landing.feed(staged, s"forget/$sfDir") {
       val forget = pmod(graft.ops.TextOps.hx(concat(lit("forget:"),
         col("doc_id").cast("string"))), lit(29L)) === 0
       val ids = graft.Tables(spark, sfDir, "documents")
         .filter(forget).select(col("doc_id"))
-      (0 until GrowthBatches).foreach { b =>
-        val tmp = graft.TempTrees.scratch("graft-forget-write")
-        graft.TempTrees.deleteOnExit(tmp)
-        ids.filter(col("doc_id") % GrowthBatches === b)
-          .coalesce(1).write.parquet(tmp.resolve("out").toString)
-        val part = {
-          val s = Files.list(tmp.resolve("out"))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = stage.resolve(f"batch_$b%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-          .fromMillis(1700000000000L + b * 60000L))
-      }
-      stage
-    })
-  }
+      (0 until GrowthBatches).map(b => ids.filter(col("doc_id") % GrowthBatches === b))
+    }
 
   def retractionStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ops.DedupOps
     import graft.queries.TrainingData
-    val dirs = growOnce(s"retract/$sfDir") {
+    val dirs = grown(s"retract/$sfDir") {
       val root = graft.TempTrees.scratch("graft-stream-retract")
-      graft.TempTrees.deleteOnExit(root)
       val boot = root.resolve("clusters_v0").toString
       TrainingData.dedupClusters(spark, sfDir)
         .select(col("doc_id"), col("cluster_id"))
@@ -1641,9 +1487,8 @@ object StreamOps {
     * (gate, grownSeeds). */
   def growSeedIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     import graft.queries.TrainingData
-    val dirs = growOnce(s"seeds/$sfDir") {
+    val dirs = grown(s"seeds/$sfDir") {
       val root = graft.TempTrees.scratch("graft-grow-seeds")
-      graft.TempTrees.deleteOnExit(root)
       val seedsDir = root.resolve("seeds").toString
       val gateDir = root.resolve("gate").toString
       val isNew = col("doc_id") % 10 === 7

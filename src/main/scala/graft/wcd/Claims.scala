@@ -264,7 +264,7 @@ object Claims {
     * parse/enrich lineage makes the optimizer expand the person-array
     * lambdas into the claim generator — minutes of planning for zero
     * gain. A production run lands the refs fact table on storage before
-    * projecting claims (Citations.landOnce is that seam). The guard
+    * projecting claims (graft.Landing.parquet is that seam). The guard
     * below materializes ONLY a deep un-cached lineage (and says so on
     * stderr — a driver action inside an operator must never be silent);
     * a landed scan or an already-cached relation passes through lazily,

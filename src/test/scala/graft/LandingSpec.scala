@@ -1,0 +1,129 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
+
+/** The land-once seam: one build per key however many callers race for
+  * it, the build outside any map lock (so builds of unrelated keys and
+  * nested builds proceed), failures rethrown to every waiter and then
+  * retried, and a never-waiting peek at finished values. */
+class LandingSpec extends SparkSpec with TimeLimits {
+  // interrupt the test thread at the limit, so a hang fails the test
+  private implicit val signaler: Signaler = ThreadSignaler
+
+  /** Runs `body` on a new thread; `join` gives its value or what it threw. */
+  private final class Worker[T](body: => T) {
+    @volatile private var out: Either[Throwable, T] = null
+    val thread = new Thread(() => out = try Right(body) catch { case e: Throwable => Left(e) })
+    thread.start()
+    def join(): Either[Throwable, T] = { thread.join(); out }
+  }
+
+  /** Two distinct keys in one bin of a fresh 16-bin ConcurrentHashMap
+    * (the JDK's spread of `hashCode`, masked to 4 bits). */
+  private lazy val sameBin: (String, String) = {
+    def bin(k: String) = { val h = k.hashCode; (h ^ (h >>> 16)) & 15 }
+    val keys = (0 until 64).map(i => s"sf/t$i")
+    keys.tail.collectFirst { case k if bin(k) == bin(keys.head) => (keys.head, k) }.get
+  }
+
+  /** Waits until `t` is parked, i.e. blocked waiting on a build. */
+  private def awaitParked(t: Thread): Unit =
+    while (t.getState != Thread.State.WAITING) Thread.sleep(1)
+
+  test("concurrent callers of one key share exactly one build") {
+    failAfter(30.seconds) {
+      val memo = new Landing.Memo[Object]
+      val builds = new AtomicInteger(0)
+      val go = new CountDownLatch(1)
+      val callers = (1 to 8).map(_ => new Worker({
+        go.await()
+        memo("k") { builds.incrementAndGet(); Thread.sleep(50); new Object }
+      }))
+      go.countDown()
+      val got = callers.map(_.join().toOption.get)
+      assert(builds.get() == 1)
+      assert(got.forall(_ eq got.head))
+    }
+  }
+
+  test("a failed build rethrows to its waiters and the next call rebuilds") {
+    failAfter(30.seconds) {
+      val memo = new Landing.Memo[Int]
+      val started = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val builder = new Worker(memo("k") {
+        started.countDown(); release.await(); throw new IllegalStateException("boom")
+      })
+      started.await()
+      val waiters = (1 to 3).map(_ => new Worker(memo("k")(fail("a waiter must not build"))))
+      waiters.foreach(w => awaitParked(w.thread))
+      release.countDown()
+      for (w <- builder +: waiters) {
+        val e = w.join().swap.toOption.get
+        assert(e.isInstanceOf[IllegalStateException] && e.getMessage == "boom")
+      }
+      assert(memo.done("k").isEmpty)
+      assert(memo("k")(42) == 42)
+      assert(memo.done("k").contains(42))
+    }
+  }
+
+  test("a build may land another key of the same memo") {
+    failAfter(30.seconds) {
+      // claims reads refs: the nested key shares the outer key's bin,
+      // where a nested computeIfAbsent is a recursive update
+      val (claims, refs) = sameBin
+      val memo = new Landing.Memo[String]
+      assert(memo(claims)(memo(refs)("refs") + "+claims") == "refs+claims")
+      assert(memo.done(refs).contains("refs"))
+    }
+  }
+
+  test("builds of two keys in one map bin run at the same time") {
+    failAfter(30.seconds) {
+      val (a, b) = sameBin
+      val memo = new Landing.Memo[Boolean]
+      val both = new CountDownLatch(2)
+      def build() = { both.countDown(); both.await(10, TimeUnit.SECONDS) }
+      val workers = Seq(new Worker(memo(a)(build())), new Worker(memo(b)(build())))
+      assert(workers.map(_.join()) == Seq(Right(true), Right(true)),
+        "each build must see the other one running")
+    }
+  }
+
+  test("done never waits: None while the build is in flight") {
+    failAfter(30.seconds) {
+      val memo = new Landing.Memo[String]
+      val started = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val builder = new Worker(memo("k") { started.countDown(); release.await(); "v" })
+      started.await()
+      assert(memo.done("k").isEmpty)
+      assert(memo.done("other").isEmpty)
+      release.countDown()
+      assert(builder.join() == Right("v"))
+      assert(memo.done("k").contains("v"))
+    }
+  }
+
+  test("feed stages one file per batch with mtimes 60 s apart, once per key") {
+    failAfter(60.seconds) {
+      import java.nio.file.Files
+      val memo = new Landing.Memo[java.nio.file.Path]
+      val dir = Landing.feed(memo, "f")((0 until 3).map(i => spark.range(i * 10L, i * 10L + 5).toDF()))
+      val files = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .sortBy(_.getFileName.toString)
+      assert(files.map(_.getFileName.toString).toSeq ==
+        Seq("batch_00.parquet", "batch_01.parquet", "batch_02.parquet"))
+      assert(files.map(Files.getLastModifiedTime(_).toMillis).toSeq ==
+        Seq(1700000000000L, 1700000060000L, 1700000120000L))
+      assert(spark.read.parquet(files(1).toString).collect().map(_.getLong(0)).sorted.toSeq ==
+        (10L until 15L))
+      assert(Landing.feed(memo, "f")(fail("a staged feed must not rebuild")) == dir)
+    }
+  }
+}

@@ -764,7 +764,6 @@ class DedupOpsSpec extends SparkSpec {
 
   private def initDirs(sub: String*): Seq[String] = {
     val root = graft.TempTrees.scratch("graft-growth-spec")
-    graft.TempTrees.deleteOnExit(root)
     sub.map(root.resolve(_).toString)
   }
 

@@ -25,7 +25,7 @@ class TextSourcesSpec extends SparkSpec {
 
   test("gzip JSONL landing really is gzip: .gz files, codec-transparent read") {
     TextSources.documentsJsonlGz(spark, dir).count() // force the landing
-    val p = TextSources.landedPathOf(s"$dir/documents_jsonl_gz")
+    val p = TextSources.landed.done(s"$dir/documents_jsonl_gz")
     assert(p.nonEmpty, "landing path must be recorded")
     val gzParts = new java.io.File(p.get).listFiles()
       .filter(_.getName.endsWith(".json.gz"))
@@ -40,7 +40,7 @@ class TextSourcesSpec extends SparkSpec {
     assert(zst.schema == TextSources.documentsSchema)
     val base = graft.Tables(spark, dir, "documents")
     assert(zst.count() == base.count())
-    val p = TextSources.landedPathOf(s"$dir/documents_jsonl_zst")
+    val p = TextSources.landed.done(s"$dir/documents_jsonl_zst")
     assert(p.nonEmpty, "landing path must be recorded")
     val parts = new java.io.File(p.get).listFiles()
       .filter(_.getName.endsWith(".json.zst"))
@@ -72,7 +72,6 @@ class TextSourcesSpec extends SparkSpec {
       (3L, null.asInstanceOf[String], "en", null.asInstanceOf[String], 0L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val root = graft.TempTrees.scratch("graft-sources-spec-nullcsv")
-    graft.TempTrees.deleteOnExit(root)
     val p = root.resolve("fixture_csv").toString
     fixture.write.options(TextSources.csvWriteOptions).csv(p)
     val back = spark.read.schema(TextSources.documentsSchema)
@@ -102,7 +101,6 @@ class TextSourcesSpec extends SparkSpec {
 
   test("FAILFAST: a malformed row aborts the read instead of yielding nulls") {
     val root = graft.TempTrees.scratch("graft-sources-spec")
-    graft.TempTrees.deleteOnExit(root)
     // CSV with a non-numeric doc_id: schema says LongType -> malformed
     val badCsv = root.resolve("bad_csv")
     java.nio.file.Files.createDirectories(badCsv)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -10,18 +9,12 @@ object ContainmentProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val base = graft.Tables(spark, sfDir, "documents")
     val nBase = base.count()
-    val root = java.nio.file.Files.createTempDirectory("graft-cprof")
-    graft.TempTrees.deleteOnExit(root)
+    val root = graft.TempTrees.scratch("graft-cprof")
     val repl = base.crossJoin(spark.range(reps.toLong).select(col("id").as("rep")))
       .select((col("doc_id") + col("rep") * lit(nBase)).as("doc_id"),
         concat(regexp_replace(col("text"), lit(" "),

@@ -68,14 +68,8 @@ object DataScaleCurve {
     val outPath = if (args.nonEmpty) args(0) else "SCALE_CURVE.json"
     val reps = if (args.length > 1) args(1).toInt else 5
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "64g")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(100000).selectExpr("id % 7 AS k", "id AS v")
       .groupBy("k").sum("v").count()
@@ -218,7 +212,6 @@ object DataScaleCurve {
     * disjoint key/token spaces, the rest symlinked. */
   private def buildSynth(spark: SparkSession, baseDir: String, reps: Int): String = {
     val root = graft.TempTrees.scratch("graft-data-scale")
-    graft.TempTrees.deleteOnExit(root)
     val repIdx = spark.range(reps.toLong).select(col("id").as("rep"))
 
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")

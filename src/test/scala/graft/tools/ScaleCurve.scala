@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cores-scaling evidence harness (test scope): times the heavy operator
@@ -23,13 +22,8 @@ object ScaleCurve {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 10
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(100000).selectExpr("id % 7 AS k", "id AS v")
       .groupBy("k").sum("v").count()
@@ -39,8 +33,7 @@ object ScaleCurve {
     // replicate with disjoint ids and per-replica token suffixing; land
     // it once so every timed operator reads the same parquet scan (the
     // production landing posture — replication cost is not operator cost)
-    val root = java.nio.file.Files.createTempDirectory("graft-scale-curve")
-    graft.TempTrees.deleteOnExit(root)
+    val root = graft.TempTrees.scratch("graft-scale-curve")
     val repl = base.crossJoin(
         spark.range(reps.toLong).select(col("id").as("rep")))
       .select(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: count parquet scans per source table in every registered
   * query's executed plan, flagging queries that replay an expensive
@@ -21,12 +20,7 @@ import org.apache.spark.sql.SparkSession
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val min = if (args.nonEmpty) args(0).toInt else 3
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val tables = graft.Tables.all

@@ -40,7 +40,6 @@ class ClaimsSpec extends SparkSpec {
     // landed-shaped input: write the refs table and read it back — the
     // guard must NOT cache it (the hidden-materialization nit, r10)
     val dir = graft.TempTrees.scratch("graft-claims-guard")
-    graft.TempTrees.deleteOnExit(dir)
     refs.write.parquet(dir.resolve("refs").toString)
     val landed = spark.read.parquet(dir.resolve("refs").toString)
     Claims.allClaims(pages, landed, retrieved)
@@ -226,7 +225,6 @@ class ClaimsSpec extends SparkSpec {
     // A7) touches one directory, not the whole table. Assert the
     // pruning actually reaches the scan node.
     val root = graft.TempTrees.scratch("graft-claims-sink")
-    graft.TempTrees.deleteOnExit(root)
     val p = root.resolve("claims.parquet").toString
     claims.write.partitionBy("item_type").parquet(p)
     val back = spark.read.parquet(p)

@@ -11,7 +11,7 @@ class IncrementalRunSpec extends SparkSpec {
   import spark.implicits._
 
   test("re-import of the same pages mints zero new items through the persisted index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hashindex").toString + "/index"
+    val dir = graft.TempTrees.scratch("graft-hashindex").toString + "/index"
     val pages = Seq(
       (1L, "A", "en", "{{cite web|url=https://one.example.com/a|title=T1}}"),
       (2L, "B", "en", "{{cite journal|doi=10.1/xyz|title=T2}}"))
