@@ -58,8 +58,8 @@ object StreamOps {
   /** EMPTY-FEED mode (DataScaleCurve's streaming floor harness, r13
     * verdict #4): when set, every streaming FEED resolves to a
     * memoized empty directory, so a query runs ALL of its micro-batch
-    * machinery — source listing, trigger, checkpoint/commit-log
-    * fsyncs, sink setup, memoized-state reads — over zero arriving
+    * machinery — source listing, trigger, checkpoint and commit-log
+    * writes, sink setup, memoized-state reads — over zero arriving
     * rows. The measured time is the query's RESTART FLOOR: the part of
     * its bench cost that does not scale with data. Never set outside
     * the measurement harness; feeds resolve normally when false. */
@@ -488,39 +488,61 @@ object StreamOps {
   }
 
   /** Run a streaming DataFrame to completion (AvailableNow) into a
-    * memory sink and return the materialized result.
+    * memory sink and return the materialized result. Concurrent runs
+    * overlap; they must use distinct names, since Spark rejects a
+    * second active query with the same name.
     *
-    * State-store sizing: a stateful operator creates one state store per
-    * shuffle partition, and store open/commit is a FIXED per-partition,
-    * per-batch cost. The knob follows key cardinality, not core count —
-    * the bounded test stream carries a few hundred keys, so 8 stores;
-    * a production keyspace sizes this up with the usual partitions
-    * setting. Every result here is partition-count-invariant by
-    * construction (DECIMAL sums, set-shaped outputs), so the knob is
-    * pure overhead tuning. */
+    * Each run fixes two confs for its stream ([[runConf]]). Both cut a
+    * fixed cost that perfbench's `ingest` workload measured (sf0.01,
+    * 4-vCPU VM), and neither changes a result:
+    *  - One shuffle partition, so each stateful operator has ONE state
+    *    store. A store's open and commit cost the same per batch
+    *    whatever it holds, and the bounded feeds carry a few hundred
+    *    keys: with 8 stores per operator, commits took 11.6 of the
+    *    14.1 s of trigger time. Every result here is
+    *    partition-count-invariant by construction (DECIMAL sums,
+    *    set-shaped outputs).
+    *  - The FileSystem checkpoint manager for the checkpoint and state
+    *    files. Without the Hadoop native library, the default
+    *    FileContext manager's local file system forks a `chmod` for
+    *    each file it creates with a permission and a `readlink` for
+    *    each rename: a one-pass `ingest` run started about 7,460
+    *    processes before these two settings and 2,010 after. This
+    *    manager creates without a permission and renames with a POSIX
+    *    `rename`, which is atomic on the local temp checkpoint that
+    *    every run here uses (none sets `checkpointLocation`). */
   def runToTable(spark: SparkSession, stream: DataFrame, name: String,
-      mode: String, statePartitions: Int = 8): DataFrame = {
-    // the conf flip is session-global, so serialize streaming runs: two
-    // interleaved calls could otherwise restore each other's temporary
-    // value as the permanent one. (A concurrently-planned BATCH query
-    // would only see a different partition count — results here are
-    // partition-count-invariant by construction.)
-    confLock.synchronized {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      try {
-        val q = stream.writeStream
+      mode: String): DataFrame = {
+    val q = confLock.synchronized {
+      val prev = runConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      runConf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try stream.writeStream
           .format("memory")
           .queryName(name)
           .outputMode(mode)
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
+    q.awaitTermination()
     spark.table(name)
   }
 
+  private[graft] val runConf = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
+  /** Held from setting [[runConf]] on the caller's session until it is
+    * restored, so that two runs cannot restore each other's temporary
+    * values as the permanent ones. It need not cover the run itself:
+    * the StreamExecution that `start()` builds clones the session in
+    * its constructor, so the stream keeps both values after they are
+    * restored. A batch query planned on another thread inside that
+    * window only gets a different partition count. */
   private val confLock = new Object
 
   /** Tumbling-window counts + exact DECIMAL value sums per event type,
@@ -749,11 +771,7 @@ object StreamOps {
       "left_outer")
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("view_id"), col("view_ts"))
-    // 1 state partition: join state stores are a FIXED per-partition,
-    // per-batch cost, and the probe feed is 5 rows over 3+ batches —
-    // at the default 8 the fixed cost IS the query's wall time
-    runToTable(spark, joined, "stream_left_outer_join", "append",
-      statePartitions = 1)
+    runToTable(spark, joined, "stream_left_outer_join", "append")
   }
 
   /** A5 as a STREAMING sink: per-micro-batch idempotent create-or-get
