@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions.col
   * (`queries`, summed into `value`), the wall-time median
   * (`queries_median`) and the min of the process CPU seconds the runs
   * took (`queries_cpu`, summed with the warm build's into `cpu_sec`).
+  * Beside them, `warm_jit_sec` and `queries_jit` (the latter from each
+  * query's wall-time min run) record the JIT compiler's seconds: the
+  * compiler threads' CPU is part of the process CPU, and on a short
+  * pass a large share of it.
   *
   * Why CPU: a busy box takes wall time from a query (its tasks wait for
   * a core) but not CPU time, which counts only the work the JVM itself
@@ -29,6 +33,9 @@ import org.apache.spark.sql.functions.col
   * A failing query is recorded in `failed` (timing omitted) and makes
   * the exit code non-zero, so a regression can't pass as a speedup. */
 object Bench {
+  /** One successful run's seconds: wall, process CPU and JIT compiler. */
+  private final case class Run(wall: Double, cpu: Double, jit: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
@@ -37,6 +44,9 @@ object Bench {
     val os = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     def cpuSec(): Double = os.getProcessCpuTime / 1e9
+    // summed over the compiler threads, so it can exceed wall time
+    val jit = ManagementFactory.getCompilationMXBean
+    def jitSec(): Double = jit.getTotalCompilationTime / 1e3
     // warm the JVM outside the timed region: shuffle machinery, parquet
     // reader and whole-stage codegen compilation are session costs, not
     // query costs
@@ -48,9 +58,11 @@ object Bench {
     // warm_tables entries overlap and can sum to more than warm_sec
     val warmT0 = System.nanoTime()
     val warmC0 = cpuSec()
+    val warmJ0 = jitSec()
     val warmParts = graft.queries.Citations.warmSharedTimed(spark, sfDir)
     val warmSec = (System.nanoTime() - warmT0) / 1e9
     val warmCpu = cpuSec() - warmC0
+    val warmJit = jitSec() - warmJ0
 
     // a query's surviving localCheckpoint blocks (the final rounds of
     // its iterative operators) are dead once it finishes: every run
@@ -66,11 +78,15 @@ object Bench {
           rdd.unpersist(blocking = true)
       }
 
-    /** One run: (wall, process CPU) seconds, or the failure's first line. */
-    def once(fn: (SparkSession, String) => DataFrame): Either[String, (Double, Double)] = {
+    /** One run's seconds, or the failure's first line. */
+    def once(fn: (SparkSession, String) => DataFrame): Either[String, Run] = {
       val t0 = System.nanoTime()
       val c0 = cpuSec()
-      try { fn(spark, sfDir).count(); Right(((System.nanoTime() - t0) / 1e9, cpuSec() - c0)) }
+      val j0 = jitSec()
+      try {
+        fn(spark, sfDir).count()
+        Right(Run((System.nanoTime() - t0) / 1e9, cpuSec() - c0, jitSec() - j0))
+      }
       catch { case e: Throwable =>
         Left(e.toString.linesIterator.nextOption().getOrElse(e.getClass.getName))
       }
@@ -99,15 +115,16 @@ object Bench {
     val results = toRun.map { case (name, fn) =>
       val runs = (1 to iters).map(_ => once(fn))
       val ok = runs.collect { case Right(r) => r }
-      val walls = ok.map(_._1).sorted
-      name -> (if (ok.nonEmpty) Right((walls.head, walls(walls.length / 2), ok.map(_._2).min))
+      name -> (if (ok.nonEmpty) Right(ok)
                else Left(runs.collectFirst { case Left(e) => e }.getOrElse("?")))
     }
     val shufEnd = shuffleProbe()
 
-    val ok = results.collect { case (n, Right((mn, _, _))) => n -> mn }
-    val med = results.collect { case (n, Right((_, md, _))) => n -> md }
-    val cpu = results.collect { case (n, Right((_, _, c))) => n -> c }
+    val done = results.collect { case (n, Right(rs)) => n -> rs }
+    val ok = done.map { case (n, rs) => n -> rs.map(_.wall).min }
+    val med = done.map { case (n, rs) => n -> rs.map(_.wall).sorted.apply(rs.length / 2) }
+    val cpu = done.map { case (n, rs) => n -> rs.map(_.cpu).min }
+    val jitQ = done.map { case (n, rs) => n -> rs.minBy(_.wall).jit }
     val failed = results.collect { case (n, Left(e)) => n -> e }
     val total = warmSec + ok.map(_._2).sum
     val cpuTotal = warmCpu + cpu.map(_._2).sum
@@ -125,9 +142,10 @@ object Bench {
     // lands the same record under a second, stable name, because
     // BENCH_LOCAL.json is overwritten by every run.
     val full = s"""{"metric":"total","value":$total,"unit":"sec","warm_sec":$warmSec,""" +
-      s""""warm_cpu_sec":$warmCpu,"cpu_sec":$cpuTotal,"warm_tables":${nums(warmParts)},""" +
-      s""""iterations":$iters,"shuffle_probe":[$shufStart,$shufEnd],"queries":${nums(ok)},""" +
-      s""""queries_median":${nums(med)},"queries_cpu":${nums(cpu)},""" +
+      s""""warm_cpu_sec":$warmCpu,"warm_jit_sec":$warmJit,"cpu_sec":$cpuTotal,""" +
+      s""""warm_tables":${nums(warmParts)},"iterations":$iters,""" +
+      s""""shuffle_probe":[$shufStart,$shufEnd],"queries":${nums(ok)},""" +
+      s""""queries_median":${nums(med)},"queries_cpu":${nums(cpu)},"queries_jit":${nums(jitQ)},""" +
       s""""failed":${obj(failed.map { case (k, e) => k -> JsonText.quote(e) })},"sf":"$sfDir"}"""
     write("BENCH_LOCAL.json", full)
     sys.env.get("SPARK_GRAFT_RECORD_FILE").foreach(write(_, full))

@@ -267,8 +267,11 @@ object Claims {
     * projecting claims (graft.Landing.parquet is that seam). The guard
     * below materializes ONLY a deep un-cached lineage (and says so on
     * stderr — a driver action inside an operator must never be silent);
-    * a landed scan or an already-cached relation passes through lazily,
-    * so the registered (landed-path) callers pay nothing here. */
+    * a landed scan, a checkpoint or an already-cached relation passes
+    * through lazily. No registered query trips it: the `claims` landing
+    * reads the landed refs table, and c15 checkpoints its in-call parse
+    * before projecting claims. It stays for ad-hoc callers that pass
+    * [[Extract.references]] output straight in. */
   def allClaims(pages: DataFrame, refs: DataFrame, retrievedDate: Column): DataFrame = {
     val cached =
       refs.storageLevel != org.apache.spark.storage.StorageLevel.NONE

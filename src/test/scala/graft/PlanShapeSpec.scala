@@ -157,10 +157,13 @@ class PlanShapeSpec extends SparkSpec {
     // back to the c1–c14 landing seam
     assert(!plan.contains("refs.parquet"),
       s"c15 must not read the refs landing:\n${plan.take(3000)}")
-    // the engine's documented 3-branch guard: the claim branches read
-    // the ONE cache materialization instead of replaying the parse 3x
-    assert(plan.contains("InMemoryTableScan"),
-      "claims branches must read the in-plan cache materialization")
+    // the parse lineage is checkpointed once inside the call: the claim
+    // branches and merges read its rows instead of replaying the parse,
+    // and the claims guard's cache is never needed
+    assert(plan.contains("Scan ExistingRDD"),
+      s"c15 must read its checkpointed materializations:\n${plan.take(3000)}")
+    assert(!plan.contains("InMemoryTableScan"),
+      "c15 must not trip the claims guard's cache materialization")
     // mint counters ride broadcast 1-row aggregates — never a cartesian
     assert(!plan.contains("CartesianProduct"))
   }
