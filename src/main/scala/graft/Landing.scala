@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException,
+  ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The land-once policy. Each derived artifact (a parquet landing, a
@@ -10,7 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dirs) is built once per key for the JVM's lifetime, and every later
   * reader reuses it: the snapshot-grain "build once, then load" posture
   * of a production run. Landings live in [[TempTrees.scratch]] dirs,
-  * removed at JVM exit. */
+  * removed at JVM exit. [[buildAll]] is the one bounded runner that
+  * builds a set of landings up front (the warm build, the raw-table
+  * re-land). */
 object Landing {
 
   /** A land-once memo. `apply` installs an empty future under the key,
@@ -56,12 +61,78 @@ object Landing {
       p
     }
 
-  /** `df` landed as parquet once per `$dir/$name`, read back. Planning
-    * against the landed scan costs milliseconds where a plan-keyed cache
-    * re-analyzes the whole derivation per query. */
-  def parquet(s: SparkSession, memo: Memo[String], dir: String, name: String)
-      (df: => DataFrame): DataFrame =
-    s.read.parquet(path(memo, dir, name)(df.write.parquet(_)))
+  /** The parquet landings of every source dir, keyed `$dir/$name`; the
+    * names are unique across the query families that land here. */
+  private val landed = new Memo[String]
+
+  /** `df` landed as parquet once per `$dir/$name`, read back, and reused
+    * for the JVM's lifetime. LANDING (not caching) is the production
+    * shape at 100 TB: a derivation shared by several queries (the parse
+    * pipeline, the shingle and MinHash tables, the co-order graph, the
+    * trained codebooks) runs once per snapshot, the result persists on
+    * storage, and every downstream query plans against a flat columnar
+    * scan. A plan-keyed cache instead re-analyzes the whole derivation
+    * per query (3–25 s of driver time per c-query at sf0.1 against the
+    * 300-column enrichment DAG), and a `cache()` is not shared across
+    * independent query plans. A landing's build may read other landings
+    * (claims reads refs, dedup_clusters reads doc_shingles and
+    * minhash_sigs). Bench charges the landings it builds up front to its
+    * warm line, not to whichever query reads them first. */
+  def parquet(s: SparkSession, dir: String, name: String)(df: => DataFrame): DataFrame =
+    s.read.parquet(path(landed, dir, name)(df.write.parquet(_)))
+
+  /** Landing builds that run in order on one worker; a build reads its
+    * inputs through their memos, so each sits behind its inputs. */
+  type Chain = Seq[(String, () => Any)]
+
+  /** How long a failed [[buildAll]] waits for its cancelled builds to stop. */
+  private val DrainS = 120L
+
+  /** Runs each chain on a fixed pool of `workers` threads, its builds in
+    * order, chains starting in declaration order; returns each build's
+    * seconds in declaration order. Seconds of builds on different chains
+    * overlap, so they attribute cost; the wall time of the whole run is
+    * the caller's to measure.
+    *
+    * The pool's threads are created from the caller, so they inherit its
+    * Spark local properties (a caller's job group among them), and every
+    * build's jobs also carry one job tag for the run. Chains are awaited
+    * in completion order, so a failure surfaces while slower chains still
+    * run. On the first failure, or an interrupt of the caller, the tagged
+    * jobs are cancelled, the pool is interrupted and drained for at most
+    * [[DrainS]] seconds, and the failure is rethrown: the rest of the
+    * failed chain and the chains still queued never start, and a failed
+    * run must not let the JVM exit (TempTrees' shutdown hooks delete the
+    * landing dirs) while sibling landings are still writing. */
+  def buildAll(sc: SparkContext, chains: Seq[Chain], workers: Int): Seq[(String, Double)] = {
+    val tag = s"graft-landing-${java.util.UUID.randomUUID()}"
+    // set by the first failure, before a worker can take the next chain
+    val stop = new AtomicBoolean(false)
+    val pool = Executors.newFixedThreadPool(workers)
+    val done = new ExecutorCompletionService[Seq[(String, Double)]](pool)
+    try {
+      val runs = chains.map { chain =>
+        done.submit(() => {
+          sc.addJobTag(tag)
+          try chain.iterator.takeWhile(_ => !stop.get).map { case (name, build) =>
+            val t0 = System.nanoTime()
+            build()
+            name -> (System.nanoTime() - t0) / 1e9
+          }.toSeq
+          catch { case e: Throwable => stop.set(true); throw e }
+          finally sc.removeJobTag(tag)
+        })
+      }
+      chains.foreach(_ => done.take().get())
+      runs.flatMap(_.get())
+    } catch { case e: Throwable =>
+      stop.set(true)
+      sc.cancelJobsWithTag(tag)
+      pool.shutdownNow()
+      pool.awaitTermination(DrainS, TimeUnit.SECONDS)
+      throw (e match { case x: ExecutionException => x.getCause; case x => x })
+    } finally pool.shutdown()
+  }
 
   /** A streaming file-source feed staged once per key: one
     * `batch_NN.parquet` file per batch, with mtimes 60 s apart, so a

@@ -80,21 +80,13 @@ object Tables {
     * copy needs no footer probe on read. Idempotent per (sfDir, table);
     * safe to call from concurrent warm chains. */
   def reland(spark: SparkSession, sfDir: String, parts: Int): Unit = {
-    // one landing job per table, submitted concurrently: each is a tiny
-    // read+write whose cost is mostly job overhead, so serial landing
-    // pays 8x the wall time of the longest one
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(relandable.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      import scala.concurrent.{Await, Future}
-      Await.result(Future.sequence(relandable.map { name =>
-        Future {
-          Landing.path(relanded, sfDir, s"$name.parquet")(
-            rawLoad(spark, sfDir, name).repartition(parts).write.parquet(_))
-        }
-      }), scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    // one landing per table, all at once: each is a tiny read+write whose
+    // cost is mostly job overhead, so serial landing pays 8x the wall
+    // time of the longest one
+    Landing.buildAll(spark.sparkContext, relandable.map { name =>
+      Seq(name -> (() => Landing.path(relanded, sfDir, s"$name.parquet")(
+        rawLoad(spark, sfDir, name).repartition(parts).write.parquet(_))))
+    }, relandable.size)
     ()
   }
 

@@ -19,7 +19,7 @@ object Verify {
     // is written; Dataset caches stay — killing blocks under a live
     // CacheManager entry forces later matching plans through a dead
     // InMemoryRelation rebuild (see Bench).
-    graft.queries.Citations.warmShared(spark, sfDir)
+    graft.queries.Citations.warmSharedTimed(spark, sfDir)
     val baseRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {

@@ -2,11 +2,8 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.wcd.{Claims, Extract, ReadQueries}
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** Oracle-checked end-to-end exercises of the citation pipeline
   * (SURVEY.md §3.1): deterministic wikitext is synthesized from the
@@ -65,15 +62,6 @@ object Citations {
       concat(base, dup, book, noid).as("wikitext"))
   }
 
-  /** Landed fact tables, one per source dir, reused for the JVM's
-    * lifetime. LANDING (not caching) is the production shape at 100 TB:
-    * the parse pipeline runs once, the result persists on storage, and
-    * every downstream query plans against a flat columnar scan.
-    * Planning against the plan-keyed CACHE instead re-analyzes the
-    * 300-column enrichment DAG per query (3–25 s of driver time per
-    * c-query at sf0.1). */
-  private val landed = new graft.Landing.Memo[String]
-
   /** The 39 columns downstream consumers actually read — the projection
     * that prunes the ~290 unused enrichment expressions out of the
     * parse pipeline (shared by the [[refs]] landing and c15's in-plan
@@ -94,7 +82,7 @@ object Citations {
     * [[RefsNeeded]] projection — 39 columns instead of 330, the same
     * trimming a production run applies when landing the refs table. */
   private def refs(s: SparkSession, dir: String): DataFrame =
-    graft.Landing.parquet(s, landed, dir, "refs.parquet") {
+    graft.Landing.parquet(s, dir, "refs.parquet") {
       Extract.references(pages(s, dir)).select(RefsNeeded.map(col): _*)
     }
 
@@ -102,17 +90,14 @@ object Citations {
     * (the production analog lands the claims table before serving read
     * queries). */
   private def claimsTable(s: SparkSession, dir: String): DataFrame =
-    graft.Landing.parquet(s, landed, dir, "claims.parquet") {
+    graft.Landing.parquet(s, dir, "claims.parquet") {
       Claims.allClaims(pages(s, dir), refs(s, dir),
         to_timestamp(lit("2026-08-12 00:00:00")))
     }
 
-  /** Materialize the landed refs + claims tables. Bench calls this once,
-    * outside the per-query timed region, and reports it as its own
-    * line. */
-  def warmShared(s: SparkSession, dir: String): Unit = warmSharedTimed(s, dir)
-
-  /** [[warmShared]] with per-landing seconds in a fixed record order, so
+  /** Builds the landings every later query reads (Bench and the
+    * perfbench `import` pass call it once, outside the per-query timed
+    * region) and returns per-landing seconds in a fixed record order, so
     * a caller can attribute the warm cost instead of reporting one
     * opaque number.
     *
@@ -120,135 +105,50 @@ object Citations {
     *  - `reland` first: the single-row-group raw tables are re-landed
     *    as multi-file copies, so every later scan splits across cores (a
     *    parquet scan cannot split inside a row group).
-    *  - the other 18 landings, `refs` among them, are a dependency-aware
-    *    task list run by [[runWarmTasks]], heaviest ready task first, at
-    *    most [[WarmWorkers]] at once. Three builds in flight fill each
-    *    other's scheduling tails; more only fight over the same task
-    *    slots. Only `claims` reads `refs`, so only `claims` waits for it;
-    *    the other landings build beside the parse. Starting the long
-    *    poles (refs then claims, the dedup-cluster chain, pq and kmeans
-    *    training) first keeps the critical path near Σcost/3.
+    *  - the other 18 landings run as chains on [[graft.Landing.buildAll]],
+    *    at most [[WarmWorkers]] chains at once. Three builds in flight
+    *    fill each other's scheduling tails; more only fight over the
+    *    same task slots. Each landing's inputs sit ahead of it in its
+    *    own chain (claims reads refs, dedup_clusters reads the shingle,
+    *    signature and route-card landings, each route card reads its
+    *    edge landing), so no chain waits on another. Chains start in
+    *    declaration order, long poles first; SCALE.md has the serial
+    *    per-landing seconds behind the order.
     *
-    * A task's cost is its measured serial seconds plus the cost of the
-    * tasks waiting on it. A landing two tasks share is still built once:
-    * its [[graft.Landing.Memo]] makes the second caller wait for the
-    * first. Per-landing seconds overlap, so they attribute cost; the wall
-    * time of the whole build is the caller's to measure. */
+    * The record is `reland`, then the landings in chain order. */
   def warmSharedTimed(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val relandPart = timed("reland")(graft.Tables.reland(s, dir,
-      s.conf.get("spark.sql.shuffle.partitions").toInt))
-    // declared in the record order, which runWarmTasks keeps
-    val tasks = Seq(
-      // measured serially at sf0.01: refs 6.4 s (+ claims, which waits
-      // on it), claims 2.2 s
-      WarmTask("refs", Nil, 8.6, () => refs(s, dir)),
-      WarmTask("claims", Seq("refs"), 2.2, () => claimsTable(s, dir)),
-      WarmTask("co_order_edges", Nil, 5.0, () => Pipelines.partCoOrderEdges(s, dir)),
-      WarmTask("node_route_coorder", Seq("co_order_edges"), 1.2,
-        () => Pipelines.coorderRouteCardLanded(s, dir)),
-      WarmTask("sp_pairs", Nil, 3.1, () => Pipelines.supplierPartPairs(s, dir)),
-      WarmTask("node_route_pagerank", Seq("sp_pairs"), 1.3,
-        () => Pipelines.pagerankRouteCardLanded(s, dir)),
-      WarmTask("doc_shingles", Nil, 4.3, () => TrainingData.docShingles(s, dir)),
-      WarmTask("lm_unigrams", Nil, 0.9, () => TrainingData.lmUnigrams(s, dir)),
-      WarmTask("lm_bigrams", Nil, 1.2, () => TrainingData.lmBigrams(s, dir)),
-      WarmTask("minhash_sigs", Nil, 4.8, () => TrainingData.docMinhashSigs(s, dir)),
-      WarmTask("kmeans_books", Nil, 3.9, () => TrainingData.kmeansBooks(s, dir)),
-      WarmTask("emb_buckets_neardup", Nil, 0.9, () => TrainingData.embBuckets(s, dir,
-        TrainingData.NearDupLshTables, TrainingData.NearDupLshPlanes)),
-      WarmTask("emb_buckets_ann", Nil, 0.7, () => TrainingData.embBuckets(s, dir,
-        TrainingData.AnnLshTables, TrainingData.AnnLshPlanes)),
-      WarmTask("pq_books", Nil, 4.5, () => TrainingData.pqBooks(s, dir)),
-      WarmTask("node_route_cc", Nil, 3.6, () => TrainingData.ccRouteCardLanded(s, dir)),
-      WarmTask("seed_grams", Nil, 4.3, () => TrainingData.seedGramsLanded(s, dir)),
-      WarmTask("shared_runs", Seq("seed_grams"), 3.3,
-        () => TrainingData.sharedRunsLanded(s, dir)),
-      WarmTask("dedup_clusters", Seq("doc_shingles", "minhash_sigs", "node_route_cc"), 3.5,
-        () => TrainingData.dedupClusters(s, dir)))
-    relandPart +: runWarmTasks(s.sparkContext, tasks, WarmWorkers)
-  }
-
-  /** Warm landings in flight at once; see [[warmSharedTimed]]. */
-  private[graft] val WarmWorkers = 3
-
-  /** How long a failed warm build waits for its cancelled tasks to stop. */
-  private val WarmDrainS = 120L
-
-  /** One warm landing. Ready tasks start in descending `cost`. */
-  private[graft] final case class WarmTask(name: String, deps: Seq[String],
-      cost: Double, build: () => Unit)
-
-  private def timed(name: String)(body: => Unit): (String, Double) = {
     val t0 = System.nanoTime()
-    body
-    name -> (System.nanoTime() - t0) / 1e9
+    Tables.reland(s, dir, s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val relandS = (System.nanoTime() - t0) / 1e9
+    ("reland" -> relandS) +: graft.Landing.buildAll(s.sparkContext, warmChains(s, dir),
+      WarmWorkers)
   }
 
-  /** Runs each task once, after its dependencies, heaviest ready task
-    * first and at most `workers` at a time; returns each task's seconds
-    * in declaration order. Duplicate names, unknown dependencies and
-    * cycles are rejected before any task starts.
-    *
-    * The calling thread is the only one that touches the schedule: it
-    * submits ready tasks to a fixed pool and takes their completions one
-    * at a time. The pool's threads are created from it, so they inherit
-    * its Spark local properties (a caller's job group among them), and
-    * every task's jobs also carry one job tag for the build. On the first
-    * failure, or an interrupt of the caller, the tagged jobs are
-    * cancelled, the pool is interrupted and drained for at most
-    * [[WarmDrainS]] seconds, and the failure is rethrown: a failed build
-    * must not let the JVM exit (TempTrees' shutdown hooks delete the
-    * landing dirs) while sibling landings are still writing. */
-  private[graft] def runWarmTasks(sc: SparkContext, tasks: Seq[WarmTask],
-      workers: Int): Seq[(String, Double)] = {
-    val dupes = tasks.groupBy(_.name).collect { case (n, ts) if ts.size > 1 => n }
-    require(dupes.isEmpty, s"duplicate warm tasks: ${dupes.mkString(", ")}")
-    val names = tasks.map(_.name).toSet
-    val unknown = for (t <- tasks; d <- t.deps if !names(d)) yield s"${t.name} -> $d"
-    require(unknown.isEmpty, s"unknown warm task dependencies: ${unknown.mkString(", ")}")
-    val dependents = tasks.flatMap(t => t.deps.distinct.map(_ -> t)).groupMap(_._1)(_._2)
-    def unmet() = mutable.Map.from(tasks.map(t => t.name -> t.deps.distinct.size))
-    def release(left: mutable.Map[String, Int], name: String): Seq[WarmTask] =
-      dependents.getOrElse(name, Nil).filter { t => left(t.name) -= 1; left(t.name) == 0 }
-    // dry topological pass: a task that never becomes ready is on or
-    // behind a cycle
-    val dry = unmet()
-    var frontier = tasks.filter(t => dry(t.name) == 0)
-    while (frontier.nonEmpty) frontier = frontier.flatMap(t => release(dry, t.name))
-    val stuck = tasks.map(_.name).filter(dry(_) > 0)
-    require(stuck.isEmpty, s"warm task dependency cycle through: ${stuck.mkString(", ")}")
+  /** The warm landings as chains, long poles first; see [[warmSharedTimed]]. */
+  private[graft] def warmChains(s: SparkSession, dir: String): Seq[graft.Landing.Chain] =
+    Seq(
+      Seq("refs" -> (() => refs(s, dir)), "claims" -> (() => claimsTable(s, dir))),
+      Seq("node_route_cc" -> (() => TrainingData.ccRouteCardLanded(s, dir)),
+        "doc_shingles" -> (() => TrainingData.docShingles(s, dir)),
+        "minhash_sigs" -> (() => TrainingData.docMinhashSigs(s, dir)),
+        "dedup_clusters" -> (() => TrainingData.dedupClusters(s, dir))),
+      Seq("pq_books" -> (() => TrainingData.pqBooks(s, dir))),
+      Seq("co_order_edges" -> (() => Pipelines.partCoOrderEdges(s, dir)),
+        "node_route_coorder" -> (() => Pipelines.coorderRouteCardLanded(s, dir))),
+      Seq("seed_grams" -> (() => TrainingData.seedGramsLanded(s, dir)),
+        "shared_runs" -> (() => TrainingData.sharedRunsLanded(s, dir))),
+      Seq("kmeans_books" -> (() => TrainingData.kmeansBooks(s, dir))),
+      Seq("sp_pairs" -> (() => Pipelines.supplierPartPairs(s, dir)),
+        "node_route_pagerank" -> (() => Pipelines.pagerankRouteCardLanded(s, dir))),
+      Seq("lm_bigrams" -> (() => TrainingData.lmBigrams(s, dir))),
+      Seq("lm_unigrams" -> (() => TrainingData.lmUnigrams(s, dir))),
+      Seq("emb_buckets_neardup" -> (() => TrainingData.embBuckets(s, dir,
+        TrainingData.NearDupLshTables, TrainingData.NearDupLshPlanes))),
+      Seq("emb_buckets_ann" -> (() => TrainingData.embBuckets(s, dir,
+        TrainingData.AnnLshTables, TrainingData.AnnLshPlanes))))
 
-    val left = unmet()
-    val ready = mutable.PriorityQueue.empty[WarmTask](Ordering.by[WarmTask, Double](_.cost))
-    ready ++= tasks.filter(t => left(t.name) == 0)
-    val seconds = mutable.Map[String, Double]()
-    val tag = s"graft-warm-${java.util.UUID.randomUUID()}"
-    val pool = Executors.newFixedThreadPool(workers)
-    val completions = new ExecutorCompletionService[(String, Double)](pool)
-    var inFlight = 0
-    try {
-      while (ready.nonEmpty || inFlight > 0) {
-        while (inFlight < workers && ready.nonEmpty) {
-          val t = ready.dequeue()
-          completions.submit(() => {
-            sc.addJobTag(tag)
-            try timed(t.name)(t.build()) finally sc.removeJobTag(tag)
-          })
-          inFlight += 1
-        }
-        val (name, secs) = completions.take().get()
-        inFlight -= 1
-        seconds(name) = secs
-        ready ++= release(left, name)
-      }
-    } catch { case e: Throwable =>
-      sc.cancelJobsWithTag(tag)
-      pool.shutdownNow()
-      pool.awaitTermination(WarmDrainS, TimeUnit.SECONDS)
-      throw (e match { case x: ExecutionException => x.getCause; case x => x })
-    } finally pool.shutdown()
-    tasks.map(t => t.name -> seconds(t.name))
-  }
+  /** Warm chains in flight at once; see [[warmSharedTimed]]. */
+  private val WarmWorkers = 3
 
   /** Oracle helper: the per-doc modular helpers as a DuckDB CTE. */
   private val D =

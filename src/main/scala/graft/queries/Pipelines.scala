@@ -31,20 +31,14 @@ object Pipelines {
     * g2–g6, so the graph queries can never silently diverge. LANDED
     * once per sfDir (each query otherwise replays the distinct +
     * self-join over lineitem — measured at seconds apiece at sf0.1);
-    * same rationale as the Citations landings: a parquet landing survives
-    * across independent query plans where a `cache()` would not be
-    * shared, and planning against the landed scan is cheap. Bench
-    * charges the landing to its warm line (`co_order_edges`), not to
-    * whichever graph query runs first. */
-  private val landed = new graft.Landing.Memo[String]
-
-  /** The landing carries the co-order multiplicity `w` (number of
+    * Bench charges the landing to its warm line (`co_order_edges`).
+    * The landing carries the co-order multiplicity `w` (number of
     * distinct orders containing both parts) — same rows, same build
     * shuffle as the old `.distinct()` (a groupBy on the identical key);
     * the unweighted consumers project it away at the scan. */
   private[graft] def partCoOrderEdgesWeighted(
       s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Landing.parquet(s, landed, dir, "co_order_edges.parquet") {
+    graft.Landing.parquet(s, dir, "co_order_edges.parquet") {
       val po = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       po.as("a").join(po.as("b"),
@@ -68,7 +62,7 @@ object Pipelines {
     * relation. */
   private[graft] def supplierPartPairs(
       s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Landing.parquet(s, landed, dir, "sp_pairs.parquet") {
+    graft.Landing.parquet(s, dir, "sp_pairs.parquet") {
       Tables(s, dir, "lineitem")
         .select(col("l_suppkey"), col("l_partkey"))
         .distinct()
@@ -95,7 +89,7 @@ object Pipelines {
     * the registered t111 card reads this landing verbatim. */
   private[graft] def pagerankRouteCardLanded(
       s: org.apache.spark.sql.SparkSession, dir: String) =
-    TrainingData.landDeriv(s, dir, "node_route_pagerank.parquet") {
+    graft.Landing.parquet(s, dir, "node_route_pagerank.parquet") {
       spNodeRouteCard(supplierPartPairs(s, dir))
     }
 
@@ -124,7 +118,7 @@ object Pipelines {
 
   private[graft] def coorderRouteCardLanded(
       s: org.apache.spark.sql.SparkSession, dir: String) =
-    TrainingData.landDeriv(s, dir, "node_route_coorder.parquet")(
+    graft.Landing.parquet(s, dir, "node_route_coorder.parquet")(
       GraphOps.nodeRouteCard(partCoOrderEdges(s, dir)))
 
   val defs: Seq[QueryDef] = Seq(

@@ -587,19 +587,6 @@ object TrainingData {
   private[graft] val MinhashK = 16
   private[graft] val MinhashBands = 4
 
-  /** Landed derived tables shared across the t-queries (the
-    * Citations landing rationale): eight queries shingle the documents
-    * table and four re-derive MinHash signatures. A production run
-    * lands both once and every dedup/rescore/cluster/audit job reads
-    * the landing. Bench charges them to its warm line. Landings may
-    * read landings (shared_runs reads seed_grams, dedup_clusters reads
-    * doc_shingles + minhash_sigs). */
-  private val landedDeriv = new graft.Landing.Memo[String]
-
-  private[graft] def landDeriv(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame =
-    graft.Landing.parquet(s, landedDeriv, dir, name)(build)
-
   /** The CC node-route card, LANDED once per corpus snapshot (VERDICT
     * r14 #2 — the t75 landing-integrity pattern applied to the route
     * read itself): t110's arithmetic priced once at index-build time
@@ -608,12 +595,12 @@ object TrainingData {
     * this 1-row landing; t75 audits it against an oracle recompute
     * from the documents table. */
   private[graft] def ccRouteCardLanded(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "node_route_cc.parquet")(
+    graft.Landing.parquet(s, dir, "node_route_cc.parquet")(
       DedupOps.ccRouteCard(Tables(s, dir, "documents")))
 
   /** The documents shingle table (distinct word trigrams per doc). */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "doc_shingles.parquet")(
+    graft.Landing.parquet(s, dir, "doc_shingles.parquet")(
       DedupOps.shingleTable(Tables(s, dir, "documents"), "doc_id", col("text")))
 
   /** The near-dup cluster relation (doc_id, cluster_id, cluster_size)
@@ -634,7 +621,7 @@ object TrainingData {
     // 16 B/row vs the broadcast threshold), never a hand-picked
     // default. r15: the card is read from its LANDING (built beside
     // this one, audited by t75) instead of re-counted inside the build.
-    landDeriv(s, dir, "dedup_clusters.parquet") {
+    graft.Landing.parquet(s, dir, "dedup_clusters.parquet") {
       DedupOps.connectedComponentsRouted(Tables(s, dir, "documents"),
         "doc_id",
         DedupOps.minhashLshPairsFrom(docShingles(s, dir),
@@ -650,7 +637,7 @@ object TrainingData {
     * every downstream policy from the landing. Deterministic, so the
     * landing is bit-identical to running the chain in-query. */
   private[graft] def sharedRunsLanded(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "shared_runs_20_10_3.parquet")(
+    graft.Landing.parquet(s, dir, "shared_runs_20_10_3.parquet")(
       DedupOps.sharedRunRelation(Tables(s, dir, "documents"), "doc_id",
         col("text"), minRunTokens = 20, seedW = 10, n = 3,
         seedIndex = Some(seedGramsLanded(s, dir))))
@@ -663,7 +650,7 @@ object TrainingData {
     * corpus). hx-hashed (not xxhash64) so a DuckDB oracle can mirror
     * candidate counts taken straight off the index. */
   private[graft] def seedGramsLanded(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "seed_grams_10.parquet")(
+    graft.Landing.parquet(s, dir, "seed_grams_10.parquet")(
       DedupOps.seedGramIndex(Tables(s, dir, "documents"), "doc_id",
         col("text"), seedW = 10))
 
@@ -674,7 +661,7 @@ object TrainingData {
     * documents scan: the landing never touches the shingle table, so
     * signature-building cost is one kernel call per document. */
   private[graft] def docMinhashSigs(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "doc_minhash_sigs.parquet") {
+    graft.Landing.parquet(s, dir, "doc_minhash_sigs.parquet") {
       val sigs = graft.expr.VectorExprs.minhashSigsF(col("text"), MinhashK)
       Tables(s, dir, "documents")
         .select(col("doc_id"), sigs.as("sigs"))
@@ -692,7 +679,7 @@ object TrainingData {
     * the shared warm line (Bench reports it on its own line). */
   private[graft] def embBuckets(s: SparkSession, dir: String,
       tables: Int, planes: Int): DataFrame =
-    landDeriv(s, dir, s"emb_buckets_${tables}_$planes.parquet")(
+    graft.Landing.parquet(s, dir, s"emb_buckets_${tables}_$planes.parquet")(
       VectorOps.bucketTable(Tables(s, dir, "embeddings"), "vec_id", "embedding",
         tables, planes))
 
@@ -704,7 +691,7 @@ object TrainingData {
     * landing is bit-identical to training in-query — the oracles still
     * unroll the iterations. */
   private[graft] def kmeansBooks(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "kmeans_books_8_2.parquet")(
+    graft.Landing.parquet(s, dir, "kmeans_books_8_2.parquet")(
       VectorOps.kmeansCentroids(Tables(s, dir, "embeddings"),
         "vec_id", "embedding", 8, 2))
 
@@ -716,7 +703,7 @@ object TrainingData {
     * integer means), so the landing is bit-identical to training
     * in-query — the t37 oracle still unrolls the iterations. */
   private[graft] def pqBooks(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "pq_books_8_8_16.parquet")(
+    graft.Landing.parquet(s, dir, "pq_books_8_8_16.parquet")(
       VectorOps.pqTrainedCodebooks(Tables(s, dir, "embeddings"),
         "vec_id", "embedding", m = 8, subDim = 8, k = 16, iters = 2))
 
@@ -727,7 +714,7 @@ object TrainingData {
     * snapshot beside the other indexes. Same count tables the t40/t63
     * in-corpus scorer derives, restricted to the corpus slice. */
   private[graft] def lmUnigrams(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "lm_unigrams.parquet")(
+    graft.Landing.parquet(s, dir, "lm_unigrams.parquet")(
       Tables(s, dir, "documents").filter(col("doc_id") % 10 =!= 7)
         .select(explode(TextOps.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c1")))
@@ -738,13 +725,13 @@ object TrainingData {
     * the corpus pass is charged to the warm line exactly like every
     * other landing, and the waterfill branches read a tiny parquet. */
   private[graft] def sourceTokensLanded(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "source_tokens.parquet")(
+    graft.Landing.parquet(s, dir, "source_tokens.parquet")(
       Tables(s, dir, "documents")
         .groupBy(col("source"))
         .agg(sum(size(TextOps.tokens(col("text")))).cast("long").as("n_tok")))
 
   private[graft] def lmBigrams(s: SparkSession, dir: String): DataFrame =
-    landDeriv(s, dir, "lm_bigrams.parquet") {
+    graft.Landing.parquet(s, dir, "lm_bigrams.parquet") {
       Tables(s, dir, "documents").filter(col("doc_id") % 10 =!= 7)
         .select(TextOps.tokens(col("text")).as("w"))
         .select(explode(bigramStructs(col("w"))).as("b"))
@@ -5274,7 +5261,7 @@ object TrainingData {
     * ingest path encode each arriving word IN-ROW with no join and no
     * state. */
   private[graft] def bpeMergeList(s: SparkSession, dir: String): Seq[String] =
-    landDeriv(s, dir, "bpe_merges.parquet")(
+    graft.Landing.parquet(s, dir, "bpe_merges.parquet")(
       TextOps.bpeMerges(Tables(s, dir, "documents"), col("text"), steps = 4))
       .orderBy(col("step")).collect().map(_.getAs[String]("pair")).toSeq
 

@@ -5,10 +5,10 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
 /** The two shapes the `import` pass relies on: the warm build records
-  * every landing under a fixed key order (`refs` now builds inside the
-  * task graph, beside the other landings), and c15 runs its whole chain
-  * from raw wikitext without tripping the claims guard's stderr-announced
-  * cache materialization. */
+  * every landing under a fixed key order (`reland`, then the landings in
+  * chain order; `refs` builds beside the other chains), and c15 runs its
+  * whole chain from raw wikitext without tripping the claims guard's
+  * stderr-announced cache materialization. */
 class ImportPassSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -24,11 +24,11 @@ class ImportPassSpec extends SparkSpec {
       } finally files.close()
     }
     val parts = Citations.warmSharedTimed(spark, copy.toString)
-    assert(parts.map(_._1) == Seq("reland", "refs", "claims", "co_order_edges",
-      "node_route_coorder", "sp_pairs", "node_route_pagerank", "doc_shingles",
-      "lm_unigrams", "lm_bigrams", "minhash_sigs", "kmeans_books",
-      "emb_buckets_neardup", "emb_buckets_ann", "pq_books", "node_route_cc",
-      "seed_grams", "shared_runs", "dedup_clusters"))
+    assert(parts.map(_._1) == Seq("reland", "refs", "claims", "node_route_cc",
+      "doc_shingles", "minhash_sigs", "dedup_clusters", "pq_books",
+      "co_order_edges", "node_route_coorder", "seed_grams", "shared_runs",
+      "kmeans_books", "sp_pairs", "node_route_pagerank", "lm_bigrams",
+      "lm_unigrams", "emb_buckets_neardup", "emb_buckets_ann"))
     assert(parts.forall(_._2 >= 0.0))
   }
 

@@ -1,108 +1,88 @@
 package graft
 
-import graft.queries.Citations.{WarmTask, runWarmTasks}
 import org.apache.spark.{JobExecutionStatus, TaskContext}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
-/** The bounded-concurrency warm-landing scheduler: dependency-aware
-  * heaviest-first task draining with a small worker pool. The contract
-  * the warm build relies on: every task runs exactly once, never before
-  * its dependencies, at most `workers` concurrently; a bad task graph
-  * fails before anything runs; a failure cancels the sibling tasks'
-  * Spark jobs and propagates within a bounded time; and jobs started by
-  * a task carry the caller's local properties. */
+/** The bounded landing runner [[Landing.buildAll]] the warm build relies
+  * on: every landing runs exactly once, in order within its chain, at
+  * most `workers` chains at once, chains starting in declaration order;
+  * a failure stops its chain and the queued chains, cancels the sibling
+  * chains' Spark jobs and propagates within a bounded time; and jobs
+  * started by a landing carry the caller's local properties. */
 class WarmSchedulerSpec extends SparkSpec with TimeLimits {
   // interrupt the test thread at the limit, so a hang fails the test
   private implicit val signaler: Signaler = ThreadSignaler
 
   private def sc = spark.sparkContext
 
-  private def task(name: String, deps: Seq[String], prio: Double,
-      body: () => Unit) = WarmTask(name, deps, prio, body)
+  private def logged(log: java.util.List[String]) =
+    scala.jdk.CollectionConverters.ListHasAsScala(log).asScala.toSeq
 
-  test("all tasks run exactly once and dependencies complete first") {
-    val log = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val tasks = Seq(
-      task("a", Nil, 5.0, () => { Thread.sleep(5); log.add("a"); () }),
-      task("b", Seq("a"), 4.0, () => { log.add("b"); () }),
-      task("c", Seq("a", "b"), 3.0, () => { log.add("c"); () }),
-      task("d", Nil, 2.0, () => { Thread.sleep(3); log.add("d"); () }),
-      task("e", Seq("d"), 1.0, () => { log.add("e"); () }))
-    val parts = runWarmTasks(sc, tasks, workers = 3)
-    assert(parts.map(_._1).sorted == Seq("a", "b", "c", "d", "e"))
-    val order = scala.jdk.CollectionConverters.ListHasAsScala(log).asScala.toSeq
-    assert(order.count(_ == "a") == 1)
-    assert(order.indexOf("a") < order.indexOf("b"))
-    assert(order.indexOf("b") < order.indexOf("c"))
-    assert(order.indexOf("d") < order.indexOf("e"))
+  test("every landing runs once, in chain order, and seconds come back in declaration order") {
+    failAfter(30.seconds) {
+      val log = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[String]())
+      def landing(name: String, sleepMs: Long) =
+        name -> (() => { Thread.sleep(sleepMs); log.add(name) })
+      // the first chain is the slowest, so its results complete last
+      val chains = Seq(
+        Seq(landing("a", 30), landing("b", 0), landing("c", 0)),
+        Seq(landing("d", 0), landing("e", 0)),
+        Seq(landing("f", 0)))
+      val parts = Landing.buildAll(sc, chains, workers = 3)
+      assert(parts.map(_._1) == Seq("a", "b", "c", "d", "e", "f"))
+      assert(parts.forall(_._2 >= 0.0))
+      val order = logged(log)
+      assert(order.sorted == Seq("a", "b", "c", "d", "e", "f"))
+      assert(order.indexOf("a") < order.indexOf("b"))
+      assert(order.indexOf("b") < order.indexOf("c"))
+      assert(order.indexOf("d") < order.indexOf("e"))
+    }
   }
 
   test("at most `workers` tasks run concurrently") {
-    val running = new java.util.concurrent.atomic.AtomicInteger(0)
-    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
-    val tasks = (1 to 8).map { i =>
-      task(s"t$i", Nil, i.toDouble, () => {
-        val now = running.incrementAndGet()
-        peak.accumulateAndGet(now, math.max)
-        Thread.sleep(20)
-        running.decrementAndGet(); ()
-      })
+    failAfter(30.seconds) {
+      val running = new java.util.concurrent.atomic.AtomicInteger(0)
+      val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+      val chains = (1 to 8).map { i =>
+        Seq(s"t$i" -> (() => {
+          val now = running.incrementAndGet()
+          peak.accumulateAndGet(now, math.max)
+          Thread.sleep(20)
+          running.decrementAndGet()
+        }))
+      }
+      Landing.buildAll(sc, chains, workers = 2)
+      assert(peak.get() <= 2, s"peak concurrency ${peak.get()} > 2")
     }
-    runWarmTasks(sc, tasks, workers = 2)
-    assert(peak.get() <= 2, s"peak concurrency ${peak.get()} > 2")
   }
 
   test("a failing task propagates after the drain; later tasks are abandoned") {
-    val ran = java.util.Collections.synchronizedSet(
-      new java.util.HashSet[String]())
-    val tasks = Seq(
-      task("boom", Nil, 9.0, () => { Thread.sleep(5)
-        throw new RuntimeException("landing failed") }),
-      // lower priority AND gated on a dep the failure strands, so it
-      // must never run on any interleaving
-      task("gated", Seq("boom"), 8.0, () => { ran.add("gated"); () }))
-    val e = intercept[RuntimeException] {
-      runWarmTasks(sc, tasks, workers = 2)
-    }
-    assert(e.getMessage == "landing failed")
-    assert(!ran.contains("gated"))
-  }
-
-  test("heavier ready tasks start before lighter ones (single worker)") {
-    val log = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val tasks = Seq(
-      task("light", Nil, 1.0, () => { log.add("light"); () }),
-      task("heavy", Nil, 10.0, () => { log.add("heavy"); () }))
-    runWarmTasks(sc, tasks, workers = 1)
-    val order = scala.jdk.CollectionConverters.ListHasAsScala(log).asScala.toSeq
-    assert(order == Seq("heavy", "light"))
-  }
-
-  test("a misspelled dependency fails before any task runs") {
     failAfter(30.seconds) {
-      val ran = new java.util.concurrent.atomic.AtomicInteger(0)
-      val tasks = Seq(
-        task("seed_grams", Nil, 2.0, () => { ran.incrementAndGet(); () }),
-        task("shared_runs", Seq("seed_gram"), 1.0, () => { ran.incrementAndGet(); () }))
-      val e = intercept[IllegalArgumentException](runWarmTasks(sc, tasks, workers = 2))
-      assert(e.getMessage.contains("shared_runs -> seed_gram"), e.getMessage)
-      assert(ran.get() == 0)
+      val ran = java.util.Collections.synchronizedSet(
+        new java.util.HashSet[String]())
+      val chains = Seq(
+        // the landing behind the failure in its own chain
+        Seq("boom" -> (() => { Thread.sleep(5); throw new RuntimeException("landing failed") }),
+          "after_boom" -> (() => ran.add("after_boom"))),
+        // one worker: this chain is queued behind the failing one
+        Seq("queued" -> (() => ran.add("queued"))))
+      val e = intercept[RuntimeException] {
+        Landing.buildAll(sc, chains, workers = 1)
+      }
+      assert(e.getMessage == "landing failed")
+      assert(ran.isEmpty, s"ran after the failure: $ran")
     }
   }
 
-  test("a dependency cycle fails before any task runs") {
+  test("chains start in declaration order (single worker)") {
     failAfter(30.seconds) {
-      val ran = new java.util.concurrent.atomic.AtomicInteger(0)
-      val tasks = Seq(
-        task("free", Nil, 3.0, () => { ran.incrementAndGet(); () }),
-        task("x", Seq("y"), 2.0, () => { ran.incrementAndGet(); () }),
-        task("y", Seq("x"), 1.0, () => { ran.incrementAndGet(); () }))
-      val e = intercept[IllegalArgumentException](runWarmTasks(sc, tasks, workers = 2))
-      assert(e.getMessage.contains("cycle through: x, y"), e.getMessage)
-      assert(ran.get() == 0)
+      val log = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[String]())
+      val chains = Seq("long_pole", "b", "c", "d").map(n => Seq(n -> (() => log.add(n))))
+      Landing.buildAll(sc, chains, workers = 1)
+      assert(logged(log) == Seq("long_pole", "b", "c", "d"))
     }
   }
 
@@ -110,20 +90,21 @@ class WarmSchedulerSpec extends SparkSpec with TimeLimits {
     failAfter(60.seconds) {
       val slowTag = "warm-spec-slow"
       def slowJobs = sc.statusTracker.getJobIdsForTag(slowTag).toSeq
-      val tasks = Seq(
+      val chains = Seq(
+        // declared first: a runner that awaits chains in declaration
+        // order instead of completion order blocks on it
         // 2 partitions × 200 rows × 200 ms: 40 s if nothing cancels it
-        task("slow", Nil, 9.0, () => {
+        Seq("slow" -> (() => {
           sc.addJobTag(slowTag)
           sc.parallelize(1 to 400, 2).map { x => Thread.sleep(200); x }.count()
-          ()
-        }),
-        task("boom", Nil, 1.0, () => {
+        })),
+        Seq("boom" -> (() => {
           val deadline = System.nanoTime() + 20e9.toLong
           while (slowJobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
           throw new RuntimeException("landing failed")
-        }))
+        })))
       val t0 = System.nanoTime()
-      val e = intercept[RuntimeException](runWarmTasks(sc, tasks, workers = 2))
+      val e = intercept[RuntimeException](Landing.buildAll(sc, chains, workers = 2))
       val seconds = (System.nanoTime() - t0) / 1e9
       assert(e.getMessage == "landing failed")
       assert(slowJobs.nonEmpty, "the sibling's job never started")
@@ -144,12 +125,12 @@ class WarmSchedulerSpec extends SparkSpec with TimeLimits {
       sc.setJobGroup("warm-spec-caller", "warm scheduler spec")
       try {
         val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val tasks = Seq(task("probe", Nil, 1.0, () => {
+        val chains = Seq(Seq("probe" -> (() => {
           sc.parallelize(Seq(1), 1)
             .map(_ => TaskContext.get().getLocalProperty("spark.jobGroup.id"))
             .collect().foreach(seen.add)
-        }))
-        runWarmTasks(sc, tasks, workers = 2)
+        })))
+        Landing.buildAll(sc, chains, workers = 2)
         assert(seen.size == 1 && seen.peek() == "warm-spec-caller", s"job group: $seen")
       } finally sc.clearJobGroup()
     }

@@ -22,7 +22,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    graft.queries.Citations.warmShared(spark, sfDir)
+    graft.queries.Citations.warmSharedTimed(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       try {

@@ -24,7 +24,7 @@ object ScanAudit {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val tables = graft.Tables.all
-    graft.queries.Citations.warmShared(spark, dir)
+    graft.queries.Citations.warmSharedTimed(spark, dir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, dir).queryExecution.executedPlan.toString
