@@ -19,7 +19,9 @@ class WarmSchedulerSpec extends SparkSpec with TimeLimits {
   private def logged(log: java.util.List[String]) =
     scala.jdk.CollectionConverters.ListHasAsScala(log).asScala.toSeq
 
-  test("every landing runs once, in chain order, and seconds come back in declaration order") {
+  // dependencies are the earlier links of a chain; the seconds come back
+  // in declaration order
+  test("all tasks run exactly once and dependencies complete first") {
     failAfter(30.seconds) {
       val log = java.util.Collections.synchronizedList(
         new java.util.ArrayList[String]())
