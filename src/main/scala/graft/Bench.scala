@@ -64,19 +64,9 @@ object Bench {
     val warmCpu = cpuSec() - warmC0
     val warmJit = jitSec() - warmJ0
 
-    // a query's surviving localCheckpoint blocks (the final rounds of
-    // its iterative operators) are dead once it finishes: every run
-    // replans and the shared landings are parquet files. Sweep ONLY
-    // those, blocking and outside the timed window. Dataset .cache()s
-    // stay: their CacheManager entries are session-wide, and killing
-    // their blocks forces every later matching plan through a rebuild
-    // (measured: t40 0.5 s → 15.8 s); intact caches are LRU-evictable.
-    val warmRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def sweepQueryRdds(): Unit =
-      spark.sparkContext.getPersistentRDDs.foreach { case (rddId, rdd) =>
-        if (!warmRdds.contains(rddId) && rdd.isCheckpointed)
-          rdd.unpersist(blocking = true)
-      }
+    // each query's checkpoint blocks go after its run, outside the
+    // timed window
+    val sweepQueryRdds = graft.ops.Checkpoints.sweeper(spark.sparkContext)
 
     /** One run's seconds, or the failure's first line. */
     def once(fn: (SparkSession, String) => DataFrame): Either[String, Run] = {

@@ -14,13 +14,8 @@ object Verify {
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // per-query storage sweep (the Bench hygiene, checkpoints only): a
-    // query's surviving localCheckpoint blocks are dead once its parquet
-    // is written; Dataset caches stay — killing blocks under a live
-    // CacheManager entry forces later matching plans through a dead
-    // InMemoryRelation rebuild (see Bench).
     graft.queries.Citations.warmSharedTimed(spark, sfDir)
-    val baseRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val sweep = graft.ops.Checkpoints.sweeper(spark.sparkContext)
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -28,10 +23,7 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        finally spark.sparkContext.getPersistentRDDs.foreach { case (rddId, rdd) =>
-          if (!baseRdds.contains(rddId) && rdd.isCheckpointed)
-            rdd.unpersist(blocking = false)
-        }
+        finally sweep()
       }
     }
     // JSON escaping via the shared helper: a tab or CR in builder-

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -23,4 +24,20 @@ object Checkpoints {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** A sweep for a query loop: each call unpersists, blocking, every
+    * checkpointed RDD that was not yet persisted when the sweep was
+    * made. A query's surviving localCheckpoint blocks (the final rounds
+    * of its iterative operators) are dead once it finishes, since every
+    * run replans and the shared landings are parquet files. Dataset
+    * `.cache()`s stay: their CacheManager entries are session-wide, and
+    * killing their blocks forces every later matching plan through a
+    * rebuild (measured: t40 0.5 s → 15.8 s); intact caches are
+    * LRU-evictable. */
+  def sweeper(sc: SparkContext): () => Unit = {
+    val kept = sc.getPersistentRDDs.keySet.toSet
+    () => sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!kept(id) && rdd.isCheckpointed) rdd.unpersist(blocking = true)
+    }
+  }
 }

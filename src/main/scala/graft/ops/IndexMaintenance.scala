@@ -31,6 +31,22 @@ import org.apache.spark.sql.functions._
   */
 object IndexMaintenance {
 
+  /** The arrival slice every growth, drift and compaction query splits
+    * the corpus on: rows whose `id` is 7 mod 10 arrive, the rest is the
+    * snapshot the ingest boots from. */
+  def arrival(id: String = "doc_id"): Column = col(id) % 10 === 7
+
+  /** t87's forget slice: documents whose hx('forget:'‖doc_id) is 0
+    * mod 29 are retracted. */
+  val forgotten: Column = pmod(TextOps.hx(concat(lit("forget:"),
+    col("doc_id").cast("string"))), lit(29L)) === 0
+
+  /** Per-`id` XOR of `hash` over `df`'s rows, named `name`: the
+    * order-free signature the growth proofs compare a grown index
+    * against its batch rebuild with. */
+  def xorSig(df: DataFrame, id: String, hash: Column, name: String): DataFrame =
+    df.select(col(id), hash.as("h")).groupBy(col(id)).agg(bit_xor(col("h")).as(name))
+
   /** Logical compaction: the live rows of a fragmented index — delta
     * appends retained, every tombstoned id's rows dropped.
     *

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{DedupOps, GraphOps, Multimodal}
+import graft.ops.IndexMaintenance.{arrival, xorSig}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
@@ -670,7 +671,7 @@ object Pipelines {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       import graft.ops.DedupOps
       import graft.queries.TrainingData
-      val isNew = col("doc_id") % 10 === 7
+      val isNew = arrival()
       val stream = StreamOps.nearDupGate(s, dir,
           arriving = isNew, corpusKeep = !isNew,
           sinkName = "stream_gate_equiv")
@@ -844,10 +845,8 @@ object Pipelines {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       import graft.ops.DedupOps
       import graft.queries.TrainingData
-      val isNew = col("doc_id") % 10 === 7
-      val stream = StreamOps.substringGate(s, dir,
-          arriving = isNew, corpusKeep = !isNew,
-          sinkName = "stream_substring_gate_equiv")
+      val isNew = arrival()
+      val stream = StreamOps.substringGate(s, dir)
         .select(col("doc_id"), col("n_candidates").as("n_stream"))
       val batch = DedupOps.runGateCandidates(
           Tables(s, dir, "documents").filter(isNew),
@@ -905,25 +904,24 @@ object Pipelines {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       import graft.ops.{DedupOps, TextOps}
       import graft.queries.TrainingData
-      val isNew = col("doc_id") % 10 === 7
+      val isNew = arrival()
       val (gate, grownBands, grownSh) = StreamOps.growNearDupIndex(s, dir)
       val bandH = TextOps.hx(concat_ws(":",
         col("band").cast("string"), col("band_key")))
       val shH = TextOps.hx(col("shingle"))
-      def xorSig(df: org.apache.spark.sql.DataFrame,
-          h: org.apache.spark.sql.Column, name: String) =
-        df.filter(isNew).select(col("doc_id"), h.as("h"))
-          .groupBy(col("doc_id")).agg(expr("bit_xor(h)").as(name))
       val rebuildBands = DedupOps.lshBands(TrainingData.docMinhashSigs(s, dir),
         "doc_id", TrainingData.MinhashBands,
         TrainingData.MinhashK / TrainingData.MinhashBands)
       Tables(s, dir, "documents").filter(isNew).select(col("doc_id"))
         .join(gate, Seq("doc_id"), "left")
-        .join(xorSig(grownBands, bandH, "bands_sig_grown"), Seq("doc_id"), "left")
-        .join(xorSig(rebuildBands, bandH, "bands_sig_rebuild"), Seq("doc_id"), "left")
-        .join(xorSig(grownSh, shH, "sh_sig_grown"), Seq("doc_id"), "left")
-        .join(xorSig(TrainingData.docShingles(s, dir), shH, "sh_sig_rebuild"),
+        .join(xorSig(grownBands.filter(isNew), "doc_id", bandH, "bands_sig_grown"),
           Seq("doc_id"), "left")
+        .join(xorSig(rebuildBands.filter(isNew), "doc_id", bandH, "bands_sig_rebuild"),
+          Seq("doc_id"), "left")
+        .join(xorSig(grownSh.filter(isNew), "doc_id", shH, "sh_sig_grown"),
+          Seq("doc_id"), "left")
+        .join(xorSig(TrainingData.docShingles(s, dir).filter(isNew), "doc_id", shH,
+          "sh_sig_rebuild"), Seq("doc_id"), "left")
         .select(col("doc_id"), (col("doc_id") % 3).as("batch"),
           coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
           col("bands_sig_grown"), col("bands_sig_rebuild"),
@@ -962,18 +960,16 @@ object Pipelines {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       import graft.ops.TextOps
       import graft.queries.TrainingData
-      val isNew = col("doc_id") % 10 === 7
+      val isNew = arrival()
       val (gate, grownSeeds) = StreamOps.growSeedIndex(s, dir)
       val seedH = TextOps.hx(concat_ws(":",
         col("pos").cast("string"), col("gram").cast("string")))
-      def xorSig(df: org.apache.spark.sql.DataFrame, name: String) =
-        df.filter(isNew).select(col("doc_id"), seedH.as("h"))
-          .groupBy(col("doc_id")).agg(expr("bit_xor(h)").as(name))
       Tables(s, dir, "documents").filter(isNew).select(col("doc_id"))
         .join(gate, Seq("doc_id"), "left")
-        .join(xorSig(grownSeeds, "seed_sig_grown"), Seq("doc_id"), "left")
-        .join(xorSig(TrainingData.seedGramsLanded(s, dir), "seed_sig_rebuild"),
+        .join(xorSig(grownSeeds.filter(isNew), "doc_id", seedH, "seed_sig_grown"),
           Seq("doc_id"), "left")
+        .join(xorSig(TrainingData.seedGramsLanded(s, dir).filter(isNew), "doc_id", seedH,
+          "seed_sig_rebuild"), Seq("doc_id"), "left")
         .select(col("doc_id"), (col("doc_id") % 3).as("batch"),
           coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
           col("seed_sig_grown"), col("seed_sig_rebuild"))
@@ -1075,18 +1071,16 @@ object Pipelines {
          |ORDER BY d.vec_id""".stripMargin) { (s, dir) =>
       import graft.ops.TextOps
       import graft.queries.TrainingData
-      val isNew = col("vec_id") % 10 === 7
+      val isNew = arrival("vec_id")
       val (gate, grownB) = StreamOps.growEmbIndex(s, dir)
       val h = TextOps.hx(col("bucket").cast("string"))
-      def xorSig(df: org.apache.spark.sql.DataFrame, name: String) =
-        df.filter(isNew).select(col("vec_id"), h.as("h"))
-          .groupBy(col("vec_id")).agg(expr("bit_xor(h)").as(name))
       Tables(s, dir, "embeddings").filter(isNew).select(col("vec_id"))
         .join(gate, Seq("vec_id"), "left")
-        .join(xorSig(grownB, "bkt_sig_grown"), Seq("vec_id"), "left")
+        .join(xorSig(grownB.filter(isNew), "vec_id", h, "bkt_sig_grown"),
+          Seq("vec_id"), "left")
         .join(xorSig(TrainingData.embBuckets(s, dir,
-            TrainingData.NearDupLshTables, TrainingData.NearDupLshPlanes),
-            "bkt_sig_rebuild"),
+            TrainingData.NearDupLshTables, TrainingData.NearDupLshPlanes).filter(isNew),
+            "vec_id", h, "bkt_sig_rebuild"),
           Seq("vec_id"), "left")
         .select(col("vec_id"), (col("vec_id") % 3).as("batch"),
           coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{DedupOps, TextOps, VectorOps}
+import graft.ops.IndexMaintenance.{arrival, forgotten, xorSig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -715,7 +716,7 @@ object TrainingData {
     * in-corpus scorer derives, restricted to the corpus slice. */
   private[graft] def lmUnigrams(s: SparkSession, dir: String): DataFrame =
     graft.Landing.parquet(s, dir, "lm_unigrams.parquet")(
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 =!= 7)
+      Tables(s, dir, "documents").filter(!arrival())
         .select(explode(TextOps.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c1")))
 
@@ -732,7 +733,7 @@ object TrainingData {
 
   private[graft] def lmBigrams(s: SparkSession, dir: String): DataFrame =
     graft.Landing.parquet(s, dir, "lm_bigrams.parquet") {
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 =!= 7)
+      Tables(s, dir, "documents").filter(!arrival())
         .select(TextOps.tokens(col("text")).as("w"))
         .select(explode(bigramStructs(col("w"))).as("b"))
         .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
@@ -2714,7 +2715,7 @@ object TrainingData {
          |LEFT JOIN agg a ON a.new_id = d.doc_id
          |LEFT JOIN dup p ON p.new_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      val isNew = col("doc_id") % 10 === 7
+      val isNew = arrival()
       DedupOps.incrementalNearDup(
           Tables(s, dir, "documents").filter(isNew), "doc_id", col("text"),
           docShingles(s, dir).filter(!isNew),
@@ -4189,7 +4190,7 @@ object TrainingData {
         |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 7) d
         |LEFT JOIN v ON v.arr_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      val isNew = col("doc_id") % 10 === 7
+      val isNew = arrival()
       val docs = Tables(s, dir, "documents")
       DedupOps.runAdmission(
           docs.filter(isNew), docs.filter(!isNew),
@@ -4439,7 +4440,7 @@ object TrainingData {
       val ch = VectorOps.cellAssignmentsScored(kmeansBooks(s, dir),
         Tables(s, dir, "embeddings"), "vec_id", "embedding")
       val sl = ch.withColumn("slice",
-        when(col("vec_id") % 10 === 7, "arrivals").otherwise("corpus"))
+        when(arrival("vec_id"), "arrivals").otherwise("corpus"))
       val tot = sl.groupBy(col("slice")).agg(count(lit(1)).as("n_slice"))
       sl.groupBy(col("slice"), col("cell"))
         .agg(count(lit(1)).as("n_vecs"),
@@ -4491,11 +4492,9 @@ object TrainingData {
          |FROM cc JOIN cs USING (cluster_id)
          |ORDER BY doc_id""".stripMargin
            .replaceFirst("^WITH ", "WITH RECURSIVE ")) { (s, dir) =>
-      val forget = pmod(TextOps.hx(concat(lit("forget:"),
-        col("doc_id").cast("string"))), lit(29L)) === 0
       val landed = dedupClusters(s, dir)
       val out = DedupOps.retractFromClusters(landed,
-        landed.filter(forget).select(col("doc_id")), "doc_id",
+        landed.filter(forgotten).select(col("doc_id")), "doc_id",
         docShingles(s, dir), docMinhashSigs(s, dir),
         threshold = 0.8, bands = MinhashBands)
       out.join(out.groupBy(col("cluster_id").as("ci"))
@@ -4542,29 +4541,24 @@ object TrainingData {
       import graft.ops.IndexMaintenance
       val (_, grownBands, grownSh) =
         graft.streaming.StreamOps.growNearDupIndex(s, dir)
-      val forget = pmod(TextOps.hx(concat(lit("forget:"),
-        col("doc_id").cast("string"))), lit(29L)) === 0
-      val tomb = Tables(s, dir, "documents").filter(forget).select(col("doc_id"))
+      val tomb = Tables(s, dir, "documents").filter(forgotten).select(col("doc_id"))
       val bandH = TextOps.hx(concat_ws(":",
         col("band").cast("string"), col("band_key")))
       val shH = TextOps.hx(col("shingle"))
-      def xorSig(df: DataFrame, h: org.apache.spark.sql.Column, name: String) =
-        df.select(col("doc_id"), h.as("h"))
-          .groupBy(col("doc_id")).agg(expr("bit_xor(h)").as(name))
       val rebuildBands = DedupOps.lshBands(docMinhashSigs(s, dir), "doc_id",
-        MinhashBands, MinhashK / MinhashBands).filter(!forget)
-      Tables(s, dir, "documents").filter(!forget)
-        .select(col("doc_id"), (col("doc_id") % 10 === 7).as("is_arrival"))
+        MinhashBands, MinhashK / MinhashBands).filter(!forgotten)
+      Tables(s, dir, "documents").filter(!forgotten)
+        .select(col("doc_id"), arrival().as("is_arrival"))
         .join(IndexMaintenance.compact(grownSh, tomb, "doc_id")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingle_rows")),
           Seq("doc_id"))
         .join(xorSig(IndexMaintenance.compact(grownBands, tomb, "doc_id"),
-          bandH, "bands_sig_compacted"), Seq("doc_id"))
-        .join(xorSig(rebuildBands, bandH, "bands_sig_rebuild"), Seq("doc_id"))
+          "doc_id", bandH, "bands_sig_compacted"), Seq("doc_id"))
+        .join(xorSig(rebuildBands, "doc_id", bandH, "bands_sig_rebuild"), Seq("doc_id"))
         .join(xorSig(IndexMaintenance.compact(grownSh, tomb, "doc_id"),
-          shH, "sh_sig_compacted"), Seq("doc_id"))
-        .join(xorSig(docShingles(s, dir).filter(!forget), shH, "sh_sig_rebuild"),
-          Seq("doc_id"))
+          "doc_id", shH, "sh_sig_compacted"), Seq("doc_id"))
+        .join(xorSig(docShingles(s, dir).filter(!forgotten), "doc_id", shH,
+          "sh_sig_rebuild"), Seq("doc_id"))
         .select(col("doc_id"), col("is_arrival"), col("n_shingle_rows"),
           col("bands_sig_compacted"), col("bands_sig_rebuild"),
           col("sh_sig_compacted"), col("sh_sig_rebuild"))
@@ -4608,14 +4602,11 @@ object TrainingData {
       import graft.ops.IndexMaintenance
       val (_, grownBands, grownSh) =
         graft.streaming.StreamOps.growNearDupIndex(s, dir)
-      val forget = pmod(TextOps.hx(concat(lit("forget:"),
-        col("doc_id").cast("string"))), lit(29L)) === 0
-      val tomb = Tables(s, dir, "documents").filter(forget).select(col("doc_id"))
-      val isDelta = col("doc_id") % 10 === 7
+      val tomb = Tables(s, dir, "documents").filter(forgotten).select(col("doc_id"))
       IndexMaintenance.fragmentationCard(grownBands, tomb, "doc_id",
-          isDelta, "bands")
+          arrival(), "bands")
         .unionByName(IndexMaintenance.fragmentationCard(grownSh, tomb, "doc_id",
-          isDelta, "shingles"))
+          arrival(), "shingles"))
         .orderBy(col("grain"))
     },
 
@@ -4651,7 +4642,7 @@ object TrainingData {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       val (gate, grownBands, _) =
         graft.streaming.StreamOps.growNearDupIndex(s, dir)
-      val isNew = col("doc_id") % 10 === 7
+      val isNew = arrival()
       val arr = grownBands.filter(isNew)
         .select(col("doc_id"), col("batch_id"), col("band"), col("band_key"))
       val idx = grownBands.select(col("doc_id").as("partner_id"),
@@ -4718,7 +4709,7 @@ object TrainingData {
         |FROM sl GROUP BY slice ORDER BY slice""".stripMargin) { (s, dir) =>
       lmDriftTail(lmScoredMicro(s, dir, Tables(s, dir, "documents"))
         .withColumn("slice",
-          when(col("doc_id") % 10 === 7, "arrivals").otherwise("corpus")))
+          when(arrival(), "arrivals").otherwise("corpus")))
         .orderBy(col("slice"))
     },
 
@@ -4773,9 +4764,7 @@ object TrainingData {
          |FROM c""".stripMargin) { (s, dir) =>
       val (_, grownBands, _) =
         graft.streaming.StreamOps.growNearDupIndex(s, dir)
-      val forget = pmod(TextOps.hx(concat(lit("forget:"),
-        col("doc_id").cast("string"))), lit(29L)) === 0
-      val tomb = Tables(s, dir, "documents").filter(forget).select(col("doc_id"))
+      val tomb = Tables(s, dir, "documents").filter(forgotten).select(col("doc_id"))
       graft.ops.IndexMaintenance.gateRouteCard(grownBands, tomb, "doc_id")
     },
 

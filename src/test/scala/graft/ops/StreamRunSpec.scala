@@ -14,8 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.concurrent.{Eventually, Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
 
-/** `StreamOps.runToTable`: concurrent runs overlap, the caller's conf
-  * comes back unchanged, and every state operator runs one partition. */
+/** `StreamOps.runToTable` and `StreamOps.runEach`: concurrent runs
+  * overlap, the caller's conf comes back unchanged, every stream runs
+  * under `runConf`, and every state operator runs one partition. */
 class StreamRunSpec extends SparkSpec with TimeLimits with Eventually {
   import StreamRunSpec._
 
@@ -90,6 +91,47 @@ class StreamRunSpec extends SparkSpec with TimeLimits with Eventually {
         }
       }
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("runEach: each batch runs under runConf, conf restored; a blocked step does not hold up a runToTable run") {
+    val before = runKeys.map(k => k -> spark.conf.getOption(k))
+    val inRun = StreamOps.runConf.map { case (k, v) => k -> Some(v) }
+    assert(before != inRun, "the caller's session must differ from runConf to show it applied")
+    val serialWindowed = rows(StreamOps.windowedCounts(spark, dir))
+
+    val seen = new AtomicReference[Seq[(String, Option[String])]]()
+    val stepEntered = new CountDownLatch(1)
+    val stepGate = new CountDownLatch(1)
+    val done = new AtomicReference[Option[Throwable]]()
+    val a = new Thread(() => done.set(
+      try {
+        StreamOps.runEach(spark, StreamOps.eventStream(spark, dir).select(col("user_id"))) {
+          (batch, _) =>
+            seen.compareAndSet(null, runKeys.map(k => k -> batch.sparkSession.conf.getOption(k)))
+            stepEntered.countDown()
+            stepGate.await()
+        }
+        None
+      } catch { case t: Throwable => Some(t) }))
+    a.start()
+    // bounds the test if the runToTable run cannot start until the step ends
+    val release = new Thread(() =>
+      try { Thread.sleep(120000); stepGate.countDown() }
+      catch { case _: InterruptedException => () })
+    release.setDaemon(true)
+    release.start()
+    val overlapped = try {
+      assert(stepEntered.await(60, TimeUnit.SECONDS), "the runEach step never ran")
+      failAfter(Span(60, Seconds)) { rows(StreamOps.windowedCounts(spark, dir)) }
+    } finally {
+      stepGate.countDown()
+      release.interrupt()
+      a.join()
+    }
+    done.get.foreach(t => throw t)
+    assert(overlapped == serialWindowed)
+    assert(seen.get == inRun)
+    assert(runKeys.map(k => k -> spark.conf.getOption(k)) == before)
   }
 }
 
