@@ -6,7 +6,7 @@ import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionExce
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** The land-once policy. Each derived artifact (a parquet landing, a
   * text-format landing, a staged stream feed, a growth run's output
@@ -15,8 +15,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of a production run. Landings live in [[TempTrees.scratch]] dirs,
   * removed at JVM exit. [[buildAll]] is the one bounded runner that
   * builds a set of landings up front (the warm build, the raw-table
-  * re-land). */
+  * re-land), and [[writer]] is the one parquet encoding every landed
+  * file uses. */
 object Landing {
+
+  /** The writer of every parquet file the program lands: zstd, not
+    * Spark's default snappy. A landing is written once and scanned by
+    * many queries, so its bytes are worth the encoder's time; the warm
+    * build lands 18% fewer bytes than with snappy (SCALE.md, "Landing
+    * encoding (measured)"). The codec is a constant, not a setting:
+    * one encoding for every landing, growth dir and index table. */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.option("compression", "zstd")
 
   /** A land-once memo. `apply` installs an empty future under the key,
     * so the map's bin lock is held only for the install; the installing
@@ -79,7 +89,7 @@ object Landing {
     * minhash_sigs). Bench charges the landings it builds up front to its
     * warm line, not to whichever query reads them first. */
   def parquet(s: SparkSession, dir: String, name: String)(df: => DataFrame): DataFrame =
-    s.read.parquet(path(landed, dir, name)(df.write.parquet(_)))
+    s.read.parquet(path(landed, dir, name)(writer(df).parquet(_)))
 
   /** Landing builds that run in order on one worker; a build reads its
     * inputs through their memos, so each sits behind its inputs. */
@@ -144,7 +154,7 @@ object Landing {
       val tmp = TempTrees.scratch("graft-feed-write")
       batches.zipWithIndex.foreach { case (df, i) =>
         val out = tmp.resolve(s"out_$i")
-        df.coalesce(1).write.parquet(out.toString)
+        writer(df.coalesce(1)).parquet(out.toString)
         val part = {
           val s = Files.list(out)
           try s.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()

@@ -67,7 +67,7 @@ object Tables {
     * every narrow map fused onto it (tokenize, shingle, hash, the
     * wikitext parse) runs as ONE task against the raw file. region and
     * nation stay raw: they are broadcast dimensions. */
-  private val relandable = Seq("documents", "lineitem", "orders", "events",
+  private[graft] val relandable = Seq("documents", "lineitem", "orders", "events",
     "customer", "supplier", "part", "embeddings")
 
   /** Land a multi-file copy of each large raw table (warm-line cost,
@@ -85,7 +85,7 @@ object Tables {
     // time of the longest one
     Landing.buildAll(spark.sparkContext, relandable.map { name =>
       Seq(name -> (() => Landing.path(relanded, sfDir, s"$name.parquet")(
-        rawLoad(spark, sfDir, name).repartition(parts).write.parquet(_))))
+        Landing.writer(rawLoad(spark, sfDir, name).repartition(parts)).parquet(_))))
     }, relandable.size)
     ()
   }

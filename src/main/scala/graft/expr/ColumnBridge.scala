@@ -451,8 +451,9 @@ case class GramsF(child: Expression, n: Int)
   * (tables, planes, dims) and cached; per plane the projection is the
   * ascending-index FLOAT→DOUBLE dot (the DotProductF sequence), sign
   * bit j set iff ≥ 0 or NaN, bucket = sign bits + (table << planes).
-  * Values are bit-identical to the `array(lshBucket(t))` literal-plane
-  * expression tree it replaces (Spark's GreaterThanOrEqual orders NaN
+  * Values are bit-identical to the literal-plane expression tree it
+  * replaces (`ReferenceForms.lshBucket`, test scope; Spark's
+  * GreaterThanOrEqual orders NaN
   * above every number, so a NaN projection sets the bit there too),
   * while collapsing a tables×planes-subexpression tree — re-planned and
   * re-codegen'd by every consumer query — into one call. */
@@ -662,8 +663,9 @@ case class ExtractTemplatesGen(child: Expression)
   * (reference: `wikipedia_page.py:297-301` — class→news_class, alias
   * fold, dash→underscore, in that order; collisions keep the LAST
   * value). KEY ORDER on collision is the engine's own contract, shared
-  * with [[graft.wcd.Extract.fixParamsUdf]]: the renamed key moves to
-  * the END (LinkedHashMap remove-then-put). This INTENTIONALLY differs
+  * with the Scala UDF it replaced (`ReferenceForms.fixParamsUdf`,
+  * test scope): the renamed key moves to the END (LinkedHashMap
+  * remove-then-put). This INTENTIONALLY differs
   * from the reference, whose fresh-dict rebuild keeps the colliding
   * key at its FIRST position — downstream consumers key by name, never
   * by position, so the divergence is observable only in raw map dumps

@@ -715,9 +715,9 @@ object DedupOps {
 
   /** SimHash signature: frequency-weighted sign-sum of token hash
     * bits, as the native one-pass in-row kernel (`simhash_f`) — a
-    * narrow map over the documents scan. The [[simhashAgg]] form below
-    * is the declarative contract the kernel is spec-asserted bit-equal
-    * against; at 100 TB the aggregation form shuffles one row per
+    * narrow map over the documents scan. The declarative aggregation
+    * form (`ReferenceForms.simhashAgg`, test scope) is the contract the kernel is
+    * spec-asserted bit-equal against; at 100 TB it shuffles one row per
     * TOKEN (corpus token count) with `bits` aggregation columns, while
     * the kernel shuffles nothing. Returns (id, simhash LONG).
     *
@@ -728,23 +728,6 @@ object DedupOps {
   def simhash(docs: DataFrame, id: String, text: Column, bits: Int = 48): DataFrame =
     docs.filter(text.isNotNull)
       .select(col(id), graft.expr.VectorExprs.simhashF(text, bits).as("simhash"))
-
-  /** The explode → one partial-aggregated groupBy (`bits` SUMs) → bit
-    * reassembly form of [[simhash]] — kept as the readable spec
-    * reference (the minhashSigsF/shotCountF precedent): integer ±1
-    * vote sums commute, so kernel ≡ aggregation on every input. */
-  private[graft] def simhashAgg(docs: DataFrame, id: String, text: Column,
-      bits: Int = 48): DataFrame = {
-    val tok = docs.select(col(id), explode(tokens(text)).as("tok"))
-      .withColumn("h", hx(col("tok")))
-    val sums = (0 until bits).map(i =>
-      sum(shiftright(col("h"), i).bitwiseAND(lit(1L)) * lit(2L) - lit(1L)).as(s"b_$i"))
-    val agg = tok.groupBy(col(id)).agg(sums.head, sums.tail: _*)
-    val sig = (0 until bits).map(i =>
-      when(col(s"b_$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    agg.select(col(id), sig.as("simhash"))
-  }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist, found via
     * byte-band equi-joins (pigeonhole over `bands` bands guarantees

@@ -72,8 +72,8 @@ object IndexMaintenance {
   def writeCompacted(index: DataFrame, table: String, buckets: Int,
       layoutCols: String*): Unit = {
     require(layoutCols.nonEmpty, "compaction layout needs >=1 key column")
-    index.repartition(buckets, layoutCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
+    graft.Landing.writer(index.repartition(buckets, layoutCols.map(col): _*))
+      .mode(SaveMode.Overwrite)
       .bucketBy(buckets, layoutCols.head, layoutCols.tail: _*)
       .sortBy(layoutCols.head, layoutCols.tail: _*)
       .format("parquet").saveAsTable(table)

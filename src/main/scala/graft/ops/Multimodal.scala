@@ -150,7 +150,8 @@ object Multimodal {
     * Runs as the native codegen kernel (`shot_count_f`, one O(n) pass
     * over the UTF-8 PAYLOAD BYTES — the same representation
     * [[shotBoundaries]] frames, so the two agree on EVERY input). The
-    * declarative [[shotCountColHof]] form below is the readable
+    * declarative HOF form (`ReferenceForms.shotCountColHof`, test
+    * scope) is the readable
     * contract the kernel is spec-asserted against; that HOF form is
     * CHARACTER-indexed, so kernel ≡ HOF holds on the ASCII corpus
     * contract (every codepoint < 128 — the synthetic corpus). The
@@ -222,35 +223,6 @@ object Multimodal {
           .cast("long").as("max_segment_frames"))
       .withColumn("voiced_ratio", graft.ops.TextOps.round6p(
         col("voiced_frames").cast("double") / col("n_frames").cast("double")))
-  }
-
-  /** The declarative HOF form of [[shotCountCol]] (frame levels via
-    * `transform`, boundary flags via `zip_with`, one `aggregate` fold)
-    * — kept as the spec reference the native kernel is asserted
-    * bit-equal against (the minhashSigsF precedent: the HOF chain is
-    * the readable contract, the codegen expression is the hot path; on
-    * the round-11 sweep the interpreted HOF + O(position) per-char
-    * substring made s21 the suite's slowest kernel). */
-  private[graft] def shotCountColHof(text: Column, frameSize: Int = 16,
-      levelJump: Int = 12): Column = {
-    val n = length(text)
-    // integer ceil-div via floor on doubles: all values are tiny
-    // positive ints (frame counts, per-frame byte sums ≤ 16·255), far
-    // below any double-precision boundary
-    val nf = floor((n + lit(frameSize - 1)).cast("double") / lit(frameSize.toDouble))
-      .cast("int")
-    val levels = transform(sequence(lit(0), nf - 1), f => {
-      val start = f * frameSize
-      val flen = least(lit(frameSize), n - start)
-      val byteSum = aggregate(sequence(lit(1), flen), lit(0L),
-        (acc, i) => acc + ascii(text.substr(start + i, lit(1))))
-      floor(byteSum.cast("double") / flen.cast("double")).cast("long")
-    })
-    val brks = zip_with(
-      slice(levels, lit(1), nf - 1), slice(levels, lit(2), nf - 1),
-      (a, b) => when(abs(b - a) >= lit(levelJump), 1L).otherwise(lit(0L)))
-    when(nf > 0, aggregate(brks, lit(1L), (acc, x) => acc + x))
-      .otherwise(lit(0L))
   }
 
   /** Integer 8×8 DCT-II perceptual hash over the payload bytes — the

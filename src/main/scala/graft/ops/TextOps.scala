@@ -63,20 +63,10 @@ object TextOps {
     * Sub-n documents yield an empty array (NOT a descending `sequence`). */
   def shingles(toks: Column, n: Int = 3): Column =
     // r15: one native kernel call per row (grams_f) — bit-identical to
-    // the transform/sequence/concat_ws composition below (spec:
-    // ExprPropertySpec), without evaluating an interpreted
+    // the transform/sequence/concat_ws composition it replaced
+    // (ReferenceForms.shinglesDeclarative, spec: ExprPropertySpec), without evaluating an interpreted
     // higher-order lambda with n element_at probes per position
     graft.expr.VectorExprs.gramsF(toks, n)
-
-  /** The declarative composition [[shingles]] replaced — kept as the
-    * spec's equivalence reference. */
-  private[graft] def shinglesDeclarative(toks: Column, n: Int = 3): Column = {
-    val idx = sequence(lit(1), size(toks) - lit(n - 1))
-    val gram = (i: Column) =>
-      concat_ws(" ", (0 until n).map(o => element_at(toks, i + lit(o))): _*)
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(idx, gram))
-  }
 
   // ------------------------------------------------------------- quality
 

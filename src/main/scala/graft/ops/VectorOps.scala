@@ -217,30 +217,11 @@ object VectorOps {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Deterministic pseudo-random hyperplane component p_j[i] ∈ [-1, 1]:
-    * derived from the shared hash family, so signatures are reproducible
-    * across engines and runs (no RNG state). Computed at PLAN TIME —
-    * the plane matrix is a literal, not a per-row md5 storm. */
-  private def planeComponent(j: Int, i: Int): Float =
-    (((TextOps.hxScala(s"$j:$i") % 2001L) - 1000L).toDouble / 1000.0).toFloat
-
-  /** Sign-random-projection bucket key for one LSH table: `planes` sign
-    * bits from literal hyperplanes of family `table`, projected with the
-    * native dot expression. Narrow map per row. */
-  def lshBucket(vec: Column, table: Int, planes: Int, dims: Int = 64): Column = {
-    val sigs = (0 until planes).map { j =>
-      val plane = Array.tabulate(dims)(i => planeComponent(table * planes + j, i))
-      when(dot(vec, typedLit(plane)) >= 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    sigs.reduce(_ + _).+(lit(table.toLong << planes)) // domain-separate tables
-  }
-
-  /** All `tables` bucket keys for a vector, as an array column — the
-    * native one-call kernel (r15): bit-identical to
-    * `array(lshBucket(t) …)` (spec: VectorOpsSpec) without the
-    * tables×planes-subexpression tree every consumer query re-plans
-    * and re-codegens. [[lshBucket]] stays as the declarative
-    * single-table reference the spec cross-checks against. */
+  /** All `tables` sign-random-projection bucket keys for a vector, as
+    * an array column — the native one-call kernel (r15): bit-identical
+    * to an array of per-table literal-plane expression trees
+    * (`ReferenceForms.lshBucket`, spec: VectorOpsSpec) without the tables×planes-subexpression tree every
+    * consumer query re-plans and re-codegens. */
   def lshBuckets(vec: Column, tables: Int, planes: Int): Column =
     graft.expr.VectorExprs.lshBucketsF(vec, tables, planes, 64)
 

@@ -34,16 +34,16 @@ object StreamOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming source over the events parquet (file-source micro-batches
-    * stand in for the SSE/Kafka feed). The file source requires a
-    * DIRECTORY to monitor; the test table is a single file, so stage a
-    * symlink to it in a temp dir — zero-copy, and the same shape as a
-    * landing-directory ingest layout in production. */
   /** Scratch dirs staged once per key and reused across every
     * Verify/Bench/test invocation in the JVM: source symlinks, empty
     * feeds, synthesized and sliced feeds, the streamed hash index. */
   private val staged = new graft.Landing.Memo[java.nio.file.Path]
 
+  /** Streaming source over the events parquet (file-source micro-batches
+    * stand in for the SSE/Kafka feed). The file source requires a
+    * DIRECTORY to monitor; the test table is a single file, so stage a
+    * symlink to it in a temp dir — zero-copy, and the same shape as a
+    * landing-directory ingest layout in production. */
   private def stagedDir(sfDir: String, table: String): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
     // absolute: a relative link target resolves against the link's own
@@ -448,13 +448,19 @@ object StreamOps {
     // watermark-less state store whose key space never shrinks on a
     // continuous ingest. The set state is bounded by each doc's MATCHED
     // corpus ids (candidates, not the corpus).
-    val agg = streamBands.join(corpusBands, Seq("band", "band_key"))
-      .filter(col("corpus_id") =!= col("doc_id"))
-      .select(col("doc_id"), col("corpus_id"))
-      .groupBy(col("doc_id"))
-      .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_candidates"))
-    runToTable(spark, agg, sinkName, "complete")
+    runToTable(spark, candidateCounts(streamBands, corpusBands, Seq("band", "band_key")),
+      sinkName, "complete")
   }
+
+  /** Per arriving `id`: the number of distinct `corpus_id` partners
+    * that share a `keys` value with it, self-matches dropped. The one
+    * candidate rollup of the streamed gates and the growth steps. */
+  private def candidateCounts(arr: DataFrame, corpus: DataFrame, keys: Seq[String],
+      id: String = "doc_id"): DataFrame =
+    arr.join(corpus, keys)
+      .filter(col("corpus_id") =!= col(id))
+      .groupBy(col(id))
+      .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_candidates"))
 
   /** The in-row stride-aligned seed-gram key array (hx-hashed 10-grams
     * at positions 0, 10, 20, …) — the stateless per-row kernel
@@ -486,13 +492,10 @@ object StreamOps {
     val corpusSeeds = graft.queries.TrainingData.seedGramsLanded(spark, sfDir)
       .filter(!isNew)
       .select(col("doc_id").as("corpus_id"), col("gram"))
-    val agg = docStream(spark, sfDir).filter(isNew)
+    val arr = docStream(spark, sfDir).filter(isNew)
       .select(col("doc_id"), explode(strideSeedsCol(col("text"))).as("gram"))
-      .join(corpusSeeds, "gram")
-      .filter(col("corpus_id") =!= col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_candidates"))
-    runToTable(spark, agg, "stream_substring_gate_equiv", "complete")
+    runToTable(spark, candidateCounts(arr, corpusSeeds, Seq("gram")),
+      "stream_substring_gate_equiv", "complete")
   }
 
   /** Run a streaming DataFrame to completion (AvailableNow) into a
@@ -941,15 +944,15 @@ object StreamOps {
     val grown = spark.read.parquet(bandsDir)
       .filter(col("batch_id") < batchId)
       .select(col("doc_id").as("corpus_id"), col("band"), col("band_key"))
-    bk.join(grown, Seq("band", "band_key"))
-      .filter(col("corpus_id") =!= col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_candidates"))
-      .write.mode("overwrite").parquet(s"$gateDir/batch_id=$batchId")
-    bk.write.mode("overwrite").parquet(s"$bandsDir/batch_id=$batchId")
-    DedupOps.shingleTable(batch, "doc_id", col("text"))
-      .write.mode("overwrite").parquet(s"$shinglesDir/batch_id=$batchId")
+    landVersion(candidateCounts(bk, grown, Seq("band", "band_key")), gateDir, batchId)
+    landVersion(bk, bandsDir, batchId)
+    landVersion(DedupOps.shingleTable(batch, "doc_id", col("text")), shinglesDir, batchId)
   }
+
+  /** Lands `df` as version `batchId` of a grown dir, in overwrite mode:
+    * a retried batch rewrites its own `batch_id=` leaf. */
+  private def landVersion(df: DataFrame, dir: String, batchId: Long): Unit =
+    graft.Landing.writer(df).mode("overwrite").parquet(s"$dir/batch_id=$batchId")
 
   /** One ingest step of substring-seed index growth: gate `batch`'s
     * in-row stride seeds against the CURRENT grown seed index (every
@@ -965,13 +968,9 @@ object StreamOps {
     val grown = spark.read.parquet(seedsDir)
       .filter(col("batch_id") < batchId)
       .select(col("doc_id").as("corpus_id"), col("gram"))
-    arr.join(grown, "gram")
-      .filter(col("corpus_id") =!= col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_candidates"))
-      .write.mode("overwrite").parquet(s"$gateDir/batch_id=$batchId")
-    DedupOps.seedGramIndex(batch, "doc_id", col("text"), seedW = 10)
-      .write.mode("overwrite").parquet(s"$seedsDir/batch_id=$batchId")
+    landVersion(candidateCounts(arr, grown, Seq("gram")), gateDir, batchId)
+    landVersion(DedupOps.seedGramIndex(batch, "doc_id", col("text"), seedW = 10),
+      seedsDir, batchId)
   }
 
   /** One ingest step of CLUSTER-relation maintenance — incremental
@@ -1080,7 +1079,7 @@ object StreamOps {
       val newRows = arrIds
         .join(merge, arrIds("doc_id") === merge("lab"), "left")
         .select(col("doc_id"), coalesce(col("new_lab"), col("doc_id")).as("cluster_id"))
-      updatedOld.union(newRows).write.mode("overwrite").parquet(nextDir)
+      graft.Landing.writer(updatedOld.union(newRows)).mode("overwrite").parquet(nextDir)
     } finally
       // merge reads only CC's own checkpoint blocks once the write ran
       // (the connectedComponents eagerness contract); release in
@@ -1088,9 +1087,8 @@ object StreamOps {
       // blocks across the retries the exactly-once contract invites
       graft.ops.Checkpoints.release(edgesCk)
     // fold the batch's own index rows in AFTER the gate/rescore reads
-    bk.write.mode("overwrite").parquet(s"$bandsDir/batch_id=$batchId")
-    DedupOps.shingleTable(batch, "doc_id", col("text"))
-      .write.mode("overwrite").parquet(s"$shinglesDir/batch_id=$batchId")
+    landVersion(bk, bandsDir, batchId)
+    landVersion(DedupOps.shingleTable(batch, "doc_id", col("text")), shinglesDir, batchId)
   }
 
   /** Streamed codebook-drift monitor — t88's arrival slice maintained
@@ -1300,9 +1298,8 @@ object StreamOps {
   /** Version -1 of a gate dir: no candidates. */
   private def emptyGate(spark: SparkSession, gateDir: String,
       id: String = "doc_id"): Unit =
-    spark.range(0)
-      .select(col("id").as(id), col("id").as("n_candidates"))
-      .write.parquet(s"$gateDir/batch_id=-1")
+    landVersion(spark.range(0).select(col("id").as(id), col("id").as("n_candidates")),
+      gateDir, -1)
 
   /** Version -1 of the grown `bands` and `shingles` dirs: the LANDED
     * band and shingle rows of the corpus slice (the snapshot a
@@ -1310,13 +1307,12 @@ object StreamOps {
   private def bootIndex(spark: SparkSession, sfDir: String,
       dirs: Map[String, String]): Unit = {
     import graft.queries.TrainingData
-    graft.ops.DedupOps.lshBands(
+    landVersion(graft.ops.DedupOps.lshBands(
         TrainingData.docMinhashSigs(spark, sfDir).filter(!arrival()),
         "doc_id", TrainingData.MinhashBands,
-        TrainingData.MinhashK / TrainingData.MinhashBands)
-      .write.parquet(s"${dirs("bands")}/batch_id=-1")
-    TrainingData.docShingles(spark, sfDir).filter(!arrival())
-      .write.parquet(s"${dirs("shingles")}/batch_id=-1")
+        TrainingData.MinhashK / TrainingData.MinhashBands), dirs("bands"), -1)
+    landVersion(TrainingData.docShingles(spark, sfDir).filter(!arrival()),
+      dirs("shingles"), -1)
   }
 
   /** The arriving-EMBEDDING multi-batch feed — [[arrivingDocStream]] at
@@ -1346,12 +1342,8 @@ object StreamOps {
     val grown = spark.read.parquet(bucketsDir)
       .filter(col("batch_id") < batchId)
       .select(col("vec_id").as("corpus_id"), col("bucket"))
-    bt.join(grown, "bucket")
-      .filter(col("corpus_id") =!= col("vec_id"))
-      .groupBy(col("vec_id"))
-      .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_candidates"))
-      .write.mode("overwrite").parquet(s"$gateDir/batch_id=$batchId")
-    bt.write.mode("overwrite").parquet(s"$bucketsDir/batch_id=$batchId")
+    landVersion(candidateCounts(bt, grown, Seq("bucket"), id = "vec_id"), gateDir, batchId)
+    landVersion(bt, bucketsDir, batchId)
   }
 
   /** Embedding LSH bucket-index growth over the K-batch arriving feed
@@ -1361,9 +1353,8 @@ object StreamOps {
     import graft.queries.TrainingData.{embBuckets, NearDupLshPlanes, NearDupLshTables}
     val (dirs, _) = grow(spark, s"emb/$sfDir", "buckets", "gate")(
         arrivingEmbStream(spark, sfDir)) { d =>
-      embBuckets(spark, sfDir, NearDupLshTables, NearDupLshPlanes)
-        .filter(!arrival("vec_id"))
-        .write.parquet(s"${d("buckets")}/batch_id=-1")
+      landVersion(embBuckets(spark, sfDir, NearDupLshTables, NearDupLshPlanes)
+        .filter(!arrival("vec_id")), d("buckets"), -1)
       emptyGate(spark, d("gate"), id = "vec_id")
     } { (d, batch, bid) =>
       embGrowStep(spark, batch, d("buckets"), d("gate"),
@@ -1413,11 +1404,10 @@ object StreamOps {
         .select(col("id_x"), col("id_y"))
       // boot CC routes by measurement — the corpus-snapshot node set is
       // exactly the relation the t110 card prices
-      DedupOps.connectedComponentsMeasured(
+      graft.Landing.writer(DedupOps.connectedComponentsMeasured(
           graft.Tables(spark, sfDir, "documents").filter(!arrival()), "doc_id",
-          bootPairs)
-        .select(col("doc_id"), col("cluster_id"))
-        .write.parquet(version(d, 0))
+          bootPairs).select(col("doc_id"), col("cluster_id")))
+        .parquet(version(d, 0))
     } { (d, batch, bid) =>
       clusterGrowStep(spark, batch, d("bands"), d("shingles"),
         version(d, bid), version(d, bid + 1), bid)
@@ -1448,16 +1438,15 @@ object StreamOps {
     import graft.queries.TrainingData
     val (dirs, n) = grow(spark, s"retract/$sfDir", "clusters")(
         forgetStream(spark, sfDir)) { d =>
-      TrainingData.dedupClusters(spark, sfDir)
-        .select(col("doc_id"), col("cluster_id"))
-        .write.parquet(version(d, 0))
+      graft.Landing.writer(TrainingData.dedupClusters(spark, sfDir)
+        .select(col("doc_id"), col("cluster_id"))).parquet(version(d, 0))
     } { (d, batch, bid) =>
-      graft.ops.DedupOps.retractFromClusters(
+      graft.Landing.writer(graft.ops.DedupOps.retractFromClusters(
           spark.read.parquet(version(d, bid)), batch, "doc_id",
           TrainingData.docShingles(spark, sfDir),
           TrainingData.docMinhashSigs(spark, sfDir),
-          threshold = 0.8, bands = TrainingData.MinhashBands)
-        .write.mode("overwrite").parquet(version(d, bid + 1))
+          threshold = 0.8, bands = TrainingData.MinhashBands))
+        .mode("overwrite").parquet(version(d, bid + 1))
     }
     spark.read.parquet(version(dirs, n))
   }
@@ -1467,8 +1456,8 @@ object StreamOps {
   def growSeedIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val (dirs, _) = grow(spark, s"seeds/$sfDir", "seeds", "gate")(
         arrivingDocStream(spark, sfDir)) { d =>
-      graft.queries.TrainingData.seedGramsLanded(spark, sfDir).filter(!arrival())
-        .write.parquet(s"${d("seeds")}/batch_id=-1")
+      landVersion(graft.queries.TrainingData.seedGramsLanded(spark, sfDir)
+        .filter(!arrival()), d("seeds"), -1)
       emptyGate(spark, d("gate"))
     } { (d, batch, bid) =>
       seedGrowStep(spark, batch, d("seeds"), d("gate"), bid)

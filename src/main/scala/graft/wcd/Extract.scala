@@ -26,42 +26,14 @@ import org.apache.spark.sql.functions._
 object Extract {
   import ReferenceSchema._
 
-  /** F4 key normalization as a Scala UDF — linear work per row. (A
-    * Column-level `transform_keys` with a when-chain per alias builds an
-    * expression DAG whose traversals blow up exponentially in the number
-    * of aliases; measured 20+ s at sf0.1 vs milliseconds here.)
-    * Collisions after normalization keep the LAST value and move the
-    * key to the END — the engine's shared contract with the native
-    * [[fixParams]] (see FixParamsF's Scaladoc for the deliberate
-    * divergence from the reference's first-position rebuild).
-    *
-    * Order-correct for ANY map size (ADVICE r12): the UDF takes
-    * `map_keys`/`map_values` arrays — which preserve MapData (parser)
-    * order — instead of a converted `Map`, whose scala conversion stops
-    * preserving insertion order past 4 entries (Map4 → HashMap would
-    * make collision WINNERS, not just order, hash-dependent for 5+
-    * param templates); the ListMap return converts back in insertion
-    * order. */
-  private val fixKvUdf = udf { (ks: Seq[String], vs: Seq[String]) =>
-    val out = scala.collection.mutable.LinkedHashMap[String, String]()
-    var i = 0
-    while (i < ks.length) {
-      val fk = ReferenceSchema.fixKey(ks(i))
-      out.remove(fk)
-      out.put(fk, vs(i))
-      i += 1
-    }
-    scala.collection.immutable.ListMap(out.toSeq: _*)
-  }
-
-  private[graft] def fixParamsUdf(m: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    fixKvUdf(org.apache.spark.sql.functions.map_keys(m),
-      org.apache.spark.sql.functions.map_values(m))
-
-  /** F4 as the native expression ([[org.apache.spark.sql.graftshim.FixParamsF]]
-    * — walks the MapData in place, no converter round trip; r12, same
-    * rows as the UDF, spec-asserted corpus-wide in ExtractSpec). The
-    * UDF above stays as the readable reference. */
+  /** F4 key normalization as a native expression
+    * ([[org.apache.spark.sql.graftshim.FixParamsF]]): walks the MapData
+    * in place, no converter round trip. Collisions after normalization
+    * keep the LAST value and move the key to the END (see FixParamsF's
+    * Scaladoc for the deliberate divergence from the reference's
+    * first-position rebuild). ExtractSpec asserts it corpus-wide
+    * against the Scala UDF it replaced (`ReferenceForms.fixParamsUdf`,
+    * test scope). */
   private[graft] def fixParams(params: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.graftshim.ColumnBridge.toColumn(
       org.apache.spark.sql.graftshim.FixParamsF(

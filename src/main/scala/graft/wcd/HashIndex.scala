@@ -57,7 +57,7 @@ object HashIndex {
   /** Persist new entries (append-only; the driver of a real deployment
     * would use a transactional table format here). */
   def append(newEntries: DataFrame, path: String): Unit =
-    newEntries.write.mode(SaveMode.Append).parquet(path)
+    graft.Landing.writer(newEntries).mode(SaveMode.Append).parquet(path)
 
   /** The 100 TB landing shape: the index table BUCKETED (and sorted)
     * by hash, so the recurring [[merge]] co-locates on the bucket key —
@@ -67,12 +67,12 @@ object HashIndex {
     * the session catalog (`bucketBy` + path-save is unsupported by
     * design), hence a table name rather than a path. */
   def writeBucketed(index: DataFrame, table: String, buckets: Int = 64): Unit =
-    index.write.mode(SaveMode.Overwrite)
+    graft.Landing.writer(index).mode(SaveMode.Overwrite)
       .bucketBy(buckets, "hash").sortBy("hash")
       .format("parquet").saveAsTable(table)
 
   /** A6 flushdb analog. */
   def flush(spark: SparkSession, path: String): Unit = {
-    empty(spark).write.mode(SaveMode.Overwrite).parquet(path)
+    graft.Landing.writer(empty(spark)).mode(SaveMode.Overwrite).parquet(path)
   }
 }

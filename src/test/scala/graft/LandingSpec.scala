@@ -9,7 +9,8 @@ import org.scalatest.time.SpanSugar._
 /** The land-once seam: one build per key however many callers race for
   * it, the build outside any map lock (so builds of unrelated keys and
   * nested builds proceed), failures rethrown to every waiter and then
-  * retried, and a never-waiting peek at finished values. */
+  * retried, a never-waiting peek at finished values, and one parquet
+  * encoding for every landed file. */
 class LandingSpec extends SparkSpec with TimeLimits {
   // interrupt the test thread at the limit, so a hang fails the test
   private implicit val signaler: Signaler = ThreadSignaler
@@ -124,6 +125,60 @@ class LandingSpec extends SparkSpec with TimeLimits {
       assert(spark.read.parquet(files(1).toString).collect().map(_.getLong(0)).sorted.toSeq ==
         (10L until 15L))
       assert(Landing.feed(memo, "f")(fail("a staged feed must not rebuild")) == dir)
+    }
+  }
+
+  /** The codec of every column chunk in the parquet `files`, read from
+    * their footers. */
+  private def chunkCodecs(files: Seq[String]): Seq[String] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.flatMap { f =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try r.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      finally r.close()
+    }
+  }
+
+  test("every landed parquet file is zstd: parquet, reland, feed, growth run, index table") {
+    failAfter(180.seconds) {
+      import java.nio.file.Files
+      import org.apache.spark.sql.functions._
+      // a source dir of every re-landable table, written with Spark's
+      // default codec; embeddings carries what the embedding-index
+      // growth run reads (ids 7, 17, 27, 37 form its arrival slice)
+      val sf = TempTrees.scratch("graft-codec-src").toString
+      for (t <- Seq("documents", "lineitem", "orders", "events", "customer", "supplier", "part"))
+        spark.range(20).write.parquet(s"$sf/$t.parquet")
+      spark.range(40).select(col("id").as("vec_id"),
+          array((0 until 64).map(i => ((col("id") * 7 + i) % 11 - 5).cast("float")): _*)
+            .as("embedding"),
+          (col("id") % 3).cast("int").as("label"))
+        .write.parquet(s"$sf/embeddings.parquet")
+
+      val landed = Landing.parquet(spark, sf, "codec_probe.parquet")(spark.range(50).toDF())
+      Tables.reland(spark, sf, 2)
+      val feed = Landing.feed(new Landing.Memo[java.nio.file.Path], "codec")(
+        Seq(spark.range(5).toDF()))
+      val (gate, buckets) = graft.streaming.StreamOps.growEmbIndex(spark, sf)
+      // a catalog table: the codec reaches the writer as a table option
+      val table = "graft_codec_probe"
+      try {
+        graft.ops.IndexMaintenance.writeCompacted(spark.range(40).toDF(), table, 2, "id")
+        val places = Seq(
+          "Landing.parquet" -> landed.inputFiles.toSeq,
+          "Tables.reland" -> Tables(spark, sf, "orders").inputFiles.toSeq,
+          "Landing.feed" -> Files.list(feed).toArray.map(_.toString).toSeq,
+          "growEmbIndex" -> (gate.inputFiles ++ buckets.inputFiles).toSeq,
+          "writeCompacted" -> spark.table(table).inputFiles.toSeq)
+        // distinct codecs per place: ZSTD alone, so at least one chunk
+        val codecs = places.map { case (place, files) => place -> chunkCodecs(files).distinct }
+        assert(codecs.forall(_._2 == Seq("ZSTD")), codecs)
+      } finally spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.expr
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import graft.ops.TextOps
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -76,14 +76,14 @@ class ExprPropertySpec extends SparkSpec {
       .select(TextOps.tokens($"text").as("w"))
     for (n <- Seq(2, 3, 10)) {
       val native = df.select(TextOps.shingles($"w", n)).collect().map(_.getSeq[String](0))
-      val declarative = df.select(TextOps.shinglesDeclarative($"w", n))
+      val declarative = df.select(ReferenceForms.shinglesDeclarative($"w", n))
         .collect().map(_.getSeq[String](0))
       assert(native.toSeq == declarative.toSeq, s"n=$n")
     }
     // null-skipping join parity on arrays with null elements
     val withNulls = Seq(Seq[String]("a", null, "b", "c")).toDF("w")
     assert(withNulls.select(TextOps.shingles($"w", 2)).head().getSeq[String](0)
-      == withNulls.select(TextOps.shinglesDeclarative($"w", 2)).head().getSeq[String](0))
+      == withNulls.select(ReferenceForms.shinglesDeclarative($"w", 2)).head().getSeq[String](0))
   }
 
   test("dot_product_f native ≡ zip_with/aggregate fold, bit-exact") {

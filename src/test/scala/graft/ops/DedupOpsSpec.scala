@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -453,7 +453,7 @@ class DedupOpsSpec extends SparkSpec {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val kernel = DedupOps.simhash(corpus, "doc_id", col("text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val agg = DedupOps.simhashAgg(corpus, "doc_id", col("text"))
+    val agg = ReferenceForms.simhashAgg(corpus, "doc_id", col("text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kernel == agg, "native simhash kernel diverges from the aggregation form")
     assert(kernel.nonEmpty)
@@ -465,7 +465,7 @@ class DedupOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val kernelIds = DedupOps.simhash(withNull, "doc_id", col("text"))
       .collect().map(_.getLong(0)).toSet
-    val aggIds = DedupOps.simhashAgg(withNull, "doc_id", col("text"))
+    val aggIds = ReferenceForms.simhashAgg(withNull, "doc_id", col("text"))
       .collect().map(_.getLong(0)).toSet
     assert(kernelIds == aggIds, "kernel and aggregation must agree on null text")
     assert(!kernelIds.contains(2L), "null-text doc must emit no signature row")

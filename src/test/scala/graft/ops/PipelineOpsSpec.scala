@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
@@ -367,7 +367,7 @@ class PipelineOpsSpec extends SparkSpec {
     // and the native codegen kernel equals the declarative HOF contract
     // it replaced (the minhashSigsF precedent), corpus-wide
     val hof = docs
-      .select($"doc_id", Multimodal.shotCountColHof($"text").as("n"))
+      .select($"doc_id", ReferenceForms.shotCountColHof($"text").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(inRow == hof, "native shot kernel diverges from the HOF form")
   }
@@ -386,10 +386,10 @@ class PipelineOpsSpec extends SparkSpec {
       df.select(c.cast("long")).head().getLong(0)
     assert(one(Multimodal.shotCountCol($"text", 16, 70)) == 2L,
       "byte-indexed kernel golden")
-    assert(one(Multimodal.shotCountColHof($"text", 16, 70)) == 1L,
+    assert(one(ReferenceForms.shotCountColHof($"text", 16, 70)) == 1L,
       "char-indexed HOF golden (the documented divergence)")
     assert(one(Multimodal.shotCountCol($"text", 16, 12)) == 2L &&
-      one(Multimodal.shotCountColHof($"text", 16, 12)) == 2L,
+      one(ReferenceForms.shotCountColHof($"text", 16, 12)) == 2L,
       "default levelJump agrees on this payload")
   }
 

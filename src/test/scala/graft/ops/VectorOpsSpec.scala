@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Embedding-similarity operator tests: exact kernels on hand-computed
@@ -88,7 +88,7 @@ class VectorOpsSpec extends SparkSpec {
       .union(Seq((-1L, nanVec)).toDF("vec_id", "embedding"))
     for ((tables, planes) <- Seq((4, 3), (16, 4), (32, 4))) {
       val declarative = (0 until tables).map(t =>
-        VectorOps.lshBucket($"embedding", t, planes))
+        ReferenceForms.lshBucket($"embedding", t, planes))
       val rows = emb.select($"vec_id",
           VectorOps.lshBuckets($"embedding", tables, planes).as("native"),
           array(declarative: _*).as("tree"))

@@ -59,7 +59,7 @@ object ParseAB {
           .as(Seq("ref_pos", "tmpl_name", "tmpl_params")))
       .cache()
     tmpls.count()
-    def f4Udf() = tmpls.select(graft.wcd.Extract.fixParamsUdf(col("tmpl_params")).as("p"))
+    def f4Udf() = tmpls.select(graft.ReferenceForms.fixParamsUdf(col("tmpl_params")).as("p"))
       .select(count(lit(1)), sum(size(col("p"))), sum(size(map_keys(col("p")))))
     def f4Native() = tmpls.select(graft.wcd.Extract.fixParams(col("tmpl_params")).as("p"))
       .select(count(lit(1)), sum(size(col("p"))), sum(size(map_keys(col("p")))))

@@ -1,6 +1,6 @@
 package graft.wcd
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import graft.expr.RefExprs
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -242,7 +242,7 @@ class ExtractSpec extends SparkSpec {
       df.select(c.as("m")).collect()
         .map(_.getMap[String, String](0).toSeq)
     val nat = ordered(Extract.fixParams($"m"))
-    val viaUdf = ordered(Extract.fixParamsUdf($"m"))
+    val viaUdf = ordered(ReferenceForms.fixParamsUdf($"m"))
     assert(nat.toSeq == viaUdf.toSeq,
       "native F4 must match the UDF including key ORDER (Python-dict rename)")
     assert(nat(0).toMap == Map("news_class" -> "a", "url" -> "u"))
@@ -261,7 +261,7 @@ class ExtractSpec extends SparkSpec {
         .map(_.getSeq[org.apache.spark.sql.Row](0)
           .map(r => r.getString(0) -> r.getString(1))).head
     val natBig = orderedOne(Extract.fixParams($"m"))
-    val udfBig = orderedOne(Extract.fixParamsUdf($"m"))
+    val udfBig = orderedOne(ReferenceForms.fixParamsUdf($"m"))
     assert(natBig == udfBig,
       s"6-entry collision: UDF must match native order/value: $natBig vs $udfBig")
     assert(natBig == Seq("title" -> "t", "url" -> "u", "publisher" -> "p",
@@ -275,6 +275,6 @@ class ExtractSpec extends SparkSpec {
     def corpus(c: org.apache.spark.sql.Column) =
       tmpls.select(c.as("m")).collect().map(_.getMap[String, String](0).toSeq)
     assert(corpus(Extract.fixParams(col("params"))).toSeq
-      == corpus(Extract.fixParamsUdf(col("params"))).toSeq)
+      == corpus(ReferenceForms.fixParamsUdf(col("params"))).toSeq)
   }
 }
