@@ -5,8 +5,13 @@ import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionExce
   ExecutorCompletionService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** The land-once policy. Each derived artifact (a parquet landing, a
   * text-format landing, a staged stream feed, a growth run's output
@@ -15,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
   * of a production run. Landings live in [[TempTrees.scratch]] dirs,
   * removed at JVM exit. [[buildAll]] is the one bounded runner that
   * builds a set of landings up front (the warm build, the raw-table
-  * re-land), and [[writer]] is the one parquet encoding every landed
-  * file uses. */
+  * re-land), [[writer]] is the one parquet encoding every landed file
+  * uses, and [[read]] is the one way a parquet table is read back. */
 object Landing {
 
   /** The writer of every parquet file the program lands: zstd, not
@@ -27,6 +32,37 @@ object Landing {
     * one encoding for every landing, growth dir and index table. */
   def writer(df: DataFrame): DataFrameWriter[Row] =
     df.write.option("compression", "zstd")
+
+  /** `path` (a parquet file, or a directory of part files) read with the
+    * schema in its footer. Without a schema, `spark.read.parquet` runs a
+    * Spark job to read that one footer; here the driver reads it, from
+    * the file Spark's inference would pick (the file itself, or a
+    * directory's first data file in path order), and converts it the
+    * way inference does: the Spark row metadata when the writer stored
+    * it, else the parquet types under the session's SQL conf
+    * (nanos-as-long among them). The schema is the inferred one, and a
+    * table landed once is scanned with no job but the scan. Partitioned
+    * dirs stay on `spark.read.parquet`, whose partition discovery types
+    * the partition column. */
+  def read(s: SparkSession, path: String): DataFrame = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = fs.getFileStatus(p)
+    val file = if (!status.isDirectory) Some(status) else fs.listStatus(p)
+      .filter { f => val n = f.getPath.getName; f.isFile && !n.startsWith("_") && !n.startsWith(".") }
+      .sortBy(_.getPath.toString).headOption
+    file match {
+      case Some(f) =>
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        val converter = new ParquetToSparkSchemaConverter(
+          s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf)
+        s.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter)).parquet(path)
+      // no footer to read: Spark's inference raises its own error
+      case None => s.read.parquet(path)
+    }
+  }
 
   /** A land-once memo. `apply` installs an empty future under the key,
     * so the map's bin lock is held only for the install; the installing
@@ -89,7 +125,7 @@ object Landing {
     * minhash_sigs). Bench charges the landings it builds up front to its
     * warm line, not to whichever query reads them first. */
   def parquet(s: SparkSession, dir: String, name: String)(df: => DataFrame): DataFrame =
-    s.read.parquet(path(landed, dir, name)(writer(df).parquet(_)))
+    read(s, path(landed, dir, name)(writer(df).parquet(_)))
 
   /** Landing builds that run in order on one worker; a build reads its
     * inputs through their memos, so each sits behind its inputs. */

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader over the driver testdata layout
   * (`/root/testdata/sf{N}/<name>.parquet`, see TESTDATA.md).
@@ -22,7 +23,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DuckDB oracle reads them all as a naive timestamp. Every load
   * therefore probes the footer-declared type of each canonical
   * timestamp column and adapts it to session-TZ TimestampType
-  * (sessions run UTC), for EVERY table, not just events. Integer
+  * (sessions run UTC), for EVERY table, not just events. The footer
+  * probe is the driver-side read of [[Landing.read]]: it reads one
+  * footer and runs no Spark job, and the same read gives every load
+  * its schema. Integer
   * widths are deliberately NOT coerced: both engines read the same
   * file, so a width drift moves both sides together, and coercing one
   * side would CREATE a schema mismatch.
@@ -44,20 +48,34 @@ object Tables {
 
   /** A re-landed copy once [[reland]] has finished it (landed
     * pre-normalized), else the raw file: a read that overlaps an
-    * in-flight re-land does not wait for it. */
+    * in-flight re-land does not wait for it. Both read through
+    * [[Landing.read]]: the driver reads the footer, so no read runs a
+    * schema-inference job. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     relanded.done(s"$sfDir/$name.parquet") match {
-      case Some(landed) => spark.read.parquet(landed)
+      case Some(landed) => Landing.read(spark, landed)
       case None => rawLoad(spark, sfDir, name)
     }
 
-  private def rawLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // nanos-as-long must be set BEFORE the read so a nanos footer
-    // surfaces as LongType instead of failing the scan outright
+  /** The raw file of `name`, typed as its footer declares. A nanos
+    * timestamp would fail the scan outright unless it is read as
+    * LongType ([[normalizeTsCol]] then truncates it), so the caller's
+    * session reads nanos as long from the first raw read on; the
+    * setting stays, because a streaming scan of a raw file plans under
+    * the same session conf. */
+  private def rawRead(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    timestampCols.getOrElse(name, Nil).foldLeft(df)(normalizeTsCol)
+    Landing.read(spark, s"$sfDir/$name.parquet")
   }
+
+  private def rawLoad(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    timestampCols.getOrElse(name, Nil).foldLeft(rawRead(spark, sfDir, name))(normalizeTsCol)
+
+  /** The raw file's schema as its footer declares it, before
+    * [[normalizeTsCol]]: what a streaming scan of the raw file must
+    * declare (`StreamOps.eventStream` takes its `ts` type from here). */
+  private[graft] def rawSchema(spark: SparkSession, sfDir: String, name: String): StructType =
+    rawRead(spark, sfDir, name).schema
 
   private val relanded = new Landing.Memo[String]
 

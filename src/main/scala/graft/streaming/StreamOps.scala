@@ -78,15 +78,14 @@ object StreamOps {
       .parquet(feedPath(dir.toString))
 
   def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = stagedDir(sfDir, "events").toString
     // ts type probed from the REAL table even in empty-feed mode (an
-    // empty dir has no footer to probe)
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
+    // empty dir has no footer to probe); the probe also sets the raw
+    // read settings the streaming scan runs under
+    val tsType = graft.Tables.rawSchema(spark, sfDir, "events")("ts").dataType
     graft.Tables.normalizeTsCol(
       spark.readStream
         .schema(eventsRawSchema(tsType))
-        .parquet(feedPath(dir)), "ts")
+        .parquet(feedPath(stagedDir(sfDir, "events").toString)), "ts")
   }
 
   /** Raw parquet schema of the documents table. */
@@ -941,8 +940,7 @@ object StreamOps {
     import graft.queries.TrainingData
     val bk = DedupOps.rowBandKeys(batch, "doc_id", col("text"),
       TrainingData.MinhashK, TrainingData.MinhashBands)
-    val grown = spark.read.parquet(bandsDir)
-      .filter(col("batch_id") < batchId)
+    val grown = grownBefore(spark, bandsDir, batchId)
       .select(col("doc_id").as("corpus_id"), col("band"), col("band_key"))
     landVersion(candidateCounts(bk, grown, Seq("band", "band_key")), gateDir, batchId)
     landVersion(bk, bandsDir, batchId)
@@ -965,8 +963,7 @@ object StreamOps {
       explode(strideSeedsCol(col("text"))).as("gram"))
     // version-bounded grown read + per-version overwrite writes: the
     // nearDupGrowStep exactly-once contract at substring grain
-    val grown = spark.read.parquet(seedsDir)
-      .filter(col("batch_id") < batchId)
+    val grown = grownBefore(spark, seedsDir, batchId)
       .select(col("doc_id").as("corpus_id"), col("gram"))
     landVersion(candidateCounts(arr, grown, Seq("gram")), gateDir, batchId)
     landVersion(DedupOps.seedGramIndex(batch, "doc_id", col("text"), seedW = 10),
@@ -978,8 +975,9 @@ object StreamOps {
     * must absorb admitted arrivals without a full re-run": candidate
     * pairs for the batch come from the grown band index (cross-batch)
     * plus a batch-internal self-join (same-batch dups must cluster too
-    * — the full rebuild pairs them), rescore to exact Jaccard ≥
-    * `threshold` candidate-restricted on both sides, then the pairs
+    * — the full rebuild pairs them), rescore to exact Jaccard ≥ 0.8
+    * (the boot pairs' threshold, over the same MinHash bands)
+    * candidate-restricted on both sides, then the pairs
     * collapse in CLUSTER-LABEL space: each pair maps to (arrival label,
     * partner's current cluster label), and one CC run over that
     * batch-sized label graph yields the merge mapping (labels are the
@@ -989,24 +987,22 @@ object StreamOps {
     * the only corpus-sized touches are landed-index equi-joins and the
     * doc_id-keyed relabel join.
     *
-    * `clustersRef` holds the current assignment dir; each step writes a
-    * new version beside it (a parquet dir cannot be overwritten while
+    * `curDir` holds the current assignment; each step writes the next
+    * version to `nextDir` beside it (a parquet dir cannot be overwritten while
     * it is an input of the job writing the successor). */
   private[graft] def clusterGrowStep(spark: SparkSession, batch: DataFrame,
       bandsDir: String, shinglesDir: String,
-      curDir: String, nextDir: String, batchId: Long,
-      threshold: Double = 0.8,
-      k: Int = graft.queries.TrainingData.MinhashK,
-      bands: Int = graft.queries.TrainingData.MinhashBands): Unit = {
+      curDir: String, nextDir: String, batchId: Long): Unit = {
     import graft.ops.DedupOps
-    val bk = DedupOps.rowBandKeys(batch, "doc_id", col("text"), k, bands)
+    import graft.queries.TrainingData
+    val bk = DedupOps.rowBandKeys(batch, "doc_id", col("text"),
+      TrainingData.MinhashK, TrainingData.MinhashBands)
     // EXACTLY-ONCE (the nearDupGrowStep contract at cluster grain):
     // inputs are version-bounded (batch_id < this batch; the cluster
     // relation read at its DETERMINISTIC pre-batch version), outputs
     // overwrite deterministic per-version paths — a retry recomputes
     // the identical step from the identical inputs
-    val grownBands = spark.read.parquet(bandsDir)
-      .filter(col("batch_id") < batchId)
+    val grownBands = grownBefore(spark, bandsDir, batchId)
       .select(col("doc_id").as("partner_id"), col("band"), col("band_key"))
     val candCross = bk.join(grownBands, Seq("band", "band_key"))
       .select(col("doc_id"), col("partner_id"))
@@ -1021,8 +1017,7 @@ object StreamOps {
       .filter(col("id_x") =!= col("id_y")).distinct()
     // exact rescore, candidate-restricted on BOTH sides (the
     // minhashLshPairsFrom shape over grown ∪ batch shingles)
-    val shAll = spark.read.parquet(shinglesDir)
-      .filter(col("batch_id") < batchId)
+    val shAll = grownBefore(spark, shinglesDir, batchId)
       .select(col("doc_id"), col("shingle"))
       .union(DedupOps.shingleTable(batch, "doc_id", col("text")))
     val candIds = cand.select(col("id_x").as("doc_id"))
@@ -1038,10 +1033,10 @@ object StreamOps {
       .join(sizes.select(col("doc_id").as("id_x"), col("n_sh").as("n_x")), "id_x")
       .join(sizes.select(col("doc_id").as("id_y"), col("n_sh").as("n_y")), "id_y")
       .filter(col("n_common").cast("double") /
-        (col("n_x") + col("n_y") - col("n_common")).cast("double") >= threshold)
+        (col("n_x") + col("n_y") - col("n_common")).cast("double") >= 0.8)
       .select(col("id_x"), col("id_y"))
     // merge in label space: one CC over the batch-sized label graph
-    val assign = spark.read.parquet(curDir)
+    val assign = graft.Landing.read(spark, curDir)
     val arrIds = batch.select(col("doc_id"))
     val toLabel = assign.select(col("doc_id"), col("cluster_id"))
     val edges = pairs
@@ -1295,6 +1290,11 @@ object StreamOps {
   private def readGrown(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).withColumn("batch_id", col("batch_id").cast("long"))
 
+  /** A grown dir as of `batchId`: the versions before it, which a retry
+    * of that batch sees unchanged. */
+  private def grownBefore(spark: SparkSession, dir: String, batchId: Long): DataFrame =
+    readGrown(spark, dir).filter(col("batch_id") < batchId)
+
   /** Version -1 of a gate dir: no candidates. */
   private def emptyGate(spark: SparkSession, gateDir: String,
       id: String = "doc_id"): Unit =
@@ -1339,8 +1339,7 @@ object StreamOps {
       tables, planes)
     // version-bounded grown read + per-version overwrite writes: the
     // nearDupGrowStep exactly-once contract at vector grain
-    val grown = spark.read.parquet(bucketsDir)
-      .filter(col("batch_id") < batchId)
+    val grown = grownBefore(spark, bucketsDir, batchId)
       .select(col("vec_id").as("corpus_id"), col("bucket"))
     landVersion(candidateCounts(bt, grown, Seq("bucket"), id = "vec_id"), gateDir, batchId)
     landVersion(bt, bucketsDir, batchId)
@@ -1412,7 +1411,7 @@ object StreamOps {
       clusterGrowStep(spark, batch, d("bands"), d("shingles"),
         version(d, bid), version(d, bid + 1), bid)
     }
-    spark.read.parquet(version(dirs, n))
+    graft.Landing.read(spark, version(dirs, n))
   }
 
   /** The forget-request feed: t87's forget slice
@@ -1442,13 +1441,13 @@ object StreamOps {
         .select(col("doc_id"), col("cluster_id"))).parquet(version(d, 0))
     } { (d, batch, bid) =>
       graft.Landing.writer(graft.ops.DedupOps.retractFromClusters(
-          spark.read.parquet(version(d, bid)), batch, "doc_id",
+          graft.Landing.read(spark, version(d, bid)), batch, "doc_id",
           TrainingData.docShingles(spark, sfDir),
           TrainingData.docMinhashSigs(spark, sfDir),
           threshold = 0.8, bands = TrainingData.MinhashBands))
         .mode("overwrite").parquet(version(d, bid + 1))
     }
-    spark.read.parquet(version(dirs, n))
+    graft.Landing.read(spark, version(dirs, n))
   }
 
   /** Substring-seed index growth over the same K-batch feed. Returns

@@ -31,7 +31,7 @@ object HashIndex {
   }
 
   def load(spark: SparkSession, path: String): DataFrame =
-    if (new java.io.File(path).exists()) spark.read.parquet(path)
+    if (new java.io.File(path).exists()) graft.Landing.read(spark, path)
     else empty(spark)
 
   /** H6 hit-path: which of `hashes` already exist (hash → qid)?

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkSpec.Sf0_001
 import graft.queries.Citations
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
@@ -11,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * stderr-announced cache materialization. */
 class ImportPassSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
 
   test("warmSharedTimed records reland and the 18 landings in a fixed order") {
     // a private copy of the tables: the warm build re-lands the raw

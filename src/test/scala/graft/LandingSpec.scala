@@ -181,4 +181,73 @@ class LandingSpec extends SparkSpec with TimeLimits {
       } finally spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
+
+  /** The Spark jobs `body` starts on this thread, counted by job group.
+    * A sentinel job run afterwards flushes the listener bus, which
+    * delivers events in order, so every counted job has been seen. */
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted reads")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener flush")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      while (!seen.contains(sentinel)) Thread.sleep(5)
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("reading a raw table, a re-landed table and a built landing starts no job") {
+    failAfter(180.seconds) {
+      // a source dir with region (read raw) and the re-landable tables
+      val sf = TempTrees.scratch("graft-jobs-src").toString
+      for (t <- "region" +: Tables.relandable)
+        spark.range(20).selectExpr("id", "cast(id AS string) AS name")
+          .write.parquet(s"$sf/$t.parquet")
+      Tables.reland(spark, sf, 2)
+      val probe = spark.range(30).toDF()
+      Landing.parquet(spark, sf, "jobs_probe.parquet")(probe)
+      val jobs = jobsOf {
+        Seq(Tables(spark, sf, "region"), Tables(spark, sf, "orders"),
+          Landing.parquet(spark, sf, "jobs_probe.parquet")(fail("a built landing must not rebuild"))
+        ).map(_.schema)
+      }
+      assert(jobs == 0)
+      // the reads still scan: the raw table and the re-landed copy
+      assert(Tables(spark, sf, "orders").inputFiles.length == 2)
+      assert(Tables(spark, sf, "region").count() == 20)
+    }
+  }
+
+  test("main code reads parquet through Landing.read, bar the named partitioned and warm-up reads") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // the reads outside Landing that may infer their schema, each once:
+    // partition discovery types a grown dir's batch_id (readGrown), and
+    // Bench's warm-up job warms the inference path on purpose
+    val allowed = Seq(
+      "graft/streaming/StreamOps.scala" ->
+        """spark.read.parquet(dir).withColumn("batch_id", col("batch_id").cast("long"))""",
+      "graft/Bench.scala" -> """spark.read.parquet(s"$sfDir/nation.parquet").count()""")
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.nonEmpty)
+    val reads = for {
+      file <- sources
+      rel = root.relativize(file).toString if rel != "graft/Landing.scala"
+      line <- Files.readAllLines(file).asScala if line.contains(".read.parquet(")
+    } yield rel -> line.trim
+    assert(reads.sorted == allowed.sorted,
+      s"schema-inferring reads outside Landing: ${reads.diff(allowed)}")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkSpec.Sf0_001
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * bottleneck at 100 TB — fails here, at sf0.001, in seconds. */
 class PlanShapeSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
 
   private def exchanges(df: DataFrame): Int = {
     // count distinct Exchange operators in the final adaptive plan

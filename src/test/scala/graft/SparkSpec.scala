@@ -15,4 +15,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = Session.local(4)
+
+  /** The test tables, one dir per scale (TESTDATA.md). */
+  val TestData = "/root/testdata"
+  val Sf0_001 = s"$TestData/sf0.001"
+  val Sf0_01 = s"$TestData/sf0.01"
+  val Sf0_1 = s"$TestData/sf0.1"
 }

@@ -1,5 +1,6 @@
 package graft.expr
 
+import graft.SparkSpec.Sf0_001
 import graft.{ReferenceForms, SparkSpec}
 import graft.ops.TextOps
 import org.apache.spark.sql.functions._
@@ -163,7 +164,7 @@ class ExprPropertySpec extends SparkSpec {
   }
 
   test("HLL approx distinct stays within its 2% error bound on real data") {
-    val raw = graft.Tables(spark, "/root/testdata/sf0.001", "events")
+    val raw = graft.Tables(spark, Sf0_001, "events")
       .groupBy($"event_type")
       .agg(approx_count_distinct($"user_id", 0.02).as("approx_users"),
         countDistinct($"user_id").as("exact_users"))
@@ -175,7 +176,7 @@ class ExprPropertySpec extends SparkSpec {
         s"${r.getString(0)}: approx $approx vs exact $exact")
     }
     // and the registered query's oracle-checked bound claim holds
-    val rows = graft.SparkEntry.queries("q16_approx_distinct")(spark, "/root/testdata/sf0.001")
+    val rows = graft.SparkEntry.queries("q16_approx_distinct")(spark, Sf0_001)
       .collect()
     assert(rows.nonEmpty && rows.forall(_.getAs[Boolean]("approx_ok")))
   }

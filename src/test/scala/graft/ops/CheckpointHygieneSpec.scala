@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -119,7 +120,7 @@ class CheckpointHygieneSpec extends SparkSpec {
   // monotonic cross-query growth suspected behind round-5's g2 median
   // inflation is pinned by a spec instead of inferred from bench deltas.
   test("mini-sweep: checkpoint blocks return to baseline between queries") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = Sf0_001
     val sc = spark.sparkContext
     // the iterative/registered queries with loop checkpoints inside
     val names = Seq("g1_closure", "g2_pagerank", "g4_kcore", "g5_bfs_layers",

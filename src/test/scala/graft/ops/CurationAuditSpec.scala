@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.SparkSpec
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * sf0.001 tables. */
 class CurationAuditSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
   private def run(name: String) = graft.SparkEntry.queries(name)(spark, dir)
 
   test("t53: one survivor per cluster, and it dominates its cluster") {

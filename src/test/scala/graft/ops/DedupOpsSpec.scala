@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.{ReferenceForms, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -113,7 +114,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("lshCandidatesMeasured: measured route equals the fixed-salt route on the real corpus") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$Sf0_001/documents.parquet")
     val sh = DedupOps.shingleTable(docs, "doc_id", col("text"))
     val sigs = DedupOps.minhashSignatures(sh, "doc_id", 16)
     def pairs(df: DataFrame) =
@@ -163,7 +164,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("containmentPairs on the real corpus: same rows as the exact join") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$Sf0_001/documents.parquet")
     val sh = DedupOps.shingleTable(docs, "doc_id", col("text")).cache()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val exact = sh.select(col("doc_id").as("id_x"), col("shingle"))
@@ -387,7 +388,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("minhashLshPairs with salt: identical result on the real corpus") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$Sf0_001/documents.parquet")
     def run(salt: Int) =
       DedupOps.minhashLshPairs(docs, "doc_id", org.apache.spark.sql.functions.col("text"),
           0.8, 16, 4, salt)
@@ -450,7 +451,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("simhash: the native in-row kernel equals the explode/aggregate form corpus-wide") {
-    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val corpus = spark.read.parquet(s"$Sf0_001/documents.parquet")
     val kernel = DedupOps.simhash(corpus, "doc_id", col("text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val agg = ReferenceForms.simhashAgg(corpus, "doc_id", col("text"))
@@ -607,7 +608,7 @@ class DedupOpsSpec extends SparkSpec {
 
   test("bpeEncodeCol: in-row encoding under trained merges equals the batch vocabulary join, and handles unseen words") {
     import spark.implicits._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$Sf0_001/documents.parquet")
     val merges = TextOps.bpeMerges(docs, col("text"), steps = 4)
       .orderBy($"step").collect().map(_.getAs[String]("pair")).toSeq
     assert(merges.size == 4)
@@ -626,7 +627,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("rowBandKeys: per-row (streaming) band keys equal the batch explode+agg pipeline") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$Sf0_001/documents.parquet")
     val batch = DedupOps.lshBands(DedupOps.minhashSignatures(
         DedupOps.shingleTable(docs, "doc_id", col("text")), "doc_id", 16),
         "doc_id", 4, 4)
@@ -831,21 +832,21 @@ class DedupOpsSpec extends SparkSpec {
 
   test("cluster growth: a bridging arrival merges two existing clusters to the global min label") {
     import spark.implicits._
-    // trigram-Jaccard geometry: A=w1..w20 and B=w21..w40 share nothing;
-    // Y=w11..w30 overlaps each by 10 tokens → J = 8/28 ≈ 0.286 to BOTH,
-    // above the fixture threshold 0.25 while J(A,B) = 0 stays below —
-    // the bridge case incremental CC must merge. bands=16 (rows=1)
-    // makes band recall ~1-(1-J)^16 ≈ certain at this J.
+    // trigram-Jaccard geometry at the step's own MinHash family and
+    // threshold (k = 16, bands = 4, J >= 0.8): A=w1..w100 and
+    // B=w15..w114 share 84 of 112 trigrams, J = 0.75, below the
+    // threshold; Y=w8..w107 shares 91 of 105 with each, J = 0.867, above
+    // it — the bridge case incremental CC must merge.
     def toks(lo: Int, hi: Int) = (lo to hi).map("w" + _).mkString(" ")
-    val corpus = Seq((1L, toks(1, 20)), (2L, toks(21, 40))).toDF("doc_id", "text")
-    val batch0 = Seq((10L, toks(1, 20))).toDF("doc_id", "text")
-    val batch1 = Seq((11L, toks(11, 30)),
+    val corpus = Seq((1L, toks(1, 100)), (2L, toks(15, 114))).toDF("doc_id", "text")
+    val batch0 = Seq((10L, toks(1, 100))).toDF("doc_id", "text")
+    val batch1 = Seq((11L, toks(8, 107)),
       (12L, (1 to 12).map("z" + _).mkString(" "))).toDF("doc_id", "text")
     val Seq(bandsDir, shDir, base) = initDirs("bands", "shingles", "clusters")
     DedupOps.lshBands(
         DedupOps.minhashSignatures(
           DedupOps.shingleTable(corpus, "doc_id", col("text")), "doc_id", 16),
-        "doc_id", 16, 1)
+        "doc_id", 4, 4)
       .write.parquet(s"$bandsDir/batch_id=-1")
     DedupOps.shingleTable(corpus, "doc_id", col("text"))
       .write.parquet(s"$shDir/batch_id=-1")
@@ -854,13 +855,13 @@ class DedupOpsSpec extends SparkSpec {
         spark.emptyDataFrame.select(lit(0L).as("id_x"), lit(0L).as("id_y")).limit(0))
       .select(col("doc_id"), col("cluster_id")).write.parquet(v0)
     graft.streaming.StreamOps.clusterGrowStep(spark, batch0, bandsDir, shDir,
-      v0, s"$base/v1", 0L, threshold = 0.25, k = 16, bands = 16)
+      v0, s"$base/v1", 0L)
     val mid = spark.read.parquet(s"$base/v1").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(mid == Map(1L -> 1L, 2L -> 2L, 10L -> 1L),
       s"batch-0 copy of A joins A's cluster, B untouched: $mid")
     graft.streaming.StreamOps.clusterGrowStep(spark, batch1, bandsDir, shDir,
-      s"$base/v1", s"$base/v2", 1L, threshold = 0.25, k = 16, bands = 16)
+      s"$base/v1", s"$base/v2", 1L)
     val fin = spark.read.parquet(s"$base/v2").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fin == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L, 12L -> 12L),
@@ -868,7 +869,7 @@ class DedupOpsSpec extends SparkSpec {
     // exactly-once: replaying batch 1 from the same input version
     // overwrites v2 with the identical relation
     graft.streaming.StreamOps.clusterGrowStep(spark, batch1, bandsDir, shDir,
-      s"$base/v1", s"$base/v2", 1L, threshold = 0.25, k = 16, bands = 16)
+      s"$base/v1", s"$base/v2", 1L)
     val replayed = spark.read.parquet(s"$base/v2").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(replayed == fin, "a replayed cluster batch must be a no-op")

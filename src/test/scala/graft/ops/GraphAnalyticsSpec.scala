@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -456,13 +457,13 @@ class GraphAnalyticsSpec extends SparkSpec {
         .as("r")).head().getDouble(0)
     assert(r == -1.0, s"star graph must be exactly -1, got $r")
     val real = graft.SparkEntry.queries("g9_assortativity")(
-      spark, "/root/testdata/sf0.001").head()
+      spark, Sf0_001).head()
     val rr = real.getDouble(1)
     assert(rr >= -1.0 && rr <= 1.0 && real.getLong(0) > 0)
   }
 
   test("g10 modularity: counts reconcile with the strong subgraph exactly") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     val rows = graft.SparkEntry.queries("g10_modularity")(spark, dir).collect()
     assert(rows.nonEmpty)
     val strong = graft.queries.Pipelines.partCoOrderEdgesWeighted(spark, dir)

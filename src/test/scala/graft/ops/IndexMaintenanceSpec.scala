@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * index-side Exchange (the 100 TB point of the rewrite). */
 class IndexMaintenanceSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
 
   test("grown index is fragmented; compact() drops exactly the tombstoned ids") {
     val (_, grownBands, _) = graft.streaming.StreamOps.growNearDupIndex(spark, dir)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
   * on the sf0.001 tables. */
 class PackagingOpsSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
   private def run(name: String) = graft.SparkEntry.queries(name)(spark, dir)
 
   test("t65: chunk grid covers every token exactly per the 50/40 stride") {

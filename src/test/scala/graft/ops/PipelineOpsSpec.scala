@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import graft.{ReferenceForms, SparkSpec}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
@@ -12,7 +13,7 @@ class PipelineOpsSpec extends SparkSpec {
     // the DataScaleCurve floor mode must (a) really starve the feed —
     // all machinery, zero rows — and (b) leave normal runs bit-identical
     // when the flag is off (it is off everywhere outside the harness)
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     graft.streaming.StreamOps.emptyFeeds = true
     val starved = try StreamOps.qualityMonitor(spark, dir).count()
       finally graft.streaming.StreamOps.emptyFeeds = false
@@ -166,10 +167,10 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("streaming windowed counts equal the batch group-by (parity)") {
-    val streamed = StreamOps.windowedCounts(spark, "/root/testdata/sf0.001")
+    val streamed = StreamOps.windowedCounts(spark, Sf0_001)
       .select("day", "event_type", "n_events")
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap
-    val batch = graft.Tables(spark, "/root/testdata/sf0.001", "events")
+    val batch = graft.Tables(spark, Sf0_001, "events")
       .groupBy(date_trunc("day", $"ts").as("day"), $"event_type")
       .agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -179,7 +180,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("streaming sources read a data dir given relative to the working directory") {
     // the file sources stage a symlink to the table in a scratch dir; a
     // relative link target would resolve against that dir and dangle
-    val abs = java.nio.file.Paths.get("/root/testdata/sf0.001")
+    val abs = java.nio.file.Paths.get(Sf0_001)
     val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs).toString
     assert(!rel.startsWith("/"), rel)
     import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -194,7 +195,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("s16: streamed CMS cells are bit-identical to the batch sketch") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     val tc = graft.queries.TrainingData.cmsVocab(spark, dir)
     val batch = graft.queries.TrainingData.cmsRows(tc)
       .groupBy(col("k"), col("b")).agg(sum(col("freq")).as("c"))
@@ -208,7 +209,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("s20: streamed histogram cells are bit-identical to the batch sketch") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     val streamed = StreamOps.histCellStream(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.Tables(spark, dir, "documents")
@@ -220,7 +221,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("s17: streamed per-source totals are bit-identical to the batch mixture") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
@@ -292,7 +293,7 @@ class PipelineOpsSpec extends SparkSpec {
       (1L, V + S + V), (2L, V + S + S + V), (3L, S + V), (4L, S + S),
       (5L, V + S + V + S + S + V + S), (6L, "z" * 3), (7L, " " * 3)
     ).toDF("doc_id", "text")
-    val corpus = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
+    val corpus = graft.Tables(spark, Sf0_001, "documents")
       .select(col("doc_id"), col("text"))
       .filter(length(col("text")) > 0)
     for (docs <- Seq(fixture, corpus)) {
@@ -354,7 +355,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("m6/s21: the in-row shot-count kernel equals the window-based path per doc") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     val docs = graft.Tables(spark, dir, "documents").filter(length($"text") > 0)
     val inRow = docs
       .select($"doc_id", Multimodal.shotCountCol($"text").as("n"))
@@ -394,7 +395,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("m5: flagged pairs verify against independently recomputed frame sets") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     val rows = graft.SparkEntry.queries("m5_video_neardup")(spark, dir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

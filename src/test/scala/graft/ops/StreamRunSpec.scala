@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.Sf0_001
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
@@ -21,7 +22,7 @@ class StreamRunSpec extends SparkSpec with TimeLimits with Eventually {
   import StreamRunSpec._
 
   implicit val signaler: Signaler = ThreadSignaler
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
   private val runKeys = StreamOps.runConf.map(_._1)
 
   /** A stateful stream whose rows pass a UDF that waits on [[gate]]. */

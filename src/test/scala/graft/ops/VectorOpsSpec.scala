@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec.{Sf0_001, Sf0_01}
 import graft.{ReferenceForms, SparkSpec}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,7 @@ class VectorOpsSpec extends SparkSpec {
     // plus one NaN-bearing vector: every projection of it is NaN, which
     // Spark's >= orders above 0, so each of its sign bits is set
     val nanVec = Array.tabulate(64)(i => if (i == 5) Float.NaN else 0.5f)
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_001/embeddings.parquet")
       .select("vec_id", "embedding")
       .union(Seq((-1L, nanVec)).toDF("vec_id", "embedding"))
     for ((tables, planes) <- Seq((4, 3), (16, 4), (32, 4))) {
@@ -102,7 +103,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("ivfAnnTopK: recall ≥ 0.5 vs brute force on real embeddings") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 50 === 0)
     val exact = VectorOps.topKNeighbors(emb, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id")
@@ -115,7 +116,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("kmeans IVF: recall ≥ 0.5 vs brute force on real embeddings") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 50 === 0)
     val exact = VectorOps.topKNeighbors(emb, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id")
@@ -129,7 +130,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("lshNearDupPairs: recall ≥ 0.9 vs exact all-pairs at the registered params") {
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_01/embeddings.parquet")
     val exact = VectorOps.nearDupPairs(emb, "vec_id", "embedding", 0.45)
       .select("id_x", "id_y")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -145,7 +146,7 @@ class VectorOpsSpec extends SparkSpec {
   test("lshTopSimilarPairs: top-20 recall ≥ 0.95 vs the exact quadratic form (t9's contract)") {
     // the registered t9 parameters; topSimilarPairs stays the correctness
     // baseline, lshTopSimilarPairs is the registered 100 TB shape
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_01/embeddings.parquet")
     val exact = VectorOps.topSimilarPairs(emb, "vec_id", "embedding", 20)
       .select("id_x", "id_y")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -169,7 +170,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("pqEncode: exactly m codes per vector, all from the codebook") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_001/embeddings.parquet")
     val books = VectorOps.pqTrainedCodebooks(emb, "vec_id", "embedding",
       m = 8, subDim = 8, k = 16, iters = 1)
     val codes = VectorOps.pqEncode(emb, "vec_id", "embedding", books, 8, 8)
@@ -182,7 +183,7 @@ class VectorOpsSpec extends SparkSpec {
 
   test("pqAdcTopK: trained books, recall@10 ≥ 0.75 vs exact L2 (t37's contract)") {
     import org.apache.spark.sql.expressions.Window
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_01/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 50 === 0)
     val books = VectorOps.pqTrainedCodebooks(emb, "vec_id", "embedding",
       m = 8, subDim = 8, k = 16, iters = 2)
@@ -205,7 +206,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("lshAnnTopK: recall ≥ 0.6 vs brute force on real embeddings") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"$Sf0_001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 50 === 0)
     val exact = VectorOps.topKNeighbors(emb, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.SparkSpec.Sf0_001
 import graft.SparkSpec
 
 /** Contract tests for the CSV/JSONL source adapters: the happy path is
@@ -9,7 +10,7 @@ import graft.SparkSpec
   * silent null) and the schema contract. */
 class TextSourcesSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = Sf0_001
 
   test("adapters read back the full corpus with the declared schema") {
     val base = graft.Tables(spark, dir, "documents")

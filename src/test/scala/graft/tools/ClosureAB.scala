@@ -1,16 +1,17 @@
 package graft.tools
 
+import graft.SparkSpec.Sf0_1
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the two spec-equal transitive-closure forms on the
   * g1 corpus shape (test scope — adjudication evidence for SCALE.md,
   * not part of the driver contract). Usage:
   *
-  *   sbt "Test/runMain graft.tools.ClosureAB /root/testdata/sf0.1 3"
+  *   sbt "Test/runMain graft.tools.ClosureAB <sf dir> 3"
   */
 object ClosureAB {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    val sfDir = if (args.nonEmpty) args(0) else Sf0_1
     val iters = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.Session.local(cpus)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.SparkSpec.Sf0_1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -7,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
   * corpus (dev scratch — attribution for the SCALE.md cores-curve flag). */
 object ContainmentProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    val sfDir = if (args.nonEmpty) args(0) else Sf0_1
     val reps = if (args.length > 1) args(1).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.Session.local(cpus)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.SparkSpec.{Sf0_01, Sf0_1}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,11 +77,11 @@ object DataScaleCurve {
 
     val skipBatch = sys.env.get("SPARK_GRAFT_SCURVE_SKIP_BATCH").contains("1")
     val points = Seq(
-      ("sf0.01", "/root/testdata/sf0.01", 0.01),
-      ("sf0.1", "/root/testdata/sf0.1", 0.1)) ++
+      ("sf0.01", Sf0_01, 0.01),
+      ("sf0.1", Sf0_1, 0.1)) ++
       (if (skipBatch) Seq.empty
        else Seq((s"synth${"%.1f".format(0.1 * reps)}",
-         buildSynth(spark, "/root/testdata/sf0.1", reps), 0.1 * reps)))
+         buildSynth(spark, Sf0_1, reps), 0.1 * reps)))
 
     // (point -> (warmSec, perTable)), then (query -> point -> (cold, min))
     val warms = scala.collection.mutable.LinkedHashMap[String, (Double, Seq[(String, Double)])]()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.SparkSpec.Sf0_1
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the F1 UDTF forms (test scope — dev evidence only):
@@ -8,11 +9,11 @@ import org.apache.spark.sql.functions._
   * same downstream shape (supported-template filter + count of every
   * generated column, so neither form can prune the params map).
   *
-  *   sbt "Test/runMain graft.tools.ParseAB /root/testdata/sf0.1 3"
+  *   sbt "Test/runMain graft.tools.ParseAB <sf dir> 3"
   */
 object ParseAB {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    val sfDir = if (args.nonEmpty) args(0) else Sf0_1
     val iters = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.Session.local(cpus)

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   * commits these as `plans/r15/<query>_{before,after}.txt` so plan
   * claims in OPTIMIZATION_r15.md are checkable without running Spark.
   *
-  *   sbt "Test/runMain graft.tools.PlanDump /root/testdata/sf0.1 plans/r15 before g1_closure,t86_ngram_dup_rate_hll"
+  *   sbt "Test/runMain graft.tools.PlanDump <sf dir> plans/r15 before g1_closure,t86_ngram_dup_rate_hll"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

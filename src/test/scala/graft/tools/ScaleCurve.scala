@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.SparkSpec.Sf0_1
 import org.apache.spark.sql.functions._
 
 /** Cores-scaling evidence harness (test scope): times the heavy operator
@@ -15,11 +16,11 @@ import org.apache.spark.sql.functions._
   * quadratic all-replicas-match blowup no real corpus has).
   *
   * Usage:
-  *   SPARK_GRAFT_CPUS=8 sbt "Test/runMain graft.tools.ScaleCurve /root/testdata/sf0.1 10 2"
+  *   SPARK_GRAFT_CPUS=8 sbt "Test/runMain graft.tools.ScaleCurve <sf dir> 10 2"
   */
 object ScaleCurve {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    val sfDir = if (args.nonEmpty) args(0) else Sf0_1
     val reps = if (args.length > 1) args(1).toInt else 10
     val iters = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

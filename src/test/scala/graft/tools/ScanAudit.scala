@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.SparkSpec.Sf0_001
+
 
 /** Diagnostic: count parquet scans per source table in every registered
   * query's executed plan, flagging queries that replay an expensive
@@ -22,7 +24,7 @@ object ScanAudit {
     val min = if (args.nonEmpty) args(0).toInt else 3
     val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
-    val dir = "/root/testdata/sf0.001"
+    val dir = Sf0_001
     val tables = graft.Tables.all
     graft.queries.Citations.warmSharedTimed(spark, dir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

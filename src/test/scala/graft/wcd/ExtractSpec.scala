@@ -1,5 +1,6 @@
 package graft.wcd
 
+import graft.SparkSpec.Sf0_001
 import graft.{ReferenceForms, SparkSpec}
 import graft.expr.RefExprs
 import org.apache.spark.sql.{DataFrame, Row}
@@ -198,7 +199,7 @@ class ExtractSpec extends SparkSpec {
 
   test("F1 Generator: native rows equal the posexplode(UDF) form corpus-wide") {
     import org.apache.spark.sql.functions._
-    val pages = graft.queries.Citations.pages(spark, "/root/testdata/sf0.001")
+    val pages = graft.queries.Citations.pages(spark, Sf0_001)
     def canon(df: DataFrame) = df.collect().map { r =>
       (r.getLong(0), r.getInt(1), r.getString(2),
         r.getMap[String, String](3).toMap)
@@ -268,7 +269,7 @@ class ExtractSpec extends SparkSpec {
       "author_link" -> "y", "isbn" -> "i"),
       s"authorlink (last) must win and move author_link to position 4: $natBig")
     // corpus-wide: every extracted template's params fix identically
-    val pages = graft.queries.Citations.pages(spark, "/root/testdata/sf0.001")
+    val pages = graft.queries.Citations.pages(spark, Sf0_001)
     val tmpls = pages.select(
       graft.parse.TemplateFunctions.extractTemplatesRows(col("wikitext"))
         .as(Seq("ref_pos", "name", "params")))
