@@ -401,8 +401,8 @@ object DedupOps {
     * picks). Returns (id, cluster_id = min id in component,
     * cluster_size).
     *
-    * EAGERNESS CONTRACT (ADVICE r14): this method materializes its
-    * whole fixpoint EAGERLY — the label seed and every round are
+    * EAGERNESS CONTRACT: this method materializes its whole fixpoint
+    * EAGERLY — the label seed and every round are
     * `localCheckpoint(eager = true)` — so by return time the returned
     * plan reads ONLY this method's own surviving checkpoint blocks,
     * never the `nodes`/`pairs` input lineage. Callers rely on that to
@@ -411,14 +411,14 @@ object DedupOps {
     * a `finally`); any future lazy seed (`localCheckpoint(false)`) or
     * early-return path would break them — keep the seed eager. */
   def connectedComponents(nodes: DataFrame, id: String, pairs: DataFrame,
-      maxIter: Int = 30, broadcastNodes: Boolean = true): DataFrame = {
+      broadcastNodes: Boolean = true): DataFrame = {
     val sym = pairs.select(col("id_x").as("src"), col("id_y").as("dst"))
       .union(pairs.select(col("id_y").as("src"), col("id_x").as("dst")))
       .localCheckpoint()
     var labels = nodes.select(col(id), col(id).as("label")).localCheckpoint()
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < CcMaxRounds) {
       val updated = ccRound(sym, labels, id, broadcastNodes)
         .localCheckpoint() // eager: the one real job this round
       converged = updated.filter(col("dec")).isEmpty // limit-1 over cached blocks
@@ -432,18 +432,17 @@ object DedupOps {
       .select(col(id), col("label").as("cluster_id"), col("cluster_size"))
   }
 
-  /** The t110 broadcast budget FALLBACK: Spark's standard 10 MiB
-    * autoBroadcastJoinThreshold default, the line the registered t110
-    * card prices the label relation against when the session conf is
-    * unreadable. The measured routes normally resolve the budget from
+  /** Round cap of [[connectedComponents]]: far above the diameter of any
+    * near-dup or thresholded co-order cluster. */
+  private val CcMaxRounds = 30
+
+  /** The broadcast budget FALLBACK: Spark's standard 10 MiB
+    * autoBroadcastJoinThreshold default, used when the session conf is
+    * unreadable. The route cards normally resolve the budget from
     * `spark.sql.autoBroadcastJoinThreshold` itself
     * ([[sessionBroadcastThresholdBytes]]) so they move with the knob a
-    * cluster operator actually tunes (VERDICT r14 #4). */
+    * cluster operator actually tunes. */
   val CcBroadcastThresholdBytes: Long = 10L * 1024 * 1024
-
-  /** Threshold sentinel: "resolve from the session conf at card-build
-    * time" — the default of every route-card `thresholdBytes` param. */
-  val SessionThreshold: Long = -1L
 
   /** The broadcast budget the session's OPERATOR tuned:
     * `spark.sql.autoBroadcastJoinThreshold`, parsed like Spark parses
@@ -463,8 +462,8 @@ object DedupOps {
     * when the snapshot's landings rebuild, and a mid-JVM conf flip
     * deliberately does not re-route consumers of an already-landed
     * card (t75 audits the landed value). Un-landed measured routes
-    * (degreeOriented, transitiveClosure, streaming bounds) read the
-    * conf live at every call. */
+    * ([[connectedComponentsMeasured]], the streamed cluster-growth
+    * bound) read the conf live at every call. */
   def sessionBroadcastThresholdBytes(s: org.apache.spark.sql.SparkSession): Long = {
     val raw = try s.conf.get("spark.sql.autoBroadcastJoinThreshold",
       CcBroadcastThresholdBytes.toString)
@@ -477,11 +476,19 @@ object DedupOps {
     if (bytes > 0) bytes else 0L
   }
 
-  /** [[SessionThreshold]] resolution shared by every route card. */
-  private[graft] def resolveThreshold(df: DataFrame, thresholdBytes: Long): Long =
-    if (thresholdBytes == SessionThreshold)
-      sessionBroadcastThresholdBytes(df.sparkSession)
-    else thresholdBytes
+  /** The broadcast rule every route card applies: a relation estimated
+    * at `estBytes` broadcasts while it fits `threshold`, else shuffles. */
+  def route(estBytes: Column, threshold: Column): Column =
+    when(estBytes <= threshold, lit("broadcast")).otherwise(lit("shuffle"))
+
+  /** The route tail shared by every route card: appends
+    * `broadcast_threshold` (the session budget,
+    * [[sessionBroadcastThresholdBytes]], read when the card is built)
+    * and the [[route]] verdict to a card that carries `est_bytes`. */
+  def routeTail(card: DataFrame): DataFrame =
+    card.withColumn("broadcast_threshold",
+        lit(sessionBroadcastThresholdBytes(card.sparkSession)))
+      .withColumn("route", route(col("est_bytes"), col("broadcast_threshold")))
 
   /** True iff a (possibly landed) 1-row route card says 'broadcast' —
     * the single-read every measured call site shares. */
@@ -496,67 +503,34 @@ object DedupOps {
     * t110's arithmetic as a CONSUMABLE 1-row card (the
     * [[IndexMaintenance.gateRouteCard]] pattern at clustering grain).
     * The per-round label relation is node-sized at ~16 B/row (two
-    * longs); it is broadcast-safe only while it fits the 10 MiB
-    * threshold the registered t110 card prices. Integer arithmetic
-    * only, so the hash-checked t110 card and this decision are the
-    * same computation. Returns (n_nodes, est_bytes,
-    * broadcast_threshold, route). */
-  def ccRouteCard(nodes: DataFrame,
-      thresholdBytes: Long = SessionThreshold,
-      bytesPerLabelRow: Long = CcLabelBytesPerRow): DataFrame = {
-    val thr = resolveThreshold(nodes, thresholdBytes)
-    nodes.agg(count(lit(1)).as("n_nodes"))
+    * longs); it is broadcast-safe only while it fits the session
+    * broadcast threshold. Integer arithmetic only, so the hash-checked
+    * t110 card and this decision are the same computation. Returns
+    * (n_nodes, est_bytes, broadcast_threshold, route). */
+  def ccRouteCard(nodes: DataFrame): DataFrame =
+    routeTail(nodes.agg(count(lit(1)).as("n_nodes"))
       .select(col("n_nodes"),
-        (col("n_nodes") * lit(bytesPerLabelRow)).cast("long").as("est_bytes"))
-      .withColumn("broadcast_threshold", lit(thr))
-      .withColumn("route",
-        when(col("est_bytes") <= col("broadcast_threshold"), lit("broadcast"))
-          .otherwise(lit("shuffle")))
-  }
+        (col("n_nodes") * lit(CcLabelBytesPerRow)).cast("long").as("est_bytes")))
 
   /** [[connectedComponents]] with `broadcastNodes` picked BY
     * MEASUREMENT from [[ccRouteCard]] — the wired form of the t110
-    * decision (the [[IndexMaintenance.compactMeasured]] precedent).
-    * The collect is a 1-row decision scalar off one count: it runs
-    * once per CC run, never per round or per row. Billions of nodes
-    * price past the threshold and the whole fixpoint loop runs the
-    * spec-proven shuffle variant; nothing is left to a hand-picked
-    * default at the call sites. */
+    * decision. The collect is a 1-row decision scalar off one count: it
+    * runs once per CC run, never per round or per row. Billions of
+    * nodes price past the threshold and the whole fixpoint loop runs
+    * the spec-proven shuffle variant. */
   def connectedComponentsMeasured(nodes: DataFrame, id: String,
-      pairs: DataFrame, maxIter: Int = 30,
-      thresholdBytes: Long = SessionThreshold): DataFrame = {
-    // one pass over the nodes lineage (review finding r14): the route
-    // count and the label seed both read these blocks — without the
-    // checkpoint, a derived node set (the s22 per-batch merge graph,
-    // the retraction's semi-joined members) would compute twice. The
-    // fixpoint loop inside connectedComponents runs EAGERLY, so by
-    // return time only the final label checkpoint is live and the node
-    // blocks release here, not at session end.
+      pairs: DataFrame): DataFrame = {
+    // one pass over the nodes lineage: the route count and the label
+    // seed both read these blocks — without the checkpoint, a derived
+    // node set (the retraction's semi-joined members) would compute
+    // twice. The fixpoint loop inside connectedComponents runs EAGERLY,
+    // so by return time only the final label checkpoint is live and the
+    // node blocks release here, not at session end.
     val n = nodes.localCheckpoint()
-    try connectedComponents(n, id, pairs, maxIter,
-      broadcastNodes = ccChosenRoute(n, thresholdBytes) == "broadcast")
+    try connectedComponents(n, id, pairs,
+      broadcastNodes = cardIsBroadcast(ccRouteCard(n)))
     finally Checkpoints.release(n)
   }
-
-  /** Route-threaded CC: `Some(b)` forces the join strategy (spec
-    * fixtures, deliberate overrides), `None` routes by measurement —
-    * the one place the Option is interpreted, so the three streaming/
-    * retraction call sites stay one-liners instead of repeating the
-    * match (review finding r14). */
-  def connectedComponentsRouted(nodes: DataFrame, id: String,
-      pairs: DataFrame, route: Option[Boolean],
-      maxIter: Int = 30): DataFrame = route match {
-    case Some(b) => connectedComponents(nodes, id, pairs, maxIter, b)
-    case None => connectedComponentsMeasured(nodes, id, pairs, maxIter)
-  }
-
-  /** The 1-row route read behind [[connectedComponentsMeasured]],
-    * exposed so a spec can pin card↔plan agreement (the t99
-    * ledger↔plan move): the route the registered t110 card reports for
-    * a node set IS the route the measured CC run executes. */
-  private[graft] def ccChosenRoute(nodes: DataFrame,
-      thresholdBytes: Long = SessionThreshold): String =
-    ccRouteCard(nodes, thresholdBytes).select(col("route")).head().getString(0)
 
   /** One CC min-label-propagation round, un-checkpointed: each node's
     * label becomes the min of its own and its neighbors' labels, plus a
@@ -586,15 +560,13 @@ object DedupOps {
     * re-pair among their surviving members (candidate-bounded: the
     * shingle/signature inputs are semi-joined to affected membership)
     * and re-run CC; every unaffected row is reused verbatim. Work is
-    * bounded by affected-cluster membership, never the corpus.
-    * `broadcastNodes` threads to the inner CC; `None` (the default)
-    * routes BY MEASUREMENT over the affected-member node set
-    * ([[ccRouteCard]] — billions of affected members price past the
-    * threshold and the repair runs the shuffle variant). Returns
-    * (id, cluster_id) for every surviving doc. */
+    * bounded by affected-cluster membership, never the corpus. The
+    * inner CC routes BY MEASUREMENT over the affected-member node set
+    * ([[connectedComponentsMeasured]] — billions of affected members
+    * price past the threshold and the repair runs the shuffle variant).
+    * Returns (id, cluster_id) for every surviving doc. */
   def retractFromClusters(landed: DataFrame, removed: DataFrame, id: String,
-      sh: DataFrame, sigs: DataFrame, threshold: Double, bands: Int,
-      broadcastNodes: Option[Boolean] = None): DataFrame = {
+      sh: DataFrame, sigs: DataFrame, threshold: Double, bands: Int): DataFrame = {
     val affected = landed.join(removed, Seq(id), "left_semi")
       .select(col("cluster_id")).distinct()
     val keepRows = landed.join(removed, Seq(id), "left_anti")
@@ -607,7 +579,7 @@ object DedupOps {
         sigs.join(members, Seq(id), "left_semi"),
         id, threshold, bands)
       .select(col("id_x"), col("id_y"))
-    val reCC = connectedComponentsRouted(members, id, rePairs, broadcastNodes)
+    val reCC = connectedComponentsMeasured(members, id, rePairs)
       .select(col(id), col("cluster_id"))
     unaffected.union(reCC)
   }

@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 /** Iterative graph operators. Spark has no recursive CTE; the category
   * transitive closure of SURVEY.md A3 (`Category(title).articles(
   * recurse=True)`, reference src/__init__.py:229-254) is the loop-of-
-  * joins-until-fixpoint pattern.
+  * joins-until-fixpoint pattern ([[transitiveClosureDoubling]], g1).
   *
-  * Scale shape: each iteration is one equi-join frontier⋈edges plus an
-  * anti-join against the accumulated closure; the frontier shrinks
-  * geometrically for DAGs (depth-bounded), `localCheckpoint` cuts the
-  * growing lineage so plan size stays constant across iterations.
+  * Scale shape: each iteration is one equi-join plus an anti-join
+  * against the accumulated result; `localCheckpoint` cuts the growing
+  * lineage so plan size stays constant across iterations.
   *
   * Storage hygiene: every loop releases each superseded checkpoint's
   * blocks as soon as its successor (and any 1-row summary reading it)
@@ -20,90 +19,30 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** All (node, ancestor) pairs reachable via `edges(child, parent)`.
-    * Fixpoint iteration with lineage checkpointing.
+  /** All (node, ancestor) pairs reachable via `edges(child, parent)`,
+    * by recursive doubling: after round r the closure holds every
+    * (node, ancestor) pair within distance ≤ 2^r, so a depth-d
+    * hierarchy converges in ⌈log₂ d⌉ rounds (at most
+    * [[ClosureMaxRounds]]) instead of d — each round one self-join of
+    * the closure on the middle node plus the usual anti-join novelty
+    * probe (same eager-checkpoint / released-predecessor discipline as
+    * every loop here).
     *
-    * `materializeEdges`: checkpoint the edge relation once up front —
-    * right when `edges` is an expensive derived plan that every round
-    * would otherwise replay. Pass `false` when it is already a cheap
-    * landed scan (parquet landing, narrow derive): re-scanning beats
-    * writing the whole relation into block storage first. The same
-    * knob, same rationale, on [[pageRankFixedPoint]]/[[bfsLayers]].
-    *
-    * `broadcastEdges`: the stepping form's design case is a SMALL
-    * static hierarchy (the A3 category tree) joined per round against
-    * the growing frontier — but since r15 the default is MEASURED, not
-    * assumed ([[measuredBroadcastEdges]]: one count priced against the
-    * session broadcast threshold, the connectedComponentsRouted
-    * convention — VERDICT r14 #3): `None` routes by measurement,
-    * `Some(b)` forces the strategy (spec fixtures, deliberate
-    * overrides). An edge list past the threshold shuffles per round —
-    * though at that shape [[transitiveClosureDoubling]] (hint-free,
-    * AQE-routed) is usually the better operator. Identical closure
-    * either way (GraphAnalyticsSpec). */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 40,
-      materializeEdges: Boolean = true,
-      broadcastEdges: Option[Boolean] = None): DataFrame = {
-    val e0 = edges.select(col("child"), col("parent"))
-    val e = if (materializeEdges) e0.localCheckpoint() else e0
-    // route read AFTER the materialization: with materializeEdges=true
-    // (the default) the measuring count runs over checkpointed blocks;
-    // with materializeEdges=false it replays the edge lineage once —
-    // callers combining nomat with a known route pass Some(b) to skip
-    // the count (the ClosureAB arms do). 1-row decision, once per run.
-    val bc = broadcastEdges.getOrElse(measuredBroadcastEdges(e))
-    def side(df: DataFrame) = if (bc) broadcast(df) else df
-    var closure = e.select(col("child").as("node"), col("parent").as("ancestor"))
-      .localCheckpoint()
-    var frontier = closure
-    var iter = 0
-    while (iter < maxIter && !frontier.isEmpty) {
-      // the EDGE relation (the category hierarchy — the small, static
-      // dimension of an A3 scan) broadcasts; the growing frontier
-      // stays un-shuffled until its own distinct
-      val stepped = frontier
-        .join(side(e), frontier("ancestor") === e("child"))
-        .select(frontier("node"), e("parent").as("ancestor"))
-        .distinct()
-      val prevFrontier = frontier
-      frontier = stepped.join(closure, Seq("node", "ancestor"), "left_anti")
-        .localCheckpoint()
-      // round 0 aliases frontier to closure — the union below still
-      // reads those blocks, so only a DISTINCT predecessor is released
-      if (!(prevFrontier eq closure)) Checkpoints.release(prevFrontier)
-      val prevClosure = closure
-      closure = closure.unionByName(frontier).localCheckpoint()
-      Checkpoints.release(prevClosure)
-      iter += 1
-    }
-    // the returned closure is its own (checkpointed) blocks: neither the
-    // edge materialization nor the last frontier is referenced past here
-    Checkpoints.release(e)
-    if (!(frontier eq closure)) Checkpoints.release(frontier)
-    closure
-  }
-
-  /** [[transitiveClosure]] by recursive doubling: after round r the
-    * closure holds every (node, ancestor) pair within distance ≤ 2^r,
-    * so a depth-d hierarchy converges in ⌈log₂ d⌉ rounds instead of d —
-    * each round one self-join of the closure on the middle node plus
-    * the usual anti-join novelty probe (same eager-checkpoint /
-    * released-predecessor discipline as every loop here).
-    *
-    * Trade-off vs the stepping form: stepping joins the (static,
-    * broadcastable) EDGE relation per round and pays depth rounds;
-    * doubling joins the GROWING closure against itself — rounds shrink
-    * logarithmically but the per-round join is closure-sized on both
-    * sides (no hint: AQE broadcasts small closures, shuffles big ones).
-    * Deep-and-narrow hierarchies (category trees — the A3 case) want
-    * doubling; shallow-and-wide graphs with huge closures want
-    * stepping. Results are identical (spec-asserted). */
-  def transitiveClosureDoubling(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
+    * Trade-off vs stepping one edge per round: stepping joins the
+    * (static, broadcastable) EDGE relation per round and pays depth
+    * rounds; doubling joins the GROWING closure against itself — rounds
+    * shrink logarithmically but the per-round join is closure-sized on
+    * both sides (no hint: AQE broadcasts small closures, shuffles big
+    * ones). Deep-and-narrow hierarchies (category trees — the A3 case)
+    * want doubling. The stepping fixpoint is the test-scope reference
+    * (`ReferenceForms.transitiveClosure`); results are identical
+    * (spec-asserted). */
+  def transitiveClosureDoubling(edges: DataFrame): DataFrame = {
     var closure = edges.select(col("child").as("node"), col("parent").as("ancestor"))
       .localCheckpoint()
     var done = false
     var round = 0
-    while (!done && round < maxRounds) {
+    while (!done && round < ClosureMaxRounds) {
       val viaMid = closure.select(col("node"), col("ancestor").as("mid"))
         .join(closure.select(col("node").as("mid"), col("ancestor")), "mid")
         .select(col("node"), col("ancestor")).distinct()
@@ -121,6 +60,10 @@ object GraphOps {
     closure
   }
 
+  /** Round cap of [[transitiveClosureDoubling]]: covers hierarchies up
+    * to 2^20 levels deep. */
+  private val ClosureMaxRounds = 20
+
   /** Fixed-point PageRank over `edges(src, dst)`: ranks are BIGINT
     * micro-units (1,000,000 = rank 1.0) and every step is integer
     * arithmetic — truncating division by out-degree, integer damping
@@ -129,8 +72,8 @@ object GraphOps {
     * simplified formulation without dangling-mass redistribution: sinks
     * contribute nothing and the 0.15 floor keeps ranks bounded.
     *
-    * Scale shape: the edge list is materialized once (localCheckpoint —
-    * the iterative-operator pattern shared with [[transitiveClosure]]);
+    * Scale shape: the edge list is read in place each iteration (a
+    * pruned landed scan in g2 re-reads cheaper than it checkpoints);
     * the degree and rank relations are NODE-sized, orders of magnitude
     * smaller than the edge list, so they broadcast onto the edge scan
     * and each iteration costs exactly one partial-final aggregate
@@ -145,24 +88,18 @@ object GraphOps {
     *   relation symmetric by construction (g2 builds base ∪ reversed).
     */
   def pageRankFixedPoint(edges: DataFrame, iters: Int = 2,
-      broadcastNodes: Boolean = true, materializeEdges: Boolean = true,
-      symmetricEdges: Boolean = false): DataFrame = {
+      broadcastNodes: Boolean = true, symmetricEdges: Boolean = false): DataFrame = {
     require(iters >= 1, s"pageRankFixedPoint needs iters >= 1, got $iters")
     // billions of nodes: broadcastNodes = false drops the hints and the
     // node-sized deg/rank joins become shuffles on `src` — same plan
     // otherwise, same (integer, order-independent) result; both variants
     // are pinned by GraphAnalyticsSpec
     def side(df: DataFrame) = if (broadcastNodes) broadcast(df) else df
-    // materializeEdges=false: see transitiveClosure — a landed edge scan
-    // re-reads cheaper than it checkpoints (deg/nodes/iteration joins
-    // each replay a pruned parquet scan, not the derive)
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (materializeEdges) e0.localCheckpoint() else e0
+    val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // src ∪ dst: pure sinks (dst-only nodes) hold rank too — they
-    // receive mass and contribute none. r16 (guide §2.4 — remove
-    // shuffles outright): when the CALLER asserts the edge relation is
-    // symmetric (every edge present in both directions — the g2 shape,
+    // receive mass and contribute none. When the CALLER asserts the edge
+    // relation is symmetric (every edge present in both directions — the g2 shape,
     // built as base ∪ reversed), src ∪ dst ≡ src, so the node set is
     // the degree relation's key column and the union+distinct shuffle
     // of the FULL edge list disappears. Equality of both forms on a
@@ -183,8 +120,8 @@ object GraphOps {
       // cut the per-iteration lineage growth (each round otherwise
       // recomputes every prior round under the broadcast); the FINAL
       // iteration stays un-checkpointed so callers can inspect the plan
-      // (it reads the last checkpointed round and `e`, so those blocks
-      // stay — every earlier round is released as it is superseded)
+      // (it reads the last checkpointed round, so those blocks stay —
+      // every earlier round is released as it is superseded)
       if (i < iters) {
         r = r.localCheckpoint()
         prevCp.foreach(Checkpoints.release)
@@ -201,29 +138,21 @@ object GraphOps {
     *
     * Scale shape per round: one partial-agg degree shuffle plus two
     * semi-joins against the node-sized survivor set (broadcastable);
-    * `localCheckpoint` caps lineage exactly like [[transitiveClosure]].
+    * `localCheckpoint` caps lineage per round. Round 1 reads the input
+    * relation in place (a landed scan in g4); later rounds read their
+    * own induced-subgraph checkpoints.
     */
   def kCoreRounds(orientedEdges: DataFrame, k: Int, rounds: Int,
-      broadcastNodes: Boolean = true, materializeEdges: Boolean = true): DataFrame = {
+      broadcastNodes: Boolean = true): DataFrame = {
     require(rounds >= 1, s"kCoreRounds needs rounds >= 1, got $rounds")
     // see pageRankFixedPoint: broadcastNodes = false is the
     // billions-of-nodes shape (survivor-set semi-joins become shuffles)
     def side(df: DataFrame) = if (broadcastNodes) broadcast(df) else df
-    // only round 1 reads the input relation (later rounds read their
-    // own induced-subgraph checkpoints) — a landed scan can skip the
-    // up-front copy (see transitiveClosure)
-    val e00 = orientedEdges.select(col("u"), col("v"))
-    var e = if (materializeEdges) e00.localCheckpoint() else e00
-    // r16 (VERDICT r15 #2, guide §2.2/§2.4 — the per-round fixed job
-    // count is what anti-scales at high core counts): the per-round
-    // summary was an agg+crossJoin+localCheckpoint job chain over the
-    // just-materialized keep/e blocks, plus a distributed union of the
-    // 1-row checkpoints at the end. The counts are read off the
-    // materialized blocks directly (two single-stage count jobs) and
-    // the summary relation is a LOCAL table — one fewer eager
-    // multi-stage job per round, no final 1-row-per-round union plan.
-    // Identical rows, identical (round INT, n_nodes/n_edges BIGINT)
-    // schema (GraphAnalyticsSpec pins both).
+    var e = orientedEdges.select(col("u"), col("v"))
+    // the per-round counts are read off the materialized blocks (two
+    // single-stage count jobs) and the summary relation is a LOCAL
+    // table; (round INT, n_nodes/n_edges BIGINT) schema pinned in
+    // GraphAnalyticsSpec
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     for (i <- 1 to rounds) {
       val deg = e.select(col("u").as("node"))
@@ -234,7 +163,9 @@ object GraphOps {
       e = e.join(side(keep.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
         .join(side(keep.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
         .select(col("u"), col("v")).localCheckpoint()
-      Checkpoints.release(prevE) // consumed by keep + the new e, both materialized
+      // consumed by keep + the new e, both materialized; round 1's input
+      // is the caller's relation, not a checkpoint of this loop
+      if (i > 1) Checkpoints.release(prevE)
       rows += ((i, keep.count(), e.count()))
       Checkpoints.release(keep)
     }
@@ -246,25 +177,22 @@ object GraphOps {
   /** BFS frontier layers from a seed set over directed `edges(u, v)`:
     * emits `(hop, n_nodes)` for hop 0 (the seeds) through `hops`. Each
     * hop is one frontier⋈edges equi-join + an anti-join against the
-    * visited set — the [[transitiveClosure]] step with explicit distance
-    * accounting; `localCheckpoint` caps lineage per hop. */
+    * visited set — the closure step with explicit distance accounting;
+    * `localCheckpoint` caps lineage per hop. The edge relation is read
+    * in place every hop (a landed scan in g5). */
   def bfsLayers(edges: DataFrame, seeds: DataFrame, hops: Int,
-      broadcastNodes: Boolean = true, materializeEdges: Boolean = true): DataFrame = {
+      broadcastNodes: Boolean = true): DataFrame = {
     // frontier and visited are NODE-sized relations: broadcast them
     // onto the (big) edge scan so the edge list is never shuffled — a
     // hop costs one distinct over the candidate frontier, not a
     // re-shuffle of every edge. Billions of nodes flip broadcastNodes
     // off (the g2/g4 convention) and the same joins become shuffles.
     def side(df: DataFrame) = if (broadcastNodes) broadcast(df) else df
-    // materializeEdges=false: see transitiveClosure (landed edge scans)
-    val e0 = edges.select(col("u"), col("v"))
-    val e = if (materializeEdges) e0.localCheckpoint() else e0
+    val e = edges.select(col("u"), col("v"))
     var frontier = seeds.select(col("node")).distinct().localCheckpoint()
     var visited = frontier
-    // r16 (the kCoreRounds move, VERDICT r15 #2): per-hop counts read
-    // off the materialized frontier blocks, summary as a LOCAL table —
-    // one fewer eager 1-row checkpoint job per hop, no final union of
-    // per-hop 1-row RDD scans. Identical rows and schema.
+    // per-hop counts read off the materialized frontier blocks, summary
+    // as a LOCAL table (as in kCoreRounds)
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
     rows += ((0, frontier.count()))
     for (h <- 1 to hops) {
@@ -281,7 +209,6 @@ object GraphOps {
       Checkpoints.release(prevVisited)
       rows += ((h, frontier.count()))
     }
-    Checkpoints.release(e)
     Checkpoints.release(visited)
     if (!(frontier eq visited)) Checkpoints.release(frontier)
     edges.sparkSession.createDataFrame(rows.toSeq).toDF("hop", "n_nodes")
@@ -324,124 +251,35 @@ object GraphOps {
     lbl
   }
 
-  /** Per-node triangle counts over an undirected graph given as oriented
-    * distinct edges `(u, v)` with `u < v`. The orientation is the classic
-    * scale trick: every triangle is materialized exactly once as a wedge
-    * `u<v<w` probed against the closing edge `(u, w)` — never all 3!
-    * rotations — so the wedge join, not an all-pairs product, bounds the
-    * work (Σ out-deg² per node). Two equi-joins + one exploded aggregate;
-    * skewed hub nodes are AQE's skew-join case.
-    */
-  /** Reorient undirected edges (distinct `(u, v)` pairs, any initial
-    * orientation) so each edge points from its lower-`(degree, id)`
-    * endpoint — the classic triangle-count accelerator. Any total order
-    * leaves [[triangleCounts]] correct (each triangle still materializes
-    * exactly once, and per-node counts are orientation-invariant —
-    * asserted in GraphAnalyticsSpec), but degree order bounds every
-    * node's OUT-degree by O(√m), so the wedge relation shrinks from
-    * Σ deg² under an id order (a hub's full quadratic fan-out) to
-    * O(m^1.5) worst case. One node-sized degree aggregate, broadcast
-    * back onto the edge list — a narrow pre-pass; both endpoint joins
-    * reference the SAME deg plan (aliases, not re-projections) so
-    * ReuseExchange builds the broadcast once.
-    *
-    * Measured honestly: on the bench's near-regular part co-order graph
-    * (max deg 222 vs avg 120 at sf0.1) the wedge volume only drops
-    * 49.2M → 41.1M (−17%), roughly a wash against the pre-pass — the
-    * technique pays off on SKEWED (power-law) graphs, where a hub's
-    * deg² dominates; the wheel-fixture spec shows the mechanism (hub
-    * out-degree → 0). `broadcastNodes = false` is the billions-of-nodes
-    * shape (the g2/g4 convention): the node-sized degree relation joins
-    * as shuffles instead of broadcasts — same orientation either way. */
   /** Measured broadcast-vs-shuffle ROUTE for this module's node-sized
     * iteration relations (ranks, degrees, frontiers, survivor sets) —
     * [[DedupOps.ccRouteCard]] at graph grain: the distinct node set of
-    * the edge relation is priced at ~16 B/row against the 10 MiB
-    * broadcast threshold. One distinct-count over the endpoints (the
-    * relation every operator here derives anyway); integer arithmetic,
-    * so the registered t111 card hash-checks the same decision.
-    * Returns (n_nodes, est_bytes, broadcast_threshold, route). */
-  def nodeRouteCard(edges: DataFrame, srcCol: String = "u",
-      dstCol: String = "v",
-      thresholdBytes: Long = DedupOps.SessionThreshold,
-      bytesPerRow: Long = DedupOps.CcLabelBytesPerRow): DataFrame = {
-    val thr = DedupOps.resolveThreshold(edges, thresholdBytes)
-    edges.select(col(srcCol).as("node"))
-      .unionAll(edges.select(col(dstCol).as("node")))
+    * the `(u, v)` edge relation is priced at ~16 B/row against the
+    * session broadcast threshold ([[DedupOps.routeTail]]). One
+    * distinct-count over the endpoints (the relation every operator
+    * here derives anyway); integer arithmetic, so the registered t111
+    * card hash-checks the same decision. Returns (n_nodes, est_bytes,
+    * broadcast_threshold, route). */
+  def nodeRouteCard(edges: DataFrame): DataFrame =
+    DedupOps.routeTail(edges.select(col("u").as("node"))
+      .unionAll(edges.select(col("v").as("node")))
       .distinct()
       .agg(count(lit(1)).as("n_nodes"))
       .select(col("n_nodes"),
-        (col("n_nodes") * lit(bytesPerRow)).cast("long").as("est_bytes"))
-      .withColumn("broadcast_threshold", lit(thr))
-      .withColumn("route",
-        when(col("est_bytes") <= col("broadcast_threshold"), lit("broadcast"))
-          .otherwise(lit("shuffle")))
-  }
+        (col("n_nodes") * lit(DedupOps.CcLabelBytesPerRow)).cast("long").as("est_bytes")))
 
-  /** The 1-row route read behind the measured graph call sites (the
-    * measuredSalt class: once per operator run, never per round) —
-    * `broadcastNodes = measuredBroadcastNodes(edges)` replaces a
-    * hand-picked constant with [[nodeRouteCard]]'s verdict. */
-  def measuredBroadcastNodes(edges: DataFrame, srcCol: String = "u",
-      dstCol: String = "v",
-      thresholdBytes: Long = DedupOps.SessionThreshold): Boolean =
-    nodeRouteCard(edges, srcCol, dstCol, thresholdBytes)
-      .select(col("route")).head().getString(0) == "broadcast"
-
-  /** Estimated bytes per closure EDGE row — two keys per row, the
-    * cc_sym_edges arithmetic of the t110 card. */
-  val EdgeBytesPerRow: Long = 32L
-
-  /** Measured broadcast-vs-shuffle route for an EDGE relation (the
-    * stepping [[transitiveClosure]]'s per-round join side): one plain
-    * count — no distinct, every edge row ships — priced at
-    * [[EdgeBytesPerRow]] against the session broadcast threshold
-    * ([[DedupOps.sessionBroadcastThresholdBytes]]). */
-  def measuredBroadcastEdges(edges: DataFrame,
-      thresholdBytes: Long = DedupOps.SessionThreshold,
-      bytesPerRow: Long = EdgeBytesPerRow): Boolean = {
-    val thr = DedupOps.resolveThreshold(edges, thresholdBytes)
-    edges.agg(count(lit(1))).head().getLong(0) * bytesPerRow <= thr
-  }
-
-  /** `broadcastNodes = None` routes the degree relation by measurement
-    * ([[measuredBroadcastNodes]] — the degree table is node-sized, the
-    * exact relation [[nodeRouteCard]] prices); `Some(b)` forces the
-    * strategy. r15 (VERDICT r14 #3): the last constant-default
-    * broadcast in the module now follows the engine's measured-route
-    * convention. */
-  def degreeOriented(edges: DataFrame,
-      broadcastNodes: Option[Boolean] = None): DataFrame = {
-    val bc = broadcastNodes.getOrElse(measuredBroadcastNodes(edges))
-    def side(df: DataFrame) = if (bc) broadcast(df) else df
-    val deg = edges.select(col("u").as("node"))
-      .unionAll(edges.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val uFirst = col("du.deg") < col("dv.deg") ||
-      (col("du.deg") === col("dv.deg") && col("u") < col("v"))
-    edges
-      .join(side(deg.as("du")), col("u") === col("du.node"))
-      .join(side(deg.as("dv")), col("v") === col("dv.node"))
-      .select(when(uFirst, col("u")).otherwise(col("v")).as("eu"),
-        when(uFirst, col("v")).otherwise(col("u")).as("ev"))
-      .select(col("eu").as("u"), col("ev").as("v"))
-  }
-
-  /** Per-node triangle counts via adjacency-set intersection: the
+  /** Per-node triangle counts over an undirected graph given as
+    * distinct edges `(u, v)`, via adjacency-set intersection: the
     * triangles through edge (u,v) are |N(u) ∩ N(v)|, and a node's count
     * is half the sum over its incident edges (each triangle contributes
-    * via exactly two of the node's edges). Same exact counts as
-    * [[triangleCounts]] (spec-asserted) with a different cost shape:
-    * instead of materializing the Σ out-deg² wedge relation through two
-    * joins, it ships each node's sorted neighbor ARRAY onto its edges
-    * (rows = m, payload = Σ deg per side) and intersects per edge —
-    * no wedge shuffle, one aggregate. Wins when the wedge volume is
-    * large relative to m·avg-deg (dense, near-regular graphs — the
-    * bench's co-order graph); the wedge join wins on sparse skewed
-    * graphs where degree orientation caps out-degrees. */
-  def triangleCountsAdj(edges: DataFrame,
-      materializeEdges: Boolean = true): DataFrame =
-    edgeTriangleSupport(edges, materializeEdges)
+    * via exactly two of the node's edges). Instead of materializing the
+    * Σ out-deg² wedge relation through two joins, it ships each node's
+    * sorted neighbor ARRAY onto its edges (rows = m, payload = Σ deg per
+    * side) and intersects per edge — no wedge shuffle, one aggregate.
+    * Nodes in no triangle are omitted. Equals the plain-Scala wedge
+    * count `ReferenceForms.triangleCounts` (spec-asserted). */
+  def triangleCountsAdj(edges: DataFrame): DataFrame =
+    edgeTriangleSupport(edges)
       .select(explode(array(struct(col("u").as("node"), col("c")),
         struct(col("v").as("node"), col("c")))).as("s"))
       .select(col("s.node").as("node"), col("s.c").as("c"))
@@ -485,16 +323,13 @@ object GraphOps {
     * edges (rows = m, payload = Σ deg per side) and intersects per
     * edge — no wedge relation is ever materialized. The classic
     * strong-tie / community-backbone signal. Returns (u, v, c). */
-  def edgeTriangleSupport(edges: DataFrame,
-      materializeEdges: Boolean = true): DataFrame = {
-    // materializeEdges stays TRUE even for landed scans here, unlike
-    // the other loops: the edge relation feeds three consumers (sym
-    // twice via the union, the join spine once) and the adjacency
-    // aggregation re-derives the union per consumer without the copy —
-    // measured at sf0.1: landed-scan variant 2× slower (g3 2.2→4.3 s).
-    // The knob exists for callers whose edges are too big to copy.
-    val e0 = edges.select(col("u"), col("v"))
-    val e = if (materializeEdges) e0.localCheckpoint() else e0
+  def edgeTriangleSupport(edges: DataFrame): DataFrame = {
+    // the edge relation is checkpointed even when it is a landed scan:
+    // it feeds three consumers (sym twice via the union, the join spine
+    // once) and the adjacency aggregation re-derives the union per
+    // consumer without the copy — measured at sf0.1: the landed-scan
+    // variant ran 2× slower (g3 2.2→4.3 s).
+    val e = edges.select(col("u"), col("v")).localCheckpoint()
     val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
     val nb = sym.groupBy(col("u").as("node"))
       .agg(array_sort(collect_list(col("v"))).as("nbrs"))
@@ -505,23 +340,5 @@ object GraphOps {
       // generic intersect's per-row hash-set build
       .select(col("u"), col("v"),
         graft.expr.VectorExprs.sortedIntersectCountL(col("nu"), col("nv")).as("c"))
-  }
-
-  def triangleCounts(orientedEdges: DataFrame): DataFrame = {
-    // three references with three different join keys — ReuseExchange
-    // can't dedupe them, so land the (often expensive) edge list once
-    val e = orientedEdges.select(col("u"), col("v")).localCheckpoint()
-    // the wedge relation is quadratically bigger than the edge list
-    // (Σ out-deg² rows) — shuffle_hash keeps the joins partitioned (the
-    // scale-correct shape) while building the hash table from the edge
-    // side instead of SORTING the wedge side (sort-merge's cost here)
-    val wedges = e.as("e1").join(e.as("e2").hint("shuffle_hash"),
-        col("e1.v") === col("e2.u"))
-      .select(col("e1.u").as("u"), col("e1.v").as("v"), col("e2.v").as("w"))
-    val closing = e.select(col("u").as("cu"), col("v").as("cw"))
-    val tri = wedges.join(closing.hint("shuffle_hash"),
-      col("u") === col("cu") && col("w") === col("cw"))
-    tri.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
   }
 }

@@ -85,62 +85,47 @@ object IndexMaintenance {
     * `broadcastTombstones`. Broadcast cost scales with the backlog
     * (driver-collected, shipped to every task); the shuffled anti-join
     * repartitions the whole index. So: broadcast while the backlog is
-    * under an absolute driver budget (`maxBroadcastRows`) OR under
-    * `1/indexFrac` of the index rows (a backlog that small shuffles
-    * nothing worth saving). Integer arithmetic only — the ladder is
-    * expressible in ANSI SQL, so the decision itself is hash-checked
-    * (t94). Returns a 1-row card
+    * under an absolute driver budget (100,000 rows) OR under 1/16 of
+    * the index rows (a backlog that small shuffles nothing worth
+    * saving). Integer arithmetic only — the ladder is expressible in
+    * ANSI SQL, so the decision itself is hash-checked (t94). Returns a
+    * 1-row card
     * (n_index_rows, n_backlog, broadcast_cap, route). */
-  def gateRouteCard(index: DataFrame, tombstones: DataFrame, id: String,
-      maxBroadcastRows: Long = 100000L, indexFrac: Long = 16L): DataFrame =
+  def gateRouteCard(index: DataFrame, tombstones: DataFrame, id: String): DataFrame =
     index.agg(count(lit(1)).as("n_index_rows"))
       .crossJoin(tombstones.select(col(id)).distinct()
         .agg(count(lit(1)).as("n_backlog")))
-      .withColumn("broadcast_cap", greatest(lit(maxBroadcastRows),
-        expr(s"CAST(n_index_rows div $indexFrac AS BIGINT)")))
+      .withColumn("broadcast_cap", greatest(lit(100000L),
+        expr("CAST(n_index_rows div 16 AS BIGINT)")))
       .withColumn("route",
         when(col("n_backlog") <= col("broadcast_cap"), "broadcast")
           .otherwise("shuffle"))
-
-  /** [[compact]] with the route picked BY MEASUREMENT from
-    * [[gateRouteCard]] — the wired form of the decision. The collect is
-    * a 1-row decision scalar off two counts (the measuredSalt class of
-    * read): it runs once per compaction, never per row. */
-  def compactMeasured(index: DataFrame, tombstones: DataFrame, id: String,
-      maxBroadcastRows: Long = 100000L, indexFrac: Long = 16L): DataFrame = {
-    val route = gateRouteCard(index, tombstones, id, maxBroadcastRows, indexFrac)
-      .select(col("route")).head().getString(0)
-    compact(index, tombstones, id, broadcastTombstones = route == "broadcast")
-  }
 
   /** Fragmentation ledger for one index grain — the measured input to
     * the compact-or-not decision, all integer arithmetic: row counts by
     * provenance (`isDelta` marks rows the growth path appended) and
     * liveness (ids in `tombstones` are retracted but physically
-    * present), the delta/dead fractions in portable micro-units, and
-    * the due flag. Due when deltas ≥ rows/`deltaDueDenom` or dead rows
-    * ≥ rows/`deadDueDenom` (integer cross-multiply — no float
-    * threshold). One row; one pass over the index. */
+    * present; the backlog is broadcast, small by construction), the
+    * delta/dead fractions in portable micro-units, and the due flag
+    * ([[decisionTail]]). One row; one pass over the index. */
   def fragmentationCard(index: DataFrame, tombstones: DataFrame, id: String,
-      isDelta: Column, grain: String,
-      deltaDueDenom: Long = 20L, deadDueDenom: Long = 50L,
-      broadcastTombstones: Boolean = true): DataFrame = {
-    val tombDistinct = tombstones.select(col(id)).distinct()
+      isDelta: Column, grain: String): DataFrame = {
+    val tomb = tombstones.select(col(id)).distinct()
       .withColumn("__dead", lit(true))
-    val tomb = if (broadcastTombstones) broadcast(tombDistinct) else tombDistinct
-    decisionTail(index.join(tomb, Seq(id), "left")
+    decisionTail(index.join(broadcast(tomb), Seq(id), "left")
       .agg(count(lit(1)).as("n_rows"),
         sum(when(isDelta, 1L).otherwise(0L)).as("n_delta_rows"),
         sum(when(col("__dead"), 1L).otherwise(0L)).as("n_dead_rows"))
       .select(lit(grain).as("grain"), col("n_rows"), col("n_delta_rows"),
-        col("n_dead_rows")), deltaDueDenom, deadDueDenom)
+        col("n_dead_rows")))
   }
 
   /** The decision tail shared by the batch card and the streamed
     * monitor: (grain, n_rows, n_delta_rows, n_dead_rows) → the full
-    * card with live count, micro-unit fractions and the due flag. */
-  def decisionTail(counts: DataFrame,
-      deltaDueDenom: Long = 20L, deadDueDenom: Long = 50L): DataFrame =
+    * card with live count, micro-unit fractions and the due flag. Due
+    * when deltas ≥ rows/20 or dead rows ≥ rows/50 (integer
+    * cross-multiply — no float threshold). */
+  def decisionTail(counts: DataFrame): DataFrame =
     counts.select(col("grain"), col("n_rows"), col("n_delta_rows"),
       col("n_dead_rows"),
       (col("n_rows") - col("n_dead_rows")).as("n_live_rows"),
@@ -148,6 +133,6 @@ object IndexMaintenance {
         / col("n_rows").cast("double")).as("delta_frac"),
       TextOps.round6p(col("n_dead_rows").cast("double")
         / col("n_rows").cast("double")).as("dead_frac"),
-      (col("n_delta_rows") * deltaDueDenom >= col("n_rows") ||
-        col("n_dead_rows") * deadDueDenom >= col("n_rows")).as("compact_due"))
+      (col("n_delta_rows") * 20L >= col("n_rows") ||
+        col("n_dead_rows") * 50L >= col("n_rows")).as("compact_due"))
 }

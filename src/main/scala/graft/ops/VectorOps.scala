@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *   - [[topKNeighbors]] broadcasts the (small) query set against the
   *     full corpus: a broadcast nested-loop with per-query top-k via
   *     window — linear in corpus size, embarrassingly parallel;
-  *   - [[topSimilarPairs]] is the quadratic exact baseline (self-join),
-  *     correct at any SF but intended for candidate rescoring;
+  *   - the quadratic exact all-pairs self-join is only a test-scope
+  *     reference (`ReferenceForms.scoredPairs`) for the LSH recall specs;
   *   - [[lshAnnTopK]] is the 100 TB path: deterministic random-hyperplane
   *     signs bucket the corpus, candidates come from an equi-join on the
   *     bucket key, exact cosine rescoring runs only inside buckets.
@@ -34,35 +34,6 @@ object VectorOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-`k` most-similar pairs in the corpus (self-join on
-    * id < id). Quadratic — the correctness baseline / rescoring kernel.
-    * Norms are hoisted to per-row columns BEFORE the join: one dot per
-    * pair instead of three (identical IEEE result, 3× less work on the
-    * O(n²) side). */
-  def topSimilarPairs(vecs: DataFrame, id: String, vec: String, k: Int): DataFrame = {
-    val a = vecs.select(col(id).as("id_x"), col(vec).as("v_x"), norm(col(vec)).as("norm_x"))
-    val b = vecs.select(col(id).as("id_y"), col(vec).as("v_y"), norm(col(vec)).as("norm_y"))
-    a.join(b, col("id_x") < col("id_y"))
-      .select(col("id_x"), col("id_y"),
-        TextOps.round6p(dot(col("v_x"), col("v_y")) / (col("norm_x") * col("norm_y"))).as("cos"))
-      .orderBy(col("cos").desc, col("id_x"), col("id_y"))
-      .limit(k)
-  }
-
-  /** Embedding-cosine near-duplicate pairs: all pairs with cosine ≥
-    * `threshold` (exact; the dedup-by-embedding primitive). Same kernel
-    * as [[topSimilarPairs]]; at corpus scale the LSH bucketing of
-    * [[lshAnnTopK]] prefilters candidates and this runs as the exact
-    * rescoring stage. */
-  def nearDupPairs(vecs: DataFrame, id: String, vec: String, threshold: Double): DataFrame = {
-    val a = vecs.select(col(id).as("id_x"), col(vec).as("v_x"), norm(col(vec)).as("norm_x"))
-    val b = vecs.select(col(id).as("id_y"), col(vec).as("v_y"), norm(col(vec)).as("norm_y"))
-    a.join(b, col("id_x") < col("id_y"))
-      .select(col("id_x"), col("id_y"),
-        TextOps.round6p(dot(col("v_x"), col("v_y")) / (col("norm_x") * col("norm_y"))).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
   /** Embedding near-dup, the 100 TB default: LSH-bucketed candidate
     * generation + exact cosine rescoring. Candidates come from a banded
     * self-equi-join on deterministic sign-random-projection bucket keys
@@ -70,8 +41,8 @@ object VectorOps {
     * with hoisted norms and the native dot kernel. Deterministic planes ⇒
     * the candidate set (and thus the result) is engine-reproducible — the
     * DuckDB oracle mirrors the buckets exactly. Recall vs the exact
-    * all-pairs form ([[nearDupPairs]], kept as the sf0.01 cross-check in
-    * VectorOpsSpec) is ≥0.9 at the registered parameters. */
+    * all-pairs form (the sf0.01 cross-check in VectorOpsSpec) is ≥0.9
+    * at the registered parameters. */
   def lshNearDupPairs(vecs: DataFrame, id: String, vec: String, threshold: Double,
       tables: Int = 16, planes: Int = 4, salt: Int = 1): DataFrame =
     lshScoredPairs(vecs, id, vec, tables, planes, salt)
@@ -87,14 +58,14 @@ object VectorOps {
     lshScoredPairsFrom(buckets, vecs, id, vec, salt)
       .filter(col("cos") >= threshold)
 
-  /** Top-`k` most-similar pairs, LSH-fronted — the 100 TB form of
-    * [[topSimilarPairs]]: same deterministic bucketed candidate
+  /** Top-`k` most-similar pairs, LSH-fronted — the 100 TB form of the
+    * exact quadratic self-join: same deterministic bucketed candidate
     * generation as [[lshNearDupPairs]], then a global top-k
     * (TakeOrdered, never a full sort) over the rescored candidates.
     * Highly-similar pairs collide in ≥1 of the 16 tables w.h.p., so
     * top-of-the-ranking recall vs the exact quadratic form is ≥0.95 at
-    * the registered parameters (asserted in VectorOpsSpec, which keeps
-    * [[topSimilarPairs]] as the cross-check). */
+    * the registered parameters (asserted in VectorOpsSpec against the
+    * exact form). */
   def lshTopSimilarPairs(vecs: DataFrame, id: String, vec: String, k: Int,
       tables: Int = 16, planes: Int = 4, salt: Int = 1): DataFrame =
     lshScoredPairs(vecs, id, vec, tables, planes, salt)

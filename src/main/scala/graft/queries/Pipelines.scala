@@ -79,13 +79,13 @@ object Pipelines {
         concat(lit("p"), col("l_partkey").cast("string")).as("dst"))
 
   /** Graph node-route cards, LANDED once per corpus snapshot beside
-    * their edge landings (VERDICT r14 #2 — the t75 landing-integrity
-    * pattern applied to the route read): t111's arithmetic is priced
-    * at index-build time, so the g2/g4/g5 route reads are 1-row landed
-    * lookups instead of a distinct-count over edge endpoints re-paid
-    * per operator run (~0.5 s each at sf0.1). One card per distinct
-    * graph — symmetrization does not change the endpoint set, so the
-    * co-order card serves g4 (raw edges) and g5 (symmetrized) alike.
+    * their edge landings (the t75 landing-integrity pattern applied to
+    * the route read): t111's arithmetic is priced at index-build time,
+    * so the g2/g4/g5 route reads are 1-row landed lookups instead of a
+    * distinct-count over edge endpoints re-paid per operator run
+    * (~0.5 s each at sf0.1). One card per distinct graph —
+    * symmetrization does not change the endpoint set, so the co-order
+    * card serves g4 (raw edges) and g5 (symmetrized) alike.
     * t75 audits both cards against oracle recomputes from lineitem;
     * the registered t111 card reads this landing verbatim. */
   private[graft] def pagerankRouteCardLanded(
@@ -95,27 +95,21 @@ object Pipelines {
     }
 
   /** The pagerank-graph node-route card computed straight off the
-    * (l_suppkey, l_partkey) pair table — r15 (guide §2.3): the s/p
-    * prefixes make supplier and part node ids DISJOINT, so the distinct
-    * endpoint count of the (symmetrized) pagerank graph = distinct
+    * (l_suppkey, l_partkey) pair table: the s/p prefixes make supplier
+    * and part node ids DISJOINT, so the distinct endpoint count of the
+    * (symmetrized) pagerank graph = distinct
     * suppliers + distinct parts — two integer distinct counts in ONE
     * aggregate, instead of materializing 2·|pairs| prefixed strings and
     * deduplicating them. Value-equal to `GraphOps.nodeRouteCard` over
     * the symmetrized [[supplierPartEdges]] (spec: GraphAnalyticsSpec);
     * the t111 oracle states this same arithmetic from lineitem. */
-  private[graft] def spNodeRouteCard(pairs: org.apache.spark.sql.DataFrame) = {
-    val thr = DedupOps.sessionBroadcastThresholdBytes(pairs.sparkSession)
-    pairs
+  private[graft] def spNodeRouteCard(pairs: org.apache.spark.sql.DataFrame) =
+    DedupOps.routeTail(pairs
       .agg((countDistinct(col("l_suppkey")) + countDistinct(col("l_partkey")))
         .as("n_nodes"))
       .select(col("n_nodes"),
         (col("n_nodes") * lit(DedupOps.CcLabelBytesPerRow)).cast("long")
-          .as("est_bytes"))
-      .withColumn("broadcast_threshold", lit(thr))
-      .withColumn("route",
-        when(col("est_bytes") <= col("broadcast_threshold"), lit("broadcast"))
-          .otherwise(lit("shuffle")))
-  }
+          .as("est_bytes")))
 
   private[graft] def coorderRouteCardLanded(
       s: org.apache.spark.sql.SparkSession, dir: String) =
@@ -1459,9 +1453,8 @@ object Pipelines {
         .select(col("doc_id").as("child"),
           expr("(doc_id - 1) div 2").as("parent"))
       // the category tree is deep-and-narrow — the doubling form's
-      // ⌈log₂ depth⌉ rounds beat the stepping form's depth rounds
-      // (spec-asserted identical; the stepping form stays the choice
-      // for shallow graphs with huge closures)
+      // ⌈log₂ depth⌉ rounds beat stepping's depth rounds (spec-asserted
+      // identical to the stepping reference)
       GraphOps.transitiveClosureDoubling(edges)
         .groupBy(col("node"))
         .agg(count(lit(1)).as("n_ancestors"), min(col("ancestor")).as("top_ancestor"))
@@ -1493,13 +1486,11 @@ object Pipelines {
       val base = supplierPartEdges(s, dir)
       val edges = base.unionByName(
         base.select(col("dst").as("src"), col("src").as("dst")))
-      // r14: the node-relation route comes from the measurement (t111's
-      // card arithmetic), not a hand-picked default — the measured-CC
-      // move at graph grain. r15: the card is READ FROM ITS LANDING
-      // (1-row lookup, audited by t75) instead of re-counted per run.
+      // the node-relation route comes from the measurement (t111's card
+      // arithmetic), READ FROM ITS LANDING (1-row lookup, audited by
+      // t75) instead of re-counted per run
       GraphOps.pageRankFixedPoint(edges, iters = 2,
           broadcastNodes = DedupOps.cardIsBroadcast(pagerankRouteCardLanded(s, dir)),
-          materializeEdges = false,
           // edges is base ∪ reversed two lines up — symmetric by
           // construction, so the node set derives from the degree
           // relation (no union+distinct over the full edge list)
@@ -1642,8 +1633,7 @@ object Pipelines {
         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM e3)
         |ORDER BY round""".stripMargin) { (s, dir) =>
       GraphOps.kCoreRounds(partCoOrderEdges(s, dir), k = 100, rounds = 3,
-          broadcastNodes = DedupOps.cardIsBroadcast(coorderRouteCardLanded(s, dir)),
-          materializeEdges = false)
+          broadcastNodes = DedupOps.cardIsBroadcast(coorderRouteCardLanded(s, dir)))
         .orderBy(col("round"))
     },
 
@@ -1680,8 +1670,7 @@ object Pipelines {
       GraphOps.bfsLayers(edges, seeds, hops = 3,
           // the co-order card serves the symmetrized graph too: union
           // with reversed edges leaves the endpoint set unchanged
-          broadcastNodes = DedupOps.cardIsBroadcast(coorderRouteCardLanded(s, dir)),
-          materializeEdges = false)
+          broadcastNodes = DedupOps.cardIsBroadcast(coorderRouteCardLanded(s, dir)))
         .orderBy(col("hop"))
     },
 

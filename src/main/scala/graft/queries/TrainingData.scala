@@ -498,10 +498,6 @@ object TrainingData {
     * verdict. */
   private[graft] def joinRouteCardFrom(s: SparkSession, dir: String,
       profile: DataFrame): DataFrame = {
-    // session-conf budget (r15, the ccRouteCard convention): 10485760
-    // under Spark's default, so the registered s35 card hash-matches
-    // its literal-threshold oracle on the driver's session
-    val thr = DedupOps.sessionBroadcastThresholdBytes(s)
     val lm = lmUnigrams(s, dir)
       .agg(count(lit(1)).as("n_rows"),
         (sum(length(col("tok"))) + count(lit(1)) * lit(8L)).cast("long").as("est_bytes"))
@@ -515,10 +511,9 @@ object TrainingData {
     val seeds = profile.select(lit("seed_grams").as("relation"),
       col("seed_rows").as("n_rows"),
       (col("seed_rows") * lit(24L)).cast("long").as("est_bytes"))
-    lm.unionByName(sigs).unionByName(bands).unionByName(seeds)
-      .withColumn("broadcast_threshold", lit(thr))
-      .withColumn("route",
-        when(col("est_bytes") <= thr, "broadcast").otherwise("shuffle"))
+    // session-conf budget: 10485760 under Spark's default, so the
+    // registered s35 card hash-matches its literal-threshold oracle
+    DedupOps.routeTail(lm.unionByName(sigs).unionByName(bands).unionByName(seeds))
       .orderBy(col("relation"))
   }
 
@@ -588,9 +583,9 @@ object TrainingData {
   private[graft] val MinhashK = 16
   private[graft] val MinhashBands = 4
 
-  /** The CC node-route card, LANDED once per corpus snapshot (VERDICT
-    * r14 #2 — the t75 landing-integrity pattern applied to the route
-    * read itself): t110's arithmetic priced once at index-build time
+  /** The CC node-route card, LANDED once per corpus snapshot (the t75
+    * landing-integrity pattern applied to the route read itself):
+    * t110's arithmetic priced once at index-build time
     * instead of a count re-paid by every consumer run. The
     * [[dedupClusters]] build and the registered t110 card both read
     * this 1-row landing; t75 audits it against an oracle recompute
@@ -620,14 +615,14 @@ object TrainingData {
     // changes HOW the build runs, and it is picked BY MEASUREMENT from
     // the t110 card's own arithmetic (ccRouteCard: label relation at
     // 16 B/row vs the broadcast threshold), never a hand-picked
-    // default. r15: the card is read from its LANDING (built beside
-    // this one, audited by t75) instead of re-counted inside the build.
+    // default. The card is read from its LANDING (built beside this
+    // one, audited by t75) instead of re-counted inside the build.
     graft.Landing.parquet(s, dir, "dedup_clusters.parquet") {
-      DedupOps.connectedComponentsRouted(Tables(s, dir, "documents"),
+      DedupOps.connectedComponents(Tables(s, dir, "documents"),
         "doc_id",
         DedupOps.minhashLshPairsFrom(docShingles(s, dir),
           docMinhashSigs(s, dir), "doc_id", 0.8, MinhashBands),
-        route = Some(DedupOps.cardIsBroadcast(ccRouteCardLanded(s, dir))))
+        broadcastNodes = DedupOps.cardIsBroadcast(ccRouteCardLanded(s, dir)))
     }
 
   /** The qualifying substring-run relation (id_x, id_y, diag, py_start,
@@ -3829,9 +3824,8 @@ object TrainingData {
       def cardRow(name: String, card: DataFrame) =
         card.filter(assert_true(
             col("est_bytes") === col("n_nodes") * lit(DedupOps.CcLabelBytesPerRow)
-              && col("route") === when(
-                col("est_bytes") <= col("broadcast_threshold"),
-                "broadcast").otherwise("shuffle"),
+              && col("route") ===
+                DedupOps.route(col("est_bytes"), col("broadcast_threshold")),
             concat(lit(s"route card '$name' failed internal consistency: ("),
               col("n_nodes"), lit(", "), col("est_bytes"), lit(", "),
               col("broadcast_threshold"), lit(", "), col("route"), lit(")")))
@@ -4742,8 +4736,8 @@ object TrainingData {
     // ADVICE-r11 escape hatch, now picked by measurement instead of a
     // hand-set flag). Two counts collapsing to a 1-row card, integer
     // ladder, so the decision itself is hash-checked;
-    // IndexMaintenanceSpec proves the wired form (compactMeasured)
-    // routes each way under forced thresholds with identical rows.
+    // IndexMaintenanceSpec prices a backlog past the cap as 'shuffle'
+    // and shows compact() returns identical rows on either route.
     QueryDef.sql(
       "t94_gate_route",
       s"""WITH toks AS ($oToks),
@@ -4888,10 +4882,9 @@ object TrainingData {
       def card(name: String, df: DataFrame, bytes: org.apache.spark.sql.Column) =
         df.agg(count(lit(1)).as("n_rows"), bytes.cast("long").as("est_bytes"))
           .select(lit(name).as("relation"), col("n_rows"), col("est_bytes"))
-      // session-conf budget (r15, the ccRouteCard convention) — equals
-      // the oracle's 10485760 literal under Spark's default conf
-      val thr = DedupOps.sessionBroadcastThresholdBytes(s)
-      card("lm_unigrams", lmUnigrams(s, dir),
+      // session-conf budget (routeTail) — equals the oracle's 10485760
+      // literal under Spark's default conf
+      DedupOps.routeTail(card("lm_unigrams", lmUnigrams(s, dir),
           sum(length(col("tok"))) + count(lit(1)) * lit(8L))
         .unionByName(card("doc_minhash_sigs", docMinhashSigs(s, dir),
           count(lit(1)) * lit(136L)))
@@ -4900,10 +4893,7 @@ object TrainingData {
             MinhashBands, MinhashK / MinhashBands),
           count(lit(1)) * lit(44L)))
         .unionByName(card("seed_grams", seedGramsLanded(s, dir),
-          count(lit(1)) * lit(24L)))
-        .withColumn("broadcast_threshold", lit(thr))
-        .withColumn("route",
-          when(col("est_bytes") <= thr, "broadcast").otherwise("shuffle"))
+          count(lit(1)) * lit(24L))))
         .orderBy(col("relation"))
     },
 
@@ -4940,11 +4930,10 @@ object TrainingData {
          |       ELSE 'shuffle' END AS route
          |FROM rows ORDER BY relation""".stripMargin) { (s, dir) =>
       // cc_labels row comes from the LANDED ccRouteCard VERBATIM — the
-      // same 1-row landing the dedupClusters build routes from (r14:
-      // the card in the record IS the decision the executed plans
-      // take; r15: both read one materialized card, so a stale or
-      // wrongly-parameterized landing breaks this hash — the t75
-      // integrity move; card↔plan agreement pinned in DedupOpsSpec)
+      // same 1-row landing the dedupClusters build routes from: the card
+      // in the record IS the decision the executed plans take, so a
+      // stale or wrongly-parameterized landing breaks this hash (the
+      // t75 integrity move; card↔plan agreement pinned in DedupOpsSpec)
       val labels = ccRouteCardLanded(s, dir)
         .select(lit("cc_labels").as("relation"),
           col("n_nodes").as("n_rows"), col("est_bytes"),

@@ -98,4 +98,50 @@ object ReferenceForms {
   }
 
   def fixParamsUdf(m: Column): Column = fixKvUdf(map_keys(m), map_values(m))
+
+  /** The exact quadratic scored self-join over embeddings: every pair
+    * `id_x < id_y` with its cosine (norms hoisted per row, rounded like
+    * the LSH forms). The all-pairs baseline that the recall specs hold
+    * [[graft.ops.VectorOps.lshNearDupPairs]] (filter on `cos`) and
+    * [[graft.ops.VectorOps.lshTopSimilarPairs]] (top-k on `cos`) to. */
+  def scoredPairs(vecs: DataFrame, id: String, vec: String): DataFrame = {
+    import graft.ops.VectorOps.{dot, norm}
+    val a = vecs.select(col(id).as("id_x"), col(vec).as("v_x"), norm(col(vec)).as("norm_x"))
+    val b = vecs.select(col(id).as("id_y"), col(vec).as("v_y"), norm(col(vec)).as("norm_y"))
+    a.join(b, col("id_x") < col("id_y"))
+      .select(col("id_x"), col("id_y"), graft.ops.TextOps.round6p(
+        dot(col("v_x"), col("v_y")) / (col("norm_x") * col("norm_y"))).as("cos"))
+  }
+
+  /** [[graft.ops.GraphOps.transitiveClosureDoubling]] as a plain set
+    * fixpoint over `(child, parent)` pairs, stepping one edge per
+    * round: every (node, ancestor) pair reachable through the edges. */
+  def transitiveClosure(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    val parents = edges.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2) }
+    var closure = edges.toSet
+    var frontier = closure
+    while (frontier.nonEmpty) {
+      frontier = (for {
+        (node, anc) <- frontier
+        next <- parents.getOrElse(anc, Nil)
+      } yield (node, next)) -- closure
+      closure ++= frontier
+    }
+    closure
+  }
+
+  /** [[graft.ops.GraphOps.triangleCountsAdj]] as a plain wedge count
+    * over an undirected edge set (either orientation): for every wedge
+    * u < v < w whose three edges exist, each corner counts one
+    * triangle. Nodes in no triangle are omitted. */
+  def triangleCounts(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val es = edges.map { case (u, v) => (math.min(u, v), math.max(u, v)) }.toSet
+    val nodes = es.flatMap { case (u, v) => Seq(u, v) }.toSeq.sorted
+    val corners = for {
+      u <- nodes; v <- nodes if v > u && es((u, v))
+      w <- nodes if w > v && es((v, w)) && es((u, w))
+      n <- Seq(u, v, w)
+    } yield n
+    corners.groupBy(identity).map { case (n, ts) => n -> ts.size.toLong }
+  }
 }

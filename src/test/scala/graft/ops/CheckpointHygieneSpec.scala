@@ -54,7 +54,8 @@ class CheckpointHygieneSpec extends SparkSpec {
       GraphOps.pageRankFixedPoint(edges, iters = 5).count()
     }
     assert(n == 30)
-    assert(kept <= 2, s"expected ≤2 surviving checkpoints (edges + round iters-1), got $kept")
+    // the edge list is read in place; only round iters-1 is checkpointed
+    assert(kept <= 1, s"expected ≤1 surviving checkpoint (round iters-1), got $kept")
   }
 
   test("kCoreRounds keeps only the 1-row per-round summaries") {
@@ -81,16 +82,6 @@ class CheckpointHygieneSpec extends SparkSpec {
     assert(rows.map(r => (r.getInt(0), r.getLong(1))).toSet ==
       Set((0, 1L), (1, 1L), (2, 1L), (3, 1L), (4, 1L)))
     assert(kept <= 5, s"expected ≤5 surviving 1-row summaries, got $kept")
-  }
-
-  test("transitiveClosure keeps only the final closure checkpoint") {
-    import spark.implicits._
-    val edges = (1 until 10).map(i => ((i + 1).toLong, i.toLong)).toDF("child", "parent")
-    val (n, kept) = newPersistent {
-      GraphOps.transitiveClosure(edges).count()
-    }
-    assert(n == 45) // node i+1 has i ancestors on a 10-node path
-    assert(kept <= 1, s"expected ≤1 surviving checkpoint (the closure), got $kept")
   }
 
   test("transitiveClosureDoubling keeps only the final closure checkpoint") {

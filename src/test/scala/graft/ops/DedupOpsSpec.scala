@@ -258,8 +258,9 @@ class DedupOpsSpec extends SparkSpec {
     import spark.implicits._
     // card arithmetic == the registered t110 cc_labels row: 16 B/row
     // against the 10 MiB threshold (10 485 760 B → flip at 655 361 rows)
+    def route(nodes: DataFrame) = DedupOps.ccRouteCard(nodes).head().getAs[String]("route")
     val small = Seq(1L, 2L, 3L).toDF("doc_id")
-    assert(DedupOps.ccChosenRoute(small) == "broadcast")
+    assert(route(small) == "broadcast")
     val big = spark.range(700000L).select(col("id").as("doc_id"))
     val card = DedupOps.ccRouteCard(big).head()
     assert(card.getAs[Long]("n_nodes") == 700000L)
@@ -277,7 +278,7 @@ class DedupOpsSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val round = DedupOps.ccRound(sym, labelsBig, "doc_id",
-        broadcastNodes = DedupOps.ccChosenRoute(big) == "broadcast")
+        broadcastNodes = DedupOps.cardIsBroadcast(DedupOps.ccRouteCard(big)))
       val plan = round.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
         s"measured route 'shuffle' must drop the broadcast hint:\n$plan")
@@ -292,24 +293,23 @@ class DedupOpsSpec extends SparkSpec {
     assert(measured == toMap(DedupOps.connectedComponents(nodes, "doc_id", ccPairs)))
     assert(measured == toMap(DedupOps.connectedComponents(nodes, "doc_id", ccPairs,
       broadcastNodes = false)))
-    // a forced tiny threshold flips the same fixture to the shuffle route
-    assert(DedupOps.ccChosenRoute(nodes, thresholdBytes = 1L) == "shuffle")
-    assert(measured == toMap(DedupOps.connectedComponentsMeasured(
-      nodes, "doc_id", ccPairs, thresholdBytes = 1L)))
-    // r15 (VERDICT r14 #4): the DEFAULT threshold is the session's own
-    // autoBroadcastJoinThreshold — flipping the conf flips the route
+    // the threshold is the session's own autoBroadcastJoinThreshold —
+    // flipping the conf flips the route, and the measured form returns
+    // the same clusters through the shuffle variant
     val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
-      assert(DedupOps.ccChosenRoute(nodes) == "shuffle",
+      assert(route(nodes) == "shuffle",
         "7 label rows (112 B) must price past a 16 B session budget")
       assert(DedupOps.ccRouteCard(nodes).head()
         .getAs[Long]("broadcast_threshold") == 16L)
+      assert(measured == toMap(DedupOps.connectedComponentsMeasured(
+        nodes, "doc_id", ccPairs)))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(DedupOps.ccChosenRoute(nodes) == "shuffle",
+      assert(route(nodes) == "shuffle",
         "operator-disabled broadcast must mean 'never broadcast'")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-    assert(DedupOps.ccChosenRoute(nodes) == "broadcast",
+    assert(route(nodes) == "broadcast",
       "restored default conf prices the tiny fixture as broadcast again")
   }
 
@@ -375,16 +375,20 @@ class DedupOpsSpec extends SparkSpec {
           .select(col("id_x"), col("id_y")))
       .select(col("doc_id"), col("cluster_id"))
     val removed = Seq(2L, 4L).toDF("doc_id")
-    def run(b: Boolean) = DedupOps.retractFromClusters(landed, removed,
-        "doc_id", sh, sigs, threshold = 0.25, bands = 16,
-        broadcastNodes = Some(b))
+    def run() = DedupOps.retractFromClusters(landed, removed,
+        "doc_id", sh, sigs, threshold = 0.25, bands = 16)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val base = run(true)
+    val base = run()
     assert(base == Map(1L -> 1L, 3L -> 3L, 5L -> 5L, 6L -> 6L))
+    // auto-broadcast off (-1) prices every node set past the session
+    // budget, so the repair's measured CC runs the shuffle variant
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try assert(run(false) == base)
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    try {
+      assert(DedupOps.ccRouteCard(rdocs.select(col("doc_id"))).head()
+        .getAs[String]("route") == "shuffle")
+      assert(run() == base)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("minhashLshPairs with salt: identical result on the real corpus") {

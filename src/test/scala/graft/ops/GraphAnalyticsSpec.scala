@@ -123,15 +123,15 @@ class GraphAnalyticsSpec extends SparkSpec {
     // Triangles: (1,2,3) and (2,3,4).
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("u", "v")
-    val got = GraphOps.triangleCounts(edges).as[(Long, Long)].collect().toMap
+    val got = GraphOps.triangleCountsAdj(edges).as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
   }
 
   test("triangleCounts is partition-invariant") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L), (1L, 4L))
       .toDF("u", "v")
-    val a = GraphOps.triangleCounts(edges).as[(Long, Long)].collect().toMap
-    val b = GraphOps.triangleCounts(edges.repartition(5)).as[(Long, Long)].collect().toMap
+    val a = GraphOps.triangleCountsAdj(edges).as[(Long, Long)].collect().toMap
+    val b = GraphOps.triangleCountsAdj(edges.repartition(5)).as[(Long, Long)].collect().toMap
     assert(a == b)
     // K4: every vertex sits in C(3,2) = 3 triangles
     assert(a == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
@@ -139,7 +139,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("triangleCounts: triangle-free graph yields no rows") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("u", "v")
-    assert(GraphOps.triangleCounts(edges).isEmpty)
+    assert(GraphOps.triangleCountsAdj(edges).isEmpty)
   }
 
   test("bfsLayers walks a path graph one hop per layer, disconnected nodes unreached") {
@@ -171,36 +171,19 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("triangleCountsAdj ≡ wedge-join triangleCounts; edge support counts the wheel") {
     // wheel W8: per-edge support — every rim edge closes with the hub
     // (and rim neighbors), every spoke closes with the 2 rim neighbors
-    val edges = ((1L to 8L).map(i => (0L, i)) ++
-      (1L to 7L).map(i => (i, i + 1L)) :+ (1L, 8L)).toDF("u", "v")
-    val wedge = GraphOps.triangleCounts(GraphOps.degreeOriented(edges))
-      .as[(Long, Long)].collect().toMap
+    val wheel = (1L to 8L).map(i => (0L, i)) ++
+      (1L to 7L).map(i => (i, i + 1L)) :+ (1L, 8L)
+    val edges = wheel.toDF("u", "v")
+    val wedge = graft.ReferenceForms.triangleCounts(wheel)
+    // 8 triangles (0, i, i+1): the hub sits in all 8, every rim node in 2
+    assert(wedge == ((1L to 8L).map(_ -> 2L) :+ (0L -> 8L)).toMap)
     val adj = GraphOps.triangleCountsAdj(edges).as[(Long, Long)].collect().toMap
-    assert(adj == wedge, "adjacency-intersection counts must equal the wedge join's")
+    assert(adj == wedge, "adjacency-intersection counts must equal the wedge count's")
     val support = GraphOps.edgeTriangleSupport(edges)
       .as[(Long, Long, Long)].collect().map { case (u, v, c) => (u, v) -> c }.toMap
     assert(support((0L, 1L)) == 2L) // spoke: rim neighbors 2 and 8
     assert(support((1L, 2L)) == 1L) // rim edge: hub only
     assert(support.values.sum == 3L * 8L, "each of the 8 triangles has 3 edges")
-  }
-
-  test("degreeOriented: triangle counts unchanged, hub fan-out eliminated") {
-    // wheel W8: hub 0 joined to rim 1..8 (deg 8) + rim cycle (deg 3 each).
-    // 8 triangles (0, i, i+1); per-node: hub 8, every rim node 2.
-    val edges = ((1L to 8L).map(i => (0L, i)) ++
-      (1L to 7L).map(i => (i, i + 1L)) :+ (1L, 8L)).toDF("u", "v")
-    val byId = GraphOps.triangleCounts(edges).as[(Long, Long)].collect().toMap
-    val oriented = GraphOps.degreeOriented(edges)
-    val byDeg = GraphOps.triangleCounts(oriented).as[(Long, Long)].collect().toMap
-    assert(byId == ((1L to 8L).map(_ -> 2L) :+ (0L -> 8L)).toMap)
-    assert(byDeg == byId, "per-node counts must be orientation-invariant")
-    // the point of the reorientation: the hub's quadratic fan-out is gone —
-    // every hub edge now points rim→hub (deg 3 < deg 8), out-degree 0
-    assert(oriented.filter($"u" === 0L).isEmpty,
-      "degree orientation must point edges from the lower-degree endpoint")
-    // still a valid orientation: distinct edges, no 2-cycles
-    val es = oriented.as[(Long, Long)].collect()
-    assert(es.length == es.toSet.size && es.map { case (u, v) => (v, u) }.toSet.intersect(es.toSet).isEmpty)
   }
 
   test("triangleEstimate equals brute force on random graphs (property)") {
@@ -238,62 +221,6 @@ class GraphAnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("degreeOriented / transitiveClosure shuffle variants: identical results") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val edges = ((1L to 8L).map(i => (0L, i)) ++
-        (1L to 7L).map(i => (i, i + 1L)) :+ (1L, 8L)).toDF("u", "v")
-      val bc = GraphOps.degreeOriented(edges, broadcastNodes = Some(true))
-        .as[(Long, Long)].collect().toSet
-      val sh = GraphOps.degreeOriented(edges, broadcastNodes = Some(false))
-        .as[(Long, Long)].collect().toSet
-      assert(sh == bc, "orientation must not depend on the join strategy")
-      val tree = Seq((2L, 1L), (3L, 1L), (4L, 2L), (5L, 4L)).toDF("child", "parent")
-      val cbc = GraphOps.transitiveClosure(tree, broadcastEdges = Some(true))
-        .as[(Long, Long)].collect().toSet
-      val csh = GraphOps.transitiveClosure(tree, broadcastEdges = Some(false))
-        .as[(Long, Long)].collect().toSet
-      assert(csh == cbc, "closure must not depend on the join strategy")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("degreeOriented / transitiveClosure defaults route by MEASUREMENT and follow the session conf") {
-    // r15 (VERDICT r14 #3/#4): the last two constant-default broadcasts
-    // now default through the measured route, and the measured route's
-    // budget is the session's own autoBroadcastJoinThreshold.
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
-    val tree = Seq((2L, 1L), (3L, 1L), (4L, 2L)).toDF("child", "parent")
-    // tiny fixtures price under the default 10 MiB budget → broadcast
-    assert(GraphOps.measuredBroadcastNodes(edges), "3 nodes price as broadcast")
-    assert(GraphOps.measuredBroadcastEdges(tree), "3 edges price as broadcast")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // a 16-byte budget prices 3 nodes (48 B) / 3 edges (96 B) past it
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
-      assert(!GraphOps.measuredBroadcastNodes(edges), "route flips with the conf")
-      assert(!GraphOps.measuredBroadcastEdges(tree), "route flips with the conf")
-      // operator-disabled auto-broadcast (-1): measured routes honor it
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(!GraphOps.measuredBroadcastNodes(edges))
-      assert(!GraphOps.measuredBroadcastEdges(tree))
-      // byte-suffixed values parse like Spark parses them
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-      assert(GraphOps.measuredBroadcastNodes(edges))
-      // results are identical whichever way the default resolves
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
-      val measured = GraphOps.degreeOriented(edges).as[(Long, Long)].collect().toSet
-      val closure = GraphOps.transitiveClosure(tree).as[(Long, Long)].collect().toSet
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      assert(measured ==
-        GraphOps.degreeOriented(edges, broadcastNodes = Some(true))
-          .as[(Long, Long)].collect().toSet)
-      assert(closure ==
-        GraphOps.transitiveClosure(tree, broadcastEdges = Some(true))
-          .as[(Long, Long)].collect().toSet)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("spNodeRouteCard (r15) ≡ nodeRouteCard over the symmetrized prefixed edges") {
     // overlapping key values across the two columns: the s/p prefixes
     // must keep them distinct nodes (supplier 3 ≠ part 3)
@@ -303,7 +230,7 @@ class GraphAnalyticsSpec extends SparkSpec {
       concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
       concat(lit("p"), $"l_partkey".cast("string")).as("dst"))
     val sym = base.unionByName(base.select($"dst".as("src"), $"src".as("dst")))
-    val generic = GraphOps.nodeRouteCard(sym, "src", "dst").head()
+    val generic = GraphOps.nodeRouteCard(sym.select($"src".as("u"), $"dst".as("v"))).head()
     val fast = graft.queries.Pipelines.spNodeRouteCard(pairs).head()
     assert(fast.getAs[Long]("n_nodes") == generic.getAs[Long]("n_nodes"))
     assert(fast.getAs[Long]("est_bytes") == generic.getAs[Long]("est_bytes"))
@@ -316,26 +243,35 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("nodeRouteCard: t111 arithmetic, measured route matches both forced variants, tiny threshold flips it") {
     val edges = Seq(
       ("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("a", "c"), ("c", "a")
-    ).toDF("src", "dst")
-    val card = GraphOps.nodeRouteCard(edges, "src", "dst").head()
+    ).toDF("u", "v")
+    def route = GraphOps.nodeRouteCard(edges).head().getAs[String]("route")
+    val card = GraphOps.nodeRouteCard(edges).head()
     assert(card.getAs[Long]("n_nodes") == 3L)
     assert(card.getAs[Long]("est_bytes") == 48L)
     assert(card.getAs[Long]("broadcast_threshold") == 10L * 1024 * 1024)
     assert(card.getAs[String]("route") == "broadcast")
-    assert(GraphOps.measuredBroadcastNodes(edges, "src", "dst"))
-    // past the threshold the measured route flips to the spec-proven
-    // shuffle variant — and the ranks are route-invariant either way
-    assert(!GraphOps.measuredBroadcastNodes(edges, "src", "dst",
-      thresholdBytes = 1L))
-    val bc = GraphOps.pageRankFixedPoint(edges, 2).as[(String, Long)].collect().toMap
-    val measured = GraphOps.pageRankFixedPoint(edges, 2,
-        broadcastNodes = GraphOps.measuredBroadcastNodes(edges, "src", "dst"))
-      .as[(String, Long)].collect().toMap
-    val flipped = GraphOps.pageRankFixedPoint(edges, 2,
-        broadcastNodes = GraphOps.measuredBroadcastNodes(edges, "src", "dst",
-          thresholdBytes = 1L))
-      .as[(String, Long)].collect().toMap
-    assert(measured == bc && flipped == bc)
+    // the budget is the session's autoBroadcastJoinThreshold: past it
+    // the route flips to the spec-proven shuffle variant, and the ranks
+    // are route-invariant either way
+    val prEdges = edges.select($"u".as("src"), $"v".as("dst"))
+    val bc = GraphOps.pageRankFixedPoint(prEdges, 2).as[(String, Long)].collect().toMap
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // a 16-byte budget prices 3 nodes (48 B) past it
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
+      assert(GraphOps.nodeRouteCard(edges).head().getAs[Long]("broadcast_threshold") == 16L)
+      assert(route == "shuffle", "route flips with the conf")
+      val flipped = GraphOps.pageRankFixedPoint(prEdges, 2,
+          broadcastNodes = DedupOps.cardIsBroadcast(GraphOps.nodeRouteCard(edges)))
+        .as[(String, Long)].collect().toMap
+      assert(flipped == bc)
+      // operator-disabled auto-broadcast (-1): the route honors it
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      assert(route == "shuffle")
+      // byte-suffixed values parse like Spark parses them
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+      assert(route == "broadcast")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("pageRank shuffle variant (broadcastNodes=false): shuffled joins, identical ranks") {
@@ -394,31 +330,6 @@ class GraphAnalyticsSpec extends SparkSpec {
     intercept[IllegalArgumentException](GraphOps.pageRankFixedPoint(e, iters = 0))
     intercept[IllegalArgumentException](
       GraphOps.kCoreRounds(Seq((1L, 2L)).toDF("u", "v"), k = 2, rounds = 0))
-  }
-
-  test("materializeEdges=false (landed-scan variant) leaves every result identical") {
-    val prEdges = Seq(
-      ("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("a", "c"), ("c", "a")
-    ).toDF("src", "dst")
-    assert(GraphOps.pageRankFixedPoint(prEdges, 3).as[(String, Long)].collect().toMap ==
-      GraphOps.pageRankFixedPoint(prEdges, 3, materializeEdges = false)
-        .as[(String, Long)].collect().toMap)
-    val uv = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("u", "v")
-    assert(GraphOps.kCoreRounds(uv, k = 2, rounds = 2).collect().map(_.toSeq).toSeq ==
-      GraphOps.kCoreRounds(uv, k = 2, rounds = 2, materializeEdges = false)
-        .collect().map(_.toSeq).toSeq)
-    val sym = uv.unionByName(uv.select(col("v").as("u"), col("u").as("v")))
-    val seeds = Seq(1L).toDF("node")
-    assert(GraphOps.bfsLayers(sym, seeds, 2).collect().map(_.toSeq).toSeq ==
-      GraphOps.bfsLayers(sym, seeds, 2, materializeEdges = false)
-        .collect().map(_.toSeq).toSeq)
-    val tree = Seq((1L, 0L), (2L, 0L), (3L, 1L)).toDF("child", "parent")
-    assert(GraphOps.transitiveClosure(tree).as[(Long, Long)].collect().toSet ==
-      GraphOps.transitiveClosure(tree, materializeEdges = false)
-        .as[(Long, Long)].collect().toSet)
-    assert(GraphOps.edgeTriangleSupport(uv).as[(Long, Long, Long)].collect().toSet ==
-      GraphOps.edgeTriangleSupport(uv, materializeEdges = false)
-        .as[(Long, Long, Long)].collect().toSet)
   }
 
   test("minhashLshCandidates is the unsalted minhashLshPairs candidate front end") {

@@ -42,32 +42,34 @@ class IndexMaintenanceSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 
-  test("compactMeasured: the gate-route card picks broadcast vs shuffle by measurement, identical rows either way") {
+  test("gateRouteCard: a small backlog prices broadcast, one past the 100k-row cap prices shuffle; compact() keeps the same rows on either route") {
     val (_, grownBands, _) = graft.streaming.StreamOps.growNearDupIndex(spark, dir)
     val tomb = grownBands.select(col("doc_id")).distinct()
       .filter(col("doc_id") % 7 === 3)
-    val expected = grownBands.filter(!(col("doc_id") % 7 === 3)).count()
-    // defaults: a tiny backlog prices as broadcast
+    // the grown index's tiny backlog prices as broadcast
     val card = IndexMaintenance.gateRouteCard(grownBands, tomb, "doc_id").head()
     assert(card.getAs[String]("route") == "broadcast")
     assert(card.getAs[Long]("n_backlog") <= card.getAs[Long]("broadcast_cap"))
-    // forced thresholds: the same backlog prices as shuffle, and the
-    // wired form emits the identical live set through the shuffled route
-    val forced = IndexMaintenance.gateRouteCard(grownBands, tomb, "doc_id",
-      maxBroadcastRows = 1L, indexFrac = grownBands.count() * 2).head()
-    assert(forced.getAs[String]("route") == "shuffle",
-      s"cap ${forced.getAs[Long]("broadcast_cap")} must undercut the backlog")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val viaShuffle = IndexMaintenance.compactMeasured(grownBands, tomb, "doc_id",
-        maxBroadcastRows = 1L, indexFrac = grownBands.count() * 2)
-      assert(!viaShuffle.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"))
-      assert(viaShuffle.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    assert(IndexMaintenance.compactMeasured(grownBands, tomb, "doc_id")
-      .count() == expected)
+    // 200,000 index rows put the cap at max(100,000, 200,000 div 16) =
+    // 100,000: a backlog of exactly the cap broadcasts, one more shuffles
+    val index = spark.range(200000L).select(col("id").as("doc_id"))
+    def ids(n: Long) = spark.range(n).select(col("id").as("doc_id"))
+    val atCap = IndexMaintenance.gateRouteCard(index, ids(100000L), "doc_id").head()
+    assert(atCap.getAs[Long]("broadcast_cap") == 100000L)
+    assert(atCap.getAs[String]("route") == "broadcast")
+    val backlog = ids(100001L)
+    val over = IndexMaintenance.gateRouteCard(index, backlog, "doc_id").head()
+    assert(over.getAs[Long]("n_index_rows") == 200000L)
+    assert(over.getAs[Long]("n_backlog") == 100001L)
+    assert(over.getAs[String]("route") == "shuffle",
+      s"cap ${over.getAs[Long]("broadcast_cap")} must undercut the backlog")
+    // the route changes how compact() joins, never which rows survive
+    val viaBroadcast = IndexMaintenance.compact(index, backlog, "doc_id")
+    val viaShuffle = IndexMaintenance.compact(index, backlog, "doc_id",
+      broadcastTombstones = false)
+    assert(viaShuffle.count() == 99999L)
+    assert(viaShuffle.exceptAll(viaBroadcast).isEmpty &&
+      viaBroadcast.exceptAll(viaShuffle).isEmpty)
   }
 
   test("writeCompacted lands one file per bucket; the gate join never shuffles the index side") {

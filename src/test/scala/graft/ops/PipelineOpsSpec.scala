@@ -95,11 +95,12 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("transitiveClosure: all ancestors on a known tree") {
     // 0 ← 1,2 ; 1 ← 3,4 : node 3's ancestors are {1, 0}
-    val edges = Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L))
-      .toDF("child", "parent")
-    val closure = GraphOps.transitiveClosure(edges)
+    val tree = Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L))
+    val want = Set((1L, 0L), (2L, 0L), (3L, 1L), (3L, 0L), (4L, 1L), (4L, 0L))
+    assert(graft.ReferenceForms.transitiveClosure(tree) == want)
+    val closure = GraphOps.transitiveClosureDoubling(tree.toDF("child", "parent"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(closure == Set((1L, 0L), (2L, 0L), (3L, 1L), (3L, 0L), (4L, 1L), (4L, 0L)))
+    assert(closure == want)
   }
 
   test("transitiveClosureDoubling equals the stepping closure (tree + deep chain + DAG)") {
@@ -111,8 +112,7 @@ class PipelineOpsSpec extends SparkSpec {
       Seq((1L, 0L), (2L, 0L), (3L, 1L), (3L, 2L), (4L, 3L)))
     for (fx <- fixtures) {
       val edges = fx.toDF("child", "parent")
-      val step = GraphOps.transitiveClosure(edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val step = graft.ReferenceForms.transitiveClosure(fx)
       val dbl = GraphOps.transitiveClosureDoubling(edges)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(dbl.length == dbl.toSet.size, "doubling must not emit duplicate pairs")
@@ -134,8 +134,7 @@ class PipelineOpsSpec extends SparkSpec {
     } yield edges.distinct
     for (fx <- Gen.listOfN(8, dagGen).sample.get if fx.nonEmpty) {
       val edges = fx.toDF("child", "parent")
-      val step = GraphOps.transitiveClosure(edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val step = graft.ReferenceForms.transitiveClosure(fx)
       val dbl = GraphOps.transitiveClosureDoubling(edges)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(dbl.length == dbl.toSet.size, s"duplicate pairs on $fx")

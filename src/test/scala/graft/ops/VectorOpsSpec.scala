@@ -131,7 +131,8 @@ class VectorOpsSpec extends SparkSpec {
 
   test("lshNearDupPairs: recall ≥ 0.9 vs exact all-pairs at the registered params") {
     val emb = spark.read.parquet(s"$Sf0_01/embeddings.parquet")
-    val exact = VectorOps.nearDupPairs(emb, "vec_id", "embedding", 0.45)
+    val exact = ReferenceForms.scoredPairs(emb, "vec_id", "embedding")
+      .filter(col("cos") >= 0.45)
       .select("id_x", "id_y")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = VectorOps.lshNearDupPairs(emb, "vec_id", "embedding", 0.45, 16, 4)
@@ -144,10 +145,11 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("lshTopSimilarPairs: top-20 recall ≥ 0.95 vs the exact quadratic form (t9's contract)") {
-    // the registered t9 parameters; topSimilarPairs stays the correctness
-    // baseline, lshTopSimilarPairs is the registered 100 TB shape
+    // the registered t9 parameters; the exact scored self-join is the
+    // correctness baseline, lshTopSimilarPairs the registered 100 TB shape
     val emb = spark.read.parquet(s"$Sf0_01/embeddings.parquet")
-    val exact = VectorOps.topSimilarPairs(emb, "vec_id", "embedding", 20)
+    val exact = ReferenceForms.scoredPairs(emb, "vec_id", "embedding")
+      .orderBy(col("cos").desc, col("id_x"), col("id_y")).limit(20)
       .select("id_x", "id_y")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = VectorOps.lshTopSimilarPairs(emb, "vec_id", "embedding", 20, 16, 4)
